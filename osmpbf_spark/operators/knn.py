@@ -16,8 +16,7 @@ LSH-bucketed variant (random-hyperplane signatures) as the scale path.
 
 from __future__ import annotations
 
-import os
-import time as _time
+import math
 
 import pandas as pd
 
@@ -33,6 +32,22 @@ from ..functions.grid import (
 )
 from ..session import local_relation
 
+# Round-shape rule (grid_knn). Every broadcast build is capped at
+# _BCAST_ROWS rows: candidate-cell rows are 4 longs (~32 B + relation
+# overhead), so 4M rows ≈ 150-250 MB built — under the 8 GB/512M-row
+# broadcast caps and far cheaper than shuffling the point side.
+_BCAST_ROWS = 4_000_000
+# the reversed probe pays for its point-side fan-out only once the
+# candidate-cell volume (open queries × offsets) is at least this big,
+# and only while the fan-out itself stays at most _REV_MAX_OFFS×
+_REV_MIN_ROWS = 500_000
+_REV_MAX_OFFS = 35
+# disks double up to _MAX_DISK; open queries left after it take the
+# brute-force backstop. A tail of open queries whose candidate cells at
+# the next-but-one disk stay under _TAIL_ROWS jumps straight there.
+_MAX_DISK = 64
+_TAIL_ROWS = 500_000
+
 
 def _with_xy(df: DataFrame, cell_col: str) -> DataFrame:
     from ..functions.grid import cell_xy
@@ -40,35 +55,84 @@ def _with_xy(df: DataFrame, cell_col: str) -> DataFrame:
     return df.withColumn("_x", x).withColumn("_y", y)
 
 
+def _start_disk(n: int, cells: int, k: int) -> int:
+    """First disk radius, from ``n`` points in ``cells`` occupied cells.
+
+    Picks d so the EXPECTED in-guard candidate count covers k with 2×
+    safety: the guard circle's area in cell units is π·d²/2 for the 2:1
+    cells, so d = ceil(sqrt(4k/(πλ))) with λ the mean occupancy of an
+    occupied cell, capped to [1, 8]. At bench density a fixed disk 1
+    left 45% of a 100k-query join open and bought a full extra round.
+    The schedule never changes the result, only which rounds run."""
+    if not n:
+        return 1
+    lam = n / max(cells, 1)
+    return max(1, min(8, _MAX_DISK,
+                      math.ceil(math.sqrt(4.0 * k / (math.pi * lam)))))
+
+
+def _shifted_cells(df: DataFrame, offs: DataFrame, res: int, n: int,
+                   keep: list) -> DataFrame:
+    """``keep`` columns of ``df`` (which carries _x/_y) once per offset,
+    with the offset cell as ``jcell``. y offsets outside [0, n) are
+    dropped (no tiles beyond the poles); clamping instead would map
+    several dy values to one cell and duplicate candidate rows, so one
+    point would take several top-k ranks. x wraps (antimeridian)."""
+    y = F.col("_y") + F.col("dy")
+    return (df.join(offs).filter((y >= 0) & (y <= n - 1))
+            .select(*keep, (F.lit(res).cast("long") * F.lit(RES_SHIFT)
+                            + F.pmod(F.col("_x") + F.col("dx"), F.lit(n))
+                            * F.lit(Y_SHIFT) + y).alias("jcell")))
+
+
 def grid_knn(points: DataFrame, queries: DataFrame, k: int, *,
              res: int = GRID_RES_FINE, cell_col: str = "cell",
              id_col: str = "id", query_id_col: str = "query_id",
-             max_disk: int = 64, start_disk: int | str = "auto",
-             broadcast_candidates: bool = True,
-             _rev_min_rows: int = 500_000) -> DataFrame:
+             broadcast_candidates: bool | None = None) -> DataFrame:
     """k nearest ``points`` for each query point.
 
     ``points``: (id, lat_nano, lon_nano, cell); ``queries``:
     (query_id, lat_nano, lon_nano, cell), cells at the same ``res``.
+    ``query_id`` values must be unique and non-NULL (ValueError
+    otherwise). ``broadcast_candidates`` is accepted for old callers
+    and ignored: the join shape follows measured sizes.
 
     Returns (query_id, id, dist2, rn) with rn = 1..k per query, ordered by
     squared planar nanodegree distance (double; ties broken by id — the
-    output row set is deterministic). ``query_id`` values must be UNIQUE:
-    duplicate ids have always merged their candidates into one ranked
-    window (one top-k for the pair), and since r6 the round loop also
-    counts open queries arithmetically per distinct passing id.
+    output row set is deterministic).
 
-    Driver loop doubles the Chebyshev disk radius; a query finishes when it
-    has ≥ k candidates whose k-th distance is guaranteed correct: the
-    circle of radius sqrt(dist2_k) must lie inside the searched square
-    (dist_k ≤ disk * cell_height). Unsatisfied queries at max_disk fall
-    back to a brute-force cross join (correctness backstop; hit only by
-    pathological density gaps).
+    One start-up action measures both inputs: point count and approximate
+    occupied-cell count (the first disk, ``_start_disk``), query count and
+    distinct query ids. A driver loop then doubles the Chebyshev disk
+    radius; a query finishes when it has ≥ k candidates whose k-th
+    distance is guaranteed correct: the circle of radius sqrt(dist2_k)
+    must lie inside the searched square (dist_k < disk * cell_height).
+    Each round joins the open queries to the points in their neighbor
+    cells in one of three shapes, chosen from the open-query count and
+    the offset count alone:
+
+    * reversed — open × offsets ≥ ``_REV_MIN_ROWS``, offsets ≤
+      ``_REV_MAX_OFFS`` and open ≤ ``_BCAST_ROWS``: broadcast the open
+      queries keyed by their own cell and explode the points by the
+      offsets;
+    * broadcast — open × offsets ≤ ``_BCAST_ROWS``: broadcast the open
+      queries exploded by the offsets, the points never shuffle;
+    * shuffle — otherwise: shuffle-join the exploded queries with the
+      points on cell (the only shape past the broadcast cap).
+
+    Open queries left at ``_MAX_DISK`` fall back to a brute-force cross
+    join (correctness backstop; hit only by pathological density gaps).
+    The point side is scanned once by the start-up action and once per
+    round, and never persisted here: callers whose point lineage is
+    expensive must persist it. Each action runs under a Spark job
+    description such as ``grid_knn r2 disk=4 bcast open=45305``; the
+    caller's description is restored on return.
     """
     n = 1 << res
     cell_h = NANO_360 // 2 // n        # lat (y) cell height in nanodegrees
     q = _with_xy(queries, cell_col).select(
-        F.col(query_id_col), "lat_nano", "lon_nano", "_x", "_y")
+        F.col(query_id_col), "lat_nano", "lon_nano", "_x", "_y",
+        F.col(cell_col).alias("q_cell"))
     pts = points.select(
         F.col(id_col), F.col("lat_nano").alias("p_lat"),
         F.col("lon_nano").alias("p_lon"), F.col(cell_col).alias("p_cell"))
@@ -79,18 +143,13 @@ def grid_knn(points: DataFrame, queries: DataFrame, k: int, *,
     _dlon = (F.col("lon_nano") - F.col("p_lon")).cast("double")
     dist2 = _dlat * _dlat + _dlon * _dlon
     win = Window.partitionBy(query_id_col).orderBy("dist2", id_col)
-
-    _dbg = bool(os.environ.get("OSMPBF_KNN_DEBUG"))
-    _t0 = _time.time()
-
-    def _log(msg):
-        if _dbg:
-            print(f"[grid_knn +{_time.time() - _t0:6.2f}s] {msg}",
-                  flush=True)
+    q_cols = [query_id_col, "lat_nano", "lon_nano"]
 
     spark = points.sparkSession
+    sc = spark.sparkContext
+    caller_desc = sc.getLocalProperty("spark.job.description")
 
-    def _ckpt(df, *, eager=True):
+    def _ckpt(df, *, eager):
         """Per-round materialization. localCheckpoint stores blocks in
         executor storage ONLY — losing an executor after the source
         lineage is truncated fails the job. On a real cluster set
@@ -98,278 +157,128 @@ def grid_knn(points: DataFrame, queries: DataFrame, k: int, *,
         (HDFS/object store) instead; local mode keeps the cheap path.
 
         ``eager=False`` (local path only) defers materialization to the
-        FIRST action over the frame — the round loop's remaining-count
-        job then materializes the blocks as a side effect, one job per
-        round instead of two (r6). A reliable ``checkpoint()`` re-runs
-        the lineage after the triggering job, so the cluster path stays
-        eager either way."""
-        if spark.sparkContext.getCheckpointDir() is not None:
-            df = df.checkpoint(eager=True)
-        else:
-            df = df.localCheckpoint(eager=eager)
-        return df
+        FIRST action over the frame — the round's passed-count job then
+        materializes the blocks as a side effect, one job per round
+        instead of two. A reliable ``checkpoint()`` re-runs the lineage
+        after the triggering job, so the cluster path stays eager."""
+        if sc.getCheckpointDir() is not None:
+            return df.checkpoint(eager=True)
+        return df.localCheckpoint(eager=eager)
 
-    pts_pinned = False
-    _pts_persisted = []     # every persisted point frame, for cleanup
-
-    def _pin_pts():
-        # kNN-JOIN regime, shuffle rounds only: the point side
-        # participates in a shuffle join EVERY such round — pre-partition
-        # it by cell once (spill-safe MEMORY_AND_DISK) so rounds reuse
-        # the partitioning instead of re-shuffling the big side;
-        # released before returning. Deferred until a round actually
-        # takes the shuffle shape (r6): when every round is
-        # broadcast-sized — the common ≤ ~200k-open-queries case — the
-        # 2M-row repartition+persist+unpersist cycle never happens.
-        nonlocal pts, pts_pinned
-        if not pts_pinned:
-            n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            pts = pts.repartition(n_shuffle, "p_cell").persist()
-            _pts_persisted.append(pts)
-            _log("pts repartition declared")
-            pts_pinned = True
-
-    def _cache_pts():
-        # reversed rounds with a big open set (the cases where the
-        # shuffle shape would have pinned): persist WITHOUT the
-        # repartition — the rev probe never shuffles the point side,
-        # but multi-round stragglers must not re-run an expensive
-        # un-cached point lineage once per round (r6 review)
-        nonlocal pts
-        if not _pts_persisted:
-            pts = pts.persist()
-            _pts_persisted.append(pts)
-            _log("pts cache declared")
-    if start_disk == "auto":
-        # r6: pick the first disk so the EXPECTED in-guard candidate
-        # count already covers k (with 2× safety) instead of always
-        # starting at 1 — at bench density/res, disk=1 left 45% of a
-        # 100k-query join unresolved and bought a full extra doubling
-        # round. The estimate is one map-side aggregate over the point
-        # side (mean occupancy λ of OCCUPIED cells via a deterministic
-        # HLL count-distinct; guard circle area in cell units is
-        # π·d²/2 for the 2:1 cells): d = ceil(sqrt(4k/(πλ))), capped
-        # to [1, 8] ∩ [1, max_disk]. The schedule NEVER affects the
-        # result (the per-round guard guarantee is unconditional), only
-        # which rounds run; the broadcast regime keeps start_disk=1 —
-        # its query sets are tiny and the probe would cost more than a
-        # round. Callers can still pass an explicit int.
-        if broadcast_candidates:
-            start_disk = 1
-    remaining = q
-    remaining_n = None                 # unknown until first checkpoint
-    if not broadcast_candidates:
-        # one cheap narrow count of the query side so the FIRST round
-        # can already flip to the broadcast shape when it is small
-        # enough (join strategy never changes the result — ranking is
-        # deterministic on (dist2, id)); when the λ probe also runs,
-        # the two aggregates ride ONE action (crossJoin of 1-row aggs —
-        # independent subtrees, one job instead of two, r6)
-        q_cnt = remaining.agg(F.count("*").alias("qn"))
-        if start_disk == "auto":
-            import math
-            row = (pts.agg(F.count("*").alias("n"),
-                           F.approx_count_distinct("p_cell").alias("c"))
-                   .crossJoin(q_cnt)).first()
-            lam = (row["n"] / max(row["c"], 1)) if row["n"] else 0.0
-            start_disk = 1 if lam <= 0 else max(
-                1, min(8, max_disk,
-                       math.ceil(math.sqrt(4.0 * k / (math.pi * lam)))))
-            _log(f"auto start_disk={start_disk} (λ={lam:.2f})")
-        else:
-            row = q_cnt.first()
-        remaining_n = row["qn"]
-        _log(f"query side: {remaining_n} queries")
-    done_parts = []
-    disk = start_disk
-    while disk <= max_disk:
-        # x-pruned disk (r6, exact): cells are 2:1 — a lon cell is
-        # 2·cell_h wide — so a point in a cell at |dx| columns has
-        # |plon−qlon| > (|dx|−1)·2·cell_h, and the strict
-        # `dist2 < (disk·cell_h)²` guard already rejects everything at
-        # |dx| ≥ disk/2 + 1. Conversely the guard circle reaches at
-        # most ceil(disk/2) columns from the query's cell (radius
-        # disk·cell_h = disk/2 widths, plus the query's in-cell
-        # offset), so the searched region still contains it and the
-        # completeness guarantee is untouched. Dropping the dead
-        # columns cuts the candidate join fan-out ~40% at even disks.
-        mdx = (disk // 2) + (disk % 2)
-        n_offs = (2 * mdx + 1) * (2 * disk + 1)
-        offs = F.broadcast(neighbor_offsets(spark, disk)
-                           .filter(F.abs(F.col("dx")) <= mdx))
-        # with a small query set (the common case) broadcast queries ×
-        # offsets so the (big) point side never shuffles; for a kNN JOIN
-        # with a large query side (EDBT-2012 regime) pass
-        # broadcast_candidates=False → co-partitioned shuffle join on
-        # cell. Straggler rounds shrink fast, so once the remaining set ×
-        # disk area is broadcast-sized, flip to the broadcast shape even
-        # in the join regime (join strategy doesn't change the result —
-        # ranking is deterministic on (dist2, id)).
-        area = (2 * disk + 1) ** 2
-        # threshold: candidate-cell rows are 4 longs (~32 B + relation
-        # overhead), so 4M rows ≈ 150-250 MB built — comfortably under
-        # the 8 GB/512M-row broadcast caps, and far cheaper than
-        # pinning + shuffling the multi-GB point side (r6: the bench's
-        # 100k-query × 25-offset round sat just above the old 2M cut)
-        small_round = (remaining_n is not None
-                       and remaining_n * area <= 4_000_000)
-        # reversed probe (r6): when the OPEN QUERY SET × offsets is large,
-        # the single-threaded driver build of the cand_cells broadcast
-        # dominates the round — so broadcast the queries keyed by their
-        # OWN cell (n_offs× smaller build) and explode the POINT side by
-        # the offsets instead (probe fan-out is map-side codegen across
-        # all cores, pruned by the guard before the window's partial
-        # top-k; nothing extra shuffles). Pair-set identity relies on the
-        # offset set being symmetric under negation — the full Chebyshev
-        # square and the |dx| ≤ mdx x-pruning both are. The n_offs cap
-        # bounds the point-side fan-out (straggler rounds at big disks
-        # keep the cand_cells shape); the 4M-row cap is the same
-        # broadcast-memory class as small_round. Measured at the bench
-        # shape: round-1 1.82 → 1.22 s median (identical checksums).
-        rev_round = (remaining_n is not None
-                     and remaining_n * n_offs >= _rev_min_rows
-                     and remaining_n <= 4_000_000
-                     and n_offs <= 35)
-        if rev_round:
-            from ..functions.grid import cell_xy
-            if not (broadcast_candidates or small_round):
-                _cache_pts()
-            qk = remaining.select(
-                query_id_col, "lat_nano", "lon_nano",
-                (F.lit(res).cast("long") * F.lit(RES_SHIFT)
-                 + F.col("_x") * F.lit(Y_SHIFT)
-                 + F.col("_y")).alias("qcell"))
-            _, px, py = cell_xy("p_cell")
-            pe = (pts.withColumn("_px", px).withColumn("_py", py)
-                  .join(offs)
-                  .filter((F.col("_py") + F.col("dy") >= 0)
-                          & (F.col("_py") + F.col("dy") <= n - 1))
-                  .select(id_col, "p_lat", "p_lon",
-                          (F.lit(res).cast("long") * F.lit(RES_SHIFT)
-                           + F.pmod(F.col("_px") + F.col("dx"), F.lit(n))
-                           * F.lit(Y_SHIFT)
-                           + (F.col("_py") + F.col("dy"))).alias("pcell2")))
-            joined = pe.join(F.broadcast(qk), pe["pcell2"] == qk["qcell"])
-        else:
-            # y offsets outside [0, n) are dropped (no tiles beyond the
-            # poles); clamping instead would map several dy values to the
-            # same cell and duplicate candidate rows, occupying multiple
-            # top-k ranks with one point. x wraps (antimeridian).
-            # NOTE: _x/_y deliberately NOT selected — they'd ride the big
-            # query×offsets shuffle for nothing (remaining keeps them for
-            # the next round's recompute)
-            cand_cells = (remaining.join(offs)
-                          .filter((F.col("_y") + F.col("dy") >= 0)
-                                  & (F.col("_y") + F.col("dy") <= n - 1))
-                          .select(query_id_col, "lat_nano", "lon_nano",
-                                  (F.lit(res).cast("long")
-                                   * F.lit(RES_SHIFT)
-                                   + F.pmod(F.col("_x") + F.col("dx"),
-                                            F.lit(n))
-                                   * F.lit(Y_SHIFT)
-                                   + (F.col("_y")
-                                      + F.col("dy"))).alias("jcell")))
-            if not (broadcast_candidates or small_round):
-                _pin_pts()
-            left = (F.broadcast(cand_cells)
-                    if broadcast_candidates or small_round else cand_cells)
-            joined = left.join(pts, cand_cells["jcell"] == pts["p_cell"])
-        # guard pre-filter BEFORE the window: a candidate at dist ≥
-        # disk*cell_h can never be in a PASSING query's top-k (the pass
-        # condition is dk < guard), and failing queries retry at the next
-        # disk anyway — so dropping it map-side is result-identical while
-        # cutting ~⅔ of the window shuffle+sort volume (circle/square
-        # area ratio): the scalable-path lever for the kNN-join regime.
-        #
-        # guarantee: k-th distance inside searched square of half-width
-        # disk*cell_h (cells are 2:1 — lon cells are wider, so cell_h is
-        # the binding, conservative bound). The strict `dist2 < guard`
-        # pre-filter already enforces the radius (a point exactly AT the
-        # radius outside the searched square could still win the
-        # (dist2, id) tiebreak), so the pass condition reduces to having
-        # k in-guard candidates — n_found, an unordered count over the
-        # SAME window partitioning as the rank (no extra shuffle; r6:
-        # the former separate groupBy-stats + semi/anti-join +
-        # per-round remaining checkpoint cost two extra jobs per round).
-        guard = F.lit(float(disk * cell_h)) ** 2
-        w_cnt = Window.partitionBy(query_id_col)
-        # eager=False when this round's open-query count is known: the
-        # n_passed aggregate below then materializes the blocks inside
-        # its own (normal) job — one job per round instead of two. The
-        # count stays a PLAIN aggregate, never a join: executing the
-        # un-materialized round inside a BroadcastExchange build thread
-        # would race spark.sql.broadcastTimeout at scale (guide §7.4 —
-        # compute the build side first), so the anti-join below only
-        # ever reads materialized blocks.
-        flagged = _ckpt(joined
-                        .withColumn("dist2", dist2)
-                        .filter(F.col("dist2") < guard)
-                        .withColumn("rn", F.row_number().over(win))
-                        .filter(F.col("rn") <= k)
-                        .withColumn("n_found", F.count("*").over(w_cnt))
-                        .select(query_id_col, F.col(id_col), "dist2",
-                                "rn", "n_found"),
-                        eager=remaining_n is None)
-        _log(f"disk={disk}: round checkpoint declared")
-        done_parts.append(flagged.filter(F.col("n_found") >= k)
-                          .select(query_id_col, F.col(id_col), "dist2",
-                                  "rn"))
-        # a passing query has n_found == k kept rows (rn ≤ k caps the
-        # count), so its rn = 1 row is a unique marker — counting those
-        # equals counting passed queries, and the anti-join build below
-        # shrinks k× for free (no distinct/shuffle, r6)
-        passed = flagged.filter((F.col("n_found") >= k)
-                                & (F.col("rn") == 1))
-        if remaining_n is not None:
-            # open-set size entering the round is known → one aggregate
-            # job; every passed query was open (candidates derive from
-            # `remaining`), so the subtraction is exact
-            remaining_n = remaining_n - passed.count()
-        else:
-            # broadcast regime, first round: total query count unknown —
-            # the anti-join count (over the eagerly materialized blocks)
-            # establishes it
-            remaining_n = remaining.join(
-                passed.select(query_id_col),
-                query_id_col, "left_anti").count()
-        _log(f"disk={disk}: remaining={remaining_n}")
-        if remaining_n == 0:
-            break
-        # the open set for the next round: one cheap anti-join onto the
-        # materialized round output, checkpointed (eagerly — the next
-        # round may broadcast a frame derived from it) only when a next
-        # round actually happens
-        remaining = remaining.join(passed.select(query_id_col),
-                                   query_id_col, "left_anti")
-        remaining = _ckpt(remaining)
-        disk *= 2
-        # tail-round collapse (r6, schedule only — the per-round guard
-        # keeps results exact at ANY disk sequence): when the open
-        # query set is tiny, one straggler round at a much larger disk
-        # is cheaper than 2-3 more doubling rounds of fixed job
-        # overhead; jump while the candidate-cell volume stays small
-        while (disk < max_disk
-               and remaining_n * (4 * disk + 1) ** 2 <= 500_000):
+    try:
+        # ONE plain action over two independent 1-row aggregates (a
+        # union, never a join: a join would run an aggregate inside a
+        # BroadcastExchange build thread and race broadcastTimeout)
+        sc.setJobDescription("grid_knn probe")
+        stats = {r["side"]: r for r in pts.select(
+            F.lit("p").alias("side"), F.count("*").alias("rows"),
+            F.approx_count_distinct("p_cell").alias("keys"))
+            .unionByName(q.select(
+                F.lit("q").alias("side"), F.count("*").alias("rows"),
+                F.count_distinct(query_id_col).alias("keys")))
+            .collect()}
+        remaining_n = stats["q"]["rows"]
+        if stats["q"]["keys"] != remaining_n:
+            raise ValueError(
+                f"grid_knn: {query_id_col!r} must be unique and non-NULL "
+                f"({remaining_n} queries, {stats['q']['keys']} distinct ids)")
+        disk = _start_disk(stats["p"]["rows"], stats["p"]["keys"], k)
+        remaining = q
+        done_parts = []
+        rnd = 0
+        while disk <= _MAX_DISK:
+            rnd += 1
+            # x-pruned disk (exact): cells are 2:1 — a lon cell is
+            # 2·cell_h wide — so a point in a cell at |dx| columns has
+            # |plon−qlon| > (|dx|−1)·2·cell_h, and the strict
+            # `dist2 < (disk·cell_h)²` guard already rejects everything
+            # at |dx| ≥ disk/2 + 1. Conversely the guard circle reaches
+            # at most ceil(disk/2) columns from the query's cell, so the
+            # searched region still contains it and the completeness
+            # guarantee is untouched. Cuts the fan-out ~40% at even disks.
+            mdx = (disk // 2) + (disk % 2)
+            n_offs = (2 * mdx + 1) * (2 * disk + 1)
+            offs = F.broadcast(neighbor_offsets(spark, disk)
+                               .filter(F.abs(F.col("dx")) <= mdx))
+            # join strategy never changes the result — ranking is
+            # deterministic on (dist2, id). The reversed probe keeps the
+            # driver-built broadcast n_offs× smaller (the point fan-out
+            # is map-side codegen on every core); pair-set identity needs
+            # an offset set symmetric under negation, which the full
+            # square and the |dx| ≤ mdx pruning both are.
+            if (remaining_n * n_offs >= _REV_MIN_ROWS
+                    and n_offs <= _REV_MAX_OFFS
+                    and remaining_n <= _BCAST_ROWS):
+                shape = "rev"
+                left = _shifted_cells(_with_xy(pts, "p_cell"), offs, res, n,
+                                      [id_col, "p_lat", "p_lon"])
+                right = F.broadcast(remaining.select(
+                    *q_cols, F.col("q_cell").alias("jcell")))
+            else:
+                shape = ("bcast" if remaining_n * n_offs <= _BCAST_ROWS
+                         else "shuffle")
+                cand = _shifted_cells(remaining, offs, res, n, q_cols)
+                left = F.broadcast(cand) if shape == "bcast" else cand
+                right = pts.withColumnRenamed("p_cell", "jcell")
+            sc.setJobDescription(
+                f"grid_knn r{rnd} disk={disk} {shape} open={remaining_n}")
+            # guard pre-filter BEFORE the window: a candidate at dist ≥
+            # disk*cell_h can never be in a PASSING query's top-k, and
+            # failing queries retry at the next disk anyway — dropping it
+            # map-side is result-identical and cuts ~⅔ of the window
+            # shuffle+sort volume (circle/square area ratio). Cells are
+            # 2:1, so cell_h is the binding, conservative bound; with
+            # the strict guard the pass condition reduces to k in-guard
+            # candidates — n_found, an unordered count over the SAME
+            # window partitioning as the rank (no extra shuffle).
+            guard = F.lit(float(disk * cell_h)) ** 2
+            flagged = _ckpt(left.join(right, "jcell")
+                            .withColumn("dist2", dist2)
+                            .filter(F.col("dist2") < guard)
+                            .withColumn("rn", F.row_number().over(win))
+                            .filter(F.col("rn") <= k)
+                            .withColumn("n_found", F.count("*").over(
+                                Window.partitionBy(query_id_col)))
+                            .select(query_id_col, F.col(id_col), "dist2",
+                                    "rn", "n_found"),
+                            eager=False)
+            done_parts.append(flagged.filter(F.col("n_found") >= k)
+                              .select(query_id_col, F.col(id_col), "dist2",
+                                      "rn"))
+            # a passing query has exactly k kept rows, so its rn = 1 row
+            # is a unique marker. The count is a PLAIN aggregate (it
+            # also materializes the round's blocks); every passed query
+            # was open, so the subtraction is exact.
+            passed = flagged.filter((F.col("n_found") >= k)
+                                    & (F.col("rn") == 1))
+            remaining_n -= passed.count()
+            if remaining_n == 0:
+                break
+            # the next round may broadcast a frame derived from the open
+            # set, so it is materialized eagerly here
+            remaining = _ckpt(remaining.join(passed.select(query_id_col),
+                                             query_id_col, "left_anti"),
+                              eager=True)
             disk *= 2
-    else:
-        # brute-force backstop for the stragglers
-        brute = (remaining.join(pts)
-                 .withColumn("dist2", dist2)
-                 .withColumn("rn", F.row_number().over(win))
-                 .filter(F.col("rn") <= k)
-                 .select(query_id_col, F.col(id_col), "dist2", "rn"))
-        if _pts_persisted:
-            brute = _ckpt(brute)
-        done_parts.append(brute)
-
+            # tail-round collapse (schedule only): one straggler round
+            # at a much larger disk is cheaper than 2-3 more doubling
+            # rounds of fixed job overhead
+            while (disk < _MAX_DISK
+                   and remaining_n * (4 * disk + 1) ** 2 <= _TAIL_ROWS):
+                disk *= 2
+        else:
+            # brute-force backstop for the stragglers
+            done_parts.append(remaining.join(pts)
+                              .withColumn("dist2", dist2)
+                              .withColumn("rn", F.row_number().over(win))
+                              .filter(F.col("rn") <= k)
+                              .select(query_id_col, F.col(id_col), "dist2",
+                                      "rn"))
+    finally:
+        sc.setJobDescription(caller_desc)
     out = done_parts[0]
     for p in done_parts[1:]:
         out = out.unionByName(p)
-    # safe: every round output (incl. the brute backstop) was
-    # materialized above (eagerly, or by its round's count job), so
-    # nothing recomputes through the released point frames
-    for f in _pts_persisted:
-        f.unpersist()
     return out
 
 

@@ -63,14 +63,20 @@ def local_relation(spark: SparkSession, rows, ddl: str):
     an extra Spark job on EVERY action referencing the relation —
     measured ~0.5 s per grid_knn round at the bench shape (r6). Routing
     the same rows through pyarrow with the exact Arrow types derived
-    from the DDL yields a LocalRelation instead; None → NULL and the
-    resulting schema is asserted identical to the DDL. Only use for
-    bounded metadata-sized relations (offsets, centroids, chunk ranges,
-    mix rates): a LocalRelation embeds its rows in the plan."""
+    from the DDL yields a LocalRelation instead; None → NULL, and a
+    resulting schema that differs from the DDL raises ValueError, as do
+    duplicate DDL field names. Only use for bounded metadata-sized
+    relations (offsets, centroids, chunk ranges, mix rates): a
+    LocalRelation embeds its rows in the plan."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import StructType
     schema = StructType.fromDDL(ddl)
+    names = [f.name.lower() for f in schema.fields]
+    if len(set(names)) != len(names):
+        # pa.table({...}) would silently keep only the last of them;
+        # Spark resolves names case-insensitively by default
+        raise ValueError(f"duplicate field names in DDL: {ddl!r}")
     rows = list(rows)
     # strict: ragged rows raise here, and a row wider/narrower than the
     # DDL raises below — createDataFrame(list, ddl) raised on both, and
@@ -85,7 +91,9 @@ def local_relation(spark: SparkSession, rows, ddl: str):
         f.name: pa.array(list(c), type=to_arrow_type(f.dataType))
         for f, c in zip(schema.fields, cols)})
     df = spark.createDataFrame(tbl)
-    assert df.schema == schema, (df.schema, schema)
+    if df.schema != schema:
+        raise ValueError(f"planned schema {df.schema} differs from DDL "
+                         f"{schema}: {ddl!r}")
     return df
 
 

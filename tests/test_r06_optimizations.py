@@ -6,6 +6,8 @@ formulations (or an independent oracle) value-for-value, including the
 edge cases that motivated each guard.
 """
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -236,68 +238,159 @@ def test_scan_messages_vec_matches_scan_fields():
                           varint_fields=(), len_fields=(2,))
 
 
-def test_grid_knn_auto_start_disk_matches_explicit(spark):
-    """start_disk is a SCHEDULE, never a result: auto and explicit
-    schedules must return identical rows in both regimes."""
-    from osmpbf_spark.operators.knn import grid_knn
+def _knn_coords(n, a, b, offset=0):
+    """Deterministic scattered (id, lat_nano, lon_nano) arrays in a
+    2° box at 44°N 7°E."""
+    ids = np.arange(n, dtype=np.int64)
+    return (ids + offset, (ids * a) % (2 * B) + 44 * B,
+            (ids * b) % (2 * B) + 7 * B)
+
+
+def _knn_frame(spark, cols, id_name, res):
+    ids, lat, lon = cols
+    return with_grid_cells(spark.createDataFrame(pd.DataFrame(
+        {id_name: ids, "lat_nano": lat, "lon_nano": lon})), res=res)
+
+
+def _numpy_knn(pts, qs, k):
+    """(query_id, id, rn) by brute force, with grid_knn's exact double
+    formula: integer diffs cast once, then d*d + d*d; ties by id."""
+    pid, plat, plon = pts
+    out = set()
+    for qid, qla, qlo in zip(*qs):
+        dla = (qla - plat).astype(np.float64)
+        dlo = (qlo - plon).astype(np.float64)
+        order = np.lexsort((pid, dla * dla + dlo * dlo))[:k]
+        out |= {(int(qid), int(pid[i]), r + 1) for r, i in enumerate(order)}
+    return out
+
+
+def _executions(spark):
+    """(id, description) of the SQL executions in the status store,
+    oldest first."""
+    lst = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return sorted((lst.apply(i).executionId(), lst.apply(i).description())
+                  for i in range(lst.size()))
+
+
+def _last_execution_id(spark):
+    return max((i for i, _ in _executions(spark)), default=-1)
+
+
+def _knn_labels(spark, after_id):
+    """Distinct grid_knn job descriptions of the executions after
+    ``after_id``, in order of first use."""
+    return list(dict.fromkeys(
+        d for i, d in _executions(spark)
+        if i > after_id and d and d.startswith("grid_knn")))
+
+
+_KNN_PTS = _knn_coords(40_000, 2654435761, 2246822519)
+_KNN_QS = _knn_coords(500, 3141592653, 2718281829, offset=1_000_000)
+
+
+def test_grid_knn_auto_start_disk_matches_explicit(spark, monkeypatch):
+    """The first disk is a SCHEDULE, never a result: the measured start
+    and a forced wider one must return identical rows."""
+    from osmpbf_spark.operators import knn
+    assert knn._start_disk(0, 0, 5) == 1
+    assert knn._start_disk(100, 1000, 5) == 8      # λ = 0.1 → capped
+    assert knn._start_disk(40_000, 1000, 3) == 1   # dense
     res = 12
-    pts = spark.range(0, 40_000).select(
-        F.col("id"),
-        ((F.col("id") * 2654435761) % (2 * B) + 44 * B).alias("lat_nano"),
-        ((F.col("id") * 2246822519) % (2 * B) + 7 * B).alias("lon_nano"))
-    pts = with_grid_cells(pts, res=res)
-    qdf = with_grid_cells(
-        spark.range(0, 500).select(
-            (F.col("id") + 1_000_000).alias("query_id"),
-            ((F.col("id") * 40503) % (2 * B) + 44 * B).alias("lat_nano"),
-            ((F.col("id") * 69069) % (2 * B) + 7 * B).alias("lon_nano")),
-        res=res)
-    outs = []
-    for regime in (True, False):
-        auto = grid_knn(pts, qdf, 3, res=res,
-                        broadcast_candidates=regime) \
-            .select("query_id", "id", "rn")
-        fixed = grid_knn(pts, qdf, 3, res=res, start_disk=1,
-                         broadcast_candidates=regime) \
-            .select("query_id", "id", "rn")
-        assert auto.count() == fixed.count() == 1500
-        assert auto.exceptAll(fixed).isEmpty()
-        assert fixed.exceptAll(auto).isEmpty()
-        outs.append(auto)
-    # and the two regimes agree with each other
-    assert outs[0].exceptAll(outs[1]).isEmpty()
+    pts = _knn_frame(spark, _KNN_PTS, "id", res)
+    qdf = _knn_frame(spark, _KNN_QS, "query_id", res)
+    auto = knn.grid_knn(pts, qdf, 3, res=res).select("query_id", "id", "rn")
+    monkeypatch.setattr(knn, "_start_disk", lambda n, cells, k: 4)
+    fixed = knn.grid_knn(pts, qdf, 3, res=res).select("query_id", "id", "rn")
+    assert auto.count() == fixed.count() == 1500
+    assert auto.exceptAll(fixed).isEmpty()
+    assert fixed.exceptAll(auto).isEmpty()
 
 
-def test_grid_knn_reversed_probe_matches_cand_cells(spark):
-    """The reversed probe shape (broadcast queries keyed by their own
-    cell; points explode by the offsets) is a JOIN SHAPE, never a
-    result: forcing it on and off must return identical rows, including
+@pytest.mark.parametrize("shape,consts", [
+    ("rev", {"_REV_MIN_ROWS": 0}),
+    ("bcast", {"_REV_MIN_ROWS": 1 << 60}),
+    ("shuffle", {"_BCAST_ROWS": 0}),
+], ids=["rev", "bcast", "shuffle"])
+def test_grid_knn_reversed_probe_matches_cand_cells(spark, monkeypatch,
+                                                    shape, consts):
+    """Each round shape — reversed probe (broadcast queries keyed by
+    their own cell; points explode by the offsets), broadcast candidate
+    cells, and the shuffle join — is a JOIN SHAPE, never a result: each
+    forced shape must return exactly the brute-force rows, including
     duplicate-coordinate ties and near-cell-boundary points."""
+    from osmpbf_spark.operators import knn
+    for name, value in consts.items():
+        monkeypatch.setattr(knn, name, value)
+    res = 12
+    # duplicate coordinates: ids 40000.. replay the first 200 points
+    ids, lat, lon = _KNN_PTS
+    pts_np = (np.concatenate([ids, ids[:200] + 40_000]),
+              np.concatenate([lat, lat[:200]]),
+              np.concatenate([lon, lon[:200]]))
+    pts = _knn_frame(spark, pts_np, "id", res)
+    qdf = _knn_frame(spark, _KNN_QS, "query_id", res)
+    before = _last_execution_id(spark)
+    got = knn.grid_knn(pts, qdf, 3, res=res).select(
+        "query_id", "id", F.col("rn").cast("long"))
+    want = spark.createDataFrame(sorted(_numpy_knn(pts_np, _KNN_QS, 3)),
+                                 "query_id long, id long, rn long")
+    assert got.count() == 1500
+    assert got.exceptAll(want).isEmpty()
+    assert want.exceptAll(got).isEmpty()
+    rounds = _knn_labels(spark, before)[1:]
+    assert rounds and all(f" {shape} " in r for r in rounds), rounds
+
+
+def test_grid_knn_multi_round_brute_backstop(spark, monkeypatch):
+    """A schedule of doubling rounds that ends in the brute-force
+    backstop returns the brute-force rows; every action is labelled by
+    phase, and the caller's job description is restored."""
+    from osmpbf_spark.operators import knn
+    monkeypatch.setattr(knn, "_start_disk", lambda n, cells, k: 1)
+    monkeypatch.setattr(knn, "_MAX_DISK", 2)
+    res = 12
+    rng = np.random.default_rng(7)
+    pts_np = (np.arange(3000, dtype=np.int64),
+              rng.integers(44 * B, 45 * B, 3000),
+              rng.integers(7 * B, 8 * B, 3000))
+    # 40 queries in the cloud, 10 a degree north of it (~23 cells: no
+    # point within the disk-2 guard, so they reach the backstop)
+    qs_np = (np.arange(50, dtype=np.int64) + 10_000,
+             np.concatenate([rng.integers(44 * B, 45 * B, 40),
+                             rng.integers(46 * B, 47 * B, 10)]),
+             rng.integers(7 * B, 8 * B, 50))
+    pts = _knn_frame(spark, pts_np, "id", res)
+    qdf = _knn_frame(spark, qs_np, "query_id", res)
+    sc = spark.sparkContext
+    sc.setJobDescription("caller phase")
+    try:
+        before = _last_execution_id(spark)
+        out = knn.grid_knn(pts, qdf, 4, res=res)
+        assert sc.getLocalProperty("spark.job.description") == "caller phase"
+        labels = _knn_labels(spark, before)
+    finally:
+        sc.setJobDescription(None)
+    got = {(r["query_id"], r["id"], r["rn"]) for r in out.collect()}
+    assert got == _numpy_knn(pts_np, qs_np, 4)
+    assert labels[0] == "grid_knn probe"
+    assert labels[1] == "grid_knn r1 disk=1 bcast open=50", labels
+    assert len(labels) == 3, labels
+    assert labels[2].startswith("grid_knn r2 disk=2 bcast open="), labels
+    assert int(labels[2].rsplit("=", 1)[1]) >= 10
+
+
+def test_grid_knn_rejects_duplicate_query_ids(spark):
+    """Duplicate query ids would merge into one ranked window and keep
+    the open-query count from reaching 0: they fail loudly instead."""
     from osmpbf_spark.operators.knn import grid_knn
     res = 12
-    pts = spark.range(0, 40_000).select(
-        F.col("id"),
-        ((F.col("id") * 2654435761) % (2 * B) + 44 * B).alias("lat_nano"),
-        ((F.col("id") * 2246822519) % (2 * B) + 7 * B).alias("lon_nano"))
-    # duplicate coordinates: ids 40000.. replay the first 200 points
-    dup = spark.range(0, 200).select(
-        (F.col("id") + 40_000).alias("id"),
-        ((F.col("id") * 2654435761) % (2 * B) + 44 * B).alias("lat_nano"),
-        ((F.col("id") * 2246822519) % (2 * B) + 7 * B).alias("lon_nano"))
-    pts = with_grid_cells(pts.unionByName(dup), res=res)
-    qdf = with_grid_cells(
-        spark.range(0, 500).select(
-            (F.col("id") + 1_000_000).alias("query_id"),
-            ((F.col("id") * 40503) % (2 * B) + 44 * B).alias("lat_nano"),
-            ((F.col("id") * 69069) % (2 * B) + 7 * B).alias("lon_nano")),
-        res=res)
-    rev = grid_knn(pts, qdf, 3, res=res, broadcast_candidates=False,
-                   _rev_min_rows=1)          # force reversed every round
-    old = grid_knn(pts, qdf, 3, res=res, broadcast_candidates=False,
-                   _rev_min_rows=1 << 60)    # never reversed
-    assert rev.count() == old.count() == 1500
-    assert rev.exceptAll(old).isEmpty()
-    assert old.exceptAll(rev).isEmpty()
+    pts = _knn_frame(spark, _knn_coords(100, 2654435761, 2246822519),
+                     "id", res)
+    qdf = _knn_frame(spark, (np.array([1, 2, 1]), np.full(3, 44 * B),
+                             np.full(3, 7 * B)), "query_id", res)
+    with pytest.raises(ValueError, match="unique"):
+        grid_knn(pts, qdf, 3, res=res)
 
 
 def test_local_relation_validates_row_width(spark):
@@ -316,6 +409,10 @@ def test_local_relation_validates_row_width(spark):
         local_relation(spark, [(1, 2, 3)], "a int, b int")
     with pytest.raises(ValueError):
         local_relation(spark, [(1, 2), (3,)], "a int, b int")
+    with pytest.raises(ValueError, match="duplicate"):
+        local_relation(spark, [(1, 2)], "a int, A int")
+    with pytest.raises(ValueError, match="differs from DDL"):
+        local_relation(spark, [(1,)], "a int not null")
 
 
 def test_decode_spread_skips_only_matching_partitioning(spark):
