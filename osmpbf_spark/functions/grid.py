@@ -114,11 +114,13 @@ def _offsets_df(spark, offs: list[tuple[int, int]]) -> DataFrame:
     return local_relation(spark, offs, "dx int, dy int")
 
 
-def neighbor_offsets(spark, k: int) -> DataFrame:
+def neighbor_offsets(spark, k: int, max_dx: int | None = None) -> DataFrame:
     """All (dx, dy) with Chebyshev distance ≤ k — the grid analogue of H3
     ``grid_disk`` (ring expansion for kNN, EDBT-2012 pattern, PAPERS.md).
-    Tiny driver-side relation intended for broadcast."""
-    offs = [(dx, dy) for dx in range(-k, k + 1) for dy in range(-k, k + 1)]
+    ``max_dx`` keeps only |dx| ≤ max_dx (kNN's x-pruned disk). Tiny
+    driver-side relation intended for broadcast."""
+    mx = k if max_dx is None else min(k, max_dx)
+    offs = [(dx, dy) for dx in range(-mx, mx + 1) for dy in range(-k, k + 1)]
     return _offsets_df(spark, offs)
 
 

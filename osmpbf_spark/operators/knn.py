@@ -28,20 +28,11 @@ from ..functions.grid import (
     NANO_360,
     RES_SHIFT,
     Y_SHIFT,
+    cell_xy,
     neighbor_offsets,
 )
 from ..session import local_relation
 
-# Round-shape rule (grid_knn). Every broadcast build is capped at
-# _BCAST_ROWS rows: candidate-cell rows are 4 longs (~32 B + relation
-# overhead), so 4M rows ≈ 150-250 MB built — under the 8 GB/512M-row
-# broadcast caps and far cheaper than shuffling the point side.
-_BCAST_ROWS = 4_000_000
-# the reversed probe pays for its point-side fan-out only once the
-# candidate-cell volume (open queries × offsets) is at least this big,
-# and only while the fan-out itself stays at most _REV_MAX_OFFS×
-_REV_MIN_ROWS = 500_000
-_REV_MAX_OFFS = 35
 # disks double up to _MAX_DISK; open queries left after it take the
 # brute-force backstop. A tail of open queries whose candidate cells at
 # the next-but-one disk stay under _TAIL_ROWS jumps straight there.
@@ -49,40 +40,36 @@ _MAX_DISK = 64
 _TAIL_ROWS = 500_000
 
 
-def _with_xy(df: DataFrame, cell_col: str) -> DataFrame:
-    from ..functions.grid import cell_xy
-    _, x, y = cell_xy(cell_col)
-    return df.withColumn("_x", x).withColumn("_y", y)
+def _density(n: int, occupied: int, bbox: int) -> float:
+    """Points per cell a query sees: the Poisson zero-count estimator
+    λ = −ln(1 − occupied/bbox), which hotspots (many points in few cells)
+    barely move; n/bbox once the approximate occupied count fills it."""
+    if occupied < bbox:
+        return -math.log1p(-occupied / bbox)
+    return n / max(bbox, 1)
 
 
-def _start_disk(n: int, cells: int, k: int) -> int:
-    """First disk radius, from ``n`` points in ``cells`` occupied cells.
+def _expected_open(n_q: int, lam: float, disk: int, k: int) -> float:
+    """Queries expected open after a round at ``disk``: n_q · P(X < k),
+    X ~ Poisson(λ·π·disk²/2) the points inside the guard circle (its
+    area in units of the 2:1 cells)."""
+    mu = lam * math.pi * disk * disk / 2
+    term, cdf = math.exp(-mu), 0.0
+    for i in range(k):
+        cdf, term = cdf + term, term * mu / (i + 1)
+    return n_q * cdf
 
-    Picks d so the EXPECTED in-guard candidate count covers k with 2×
-    safety: the guard circle's area in cell units is π·d²/2 for the 2:1
-    cells, so d = ceil(sqrt(4k/(πλ))) with λ the mean occupancy of an
-    occupied cell, capped to [1, 8]. At bench density a fixed disk 1
-    left 45% of a 100k-query join open and bought a full extra round.
-    The schedule never changes the result, only which rounds run."""
+
+def _start_disk(n_q: int, n: int, occupied: int, bbox: int, k: int) -> int:
+    """First disk: the smallest d in [1, 8] whose expected open count
+    passes the straggler test at disk 2d (open·(8d+1)² ≤ _TAIL_ROWS), so
+    round 2 is a tail round. A schedule only, never a result."""
     if not n:
         return 1
-    lam = n / max(cells, 1)
-    return max(1, min(8, _MAX_DISK,
-                      math.ceil(math.sqrt(4.0 * k / (math.pi * lam)))))
-
-
-def _shifted_cells(df: DataFrame, offs: DataFrame, res: int, n: int,
-                   keep: list) -> DataFrame:
-    """``keep`` columns of ``df`` (which carries _x/_y) once per offset,
-    with the offset cell as ``jcell``. y offsets outside [0, n) are
-    dropped (no tiles beyond the poles); clamping instead would map
-    several dy values to one cell and duplicate candidate rows, so one
-    point would take several top-k ranks. x wraps (antimeridian)."""
-    y = F.col("_y") + F.col("dy")
-    return (df.join(offs).filter((y >= 0) & (y <= n - 1))
-            .select(*keep, (F.lit(res).cast("long") * F.lit(RES_SHIFT)
-                            + F.pmod(F.col("_x") + F.col("dx"), F.lit(n))
-                            * F.lit(Y_SHIFT) + y).alias("jcell")))
+    lam = _density(n, occupied, bbox)
+    return next((d for d in range(1, 8)
+                 if _expected_open(n_q, lam, d, k) * (8 * d + 1) ** 2
+                 <= _TAIL_ROWS), 8)
 
 
 def grid_knn(points: DataFrame, queries: DataFrame, k: int, *,
@@ -101,41 +88,36 @@ def grid_knn(points: DataFrame, queries: DataFrame, k: int, *,
     squared planar nanodegree distance (double; ties broken by id — the
     output row set is deterministic).
 
-    One start-up action measures both inputs: point count and approximate
-    occupied-cell count (the first disk, ``_start_disk``), query count and
-    distinct query ids. A driver loop then doubles the Chebyshev disk
+    One start-up action measures both inputs: point count, approximate
+    occupied-cell count and the points' cell bounding box, query count
+    and distinct query ids. The first disk (``_start_disk``) comes from
+    the Poisson zero-count density of the box, which megacity hotspots
+    barely inflate. A driver loop then doubles the Chebyshev disk
     radius; a query finishes when it has ≥ k candidates whose k-th
     distance is guaranteed correct: the circle of radius sqrt(dist2_k)
     must lie inside the searched square (dist_k < disk * cell_height).
-    Each round joins the open queries to the points in their neighbor
-    cells in one of three shapes, chosen from the open-query count and
-    the offset count alone:
-
-    * reversed — open × offsets ≥ ``_REV_MIN_ROWS``, offsets ≤
-      ``_REV_MAX_OFFS`` and open ≤ ``_BCAST_ROWS``: broadcast the open
-      queries keyed by their own cell and explode the points by the
-      offsets;
-    * broadcast — open × offsets ≤ ``_BCAST_ROWS``: broadcast the open
-      queries exploded by the offsets, the points never shuffle;
-    * shuffle — otherwise: shuffle-join the exploded queries with the
-      points on cell (the only shape past the broadcast cap).
+    Every round joins the open queries, exploded by the disk offsets, to
+    the points on cell. The exploded side is broadcast only when its
+    estimated size fits under ``spark.sql.autoBroadcastJoinThreshold``
+    (−1: never); otherwise the planner and AQE pick the join.
 
     Open queries left at ``_MAX_DISK`` fall back to a brute-force cross
     join (correctness backstop; hit only by pathological density gaps).
     The point side is scanned once by the start-up action and once per
     round, and never persisted here: callers whose point lineage is
     expensive must persist it. Each action runs under a Spark job
-    description such as ``grid_knn r2 disk=4 bcast open=45305``; the
-    caller's description is restored on return.
+    description such as ``grid_knn r1 disk=4 shuffle open=100000
+    lam=0.78 est_open=2`` (round 1 carries the density and the predicted
+    open count); the caller's description is restored on return.
     """
     n = 1 << res
     cell_h = NANO_360 // 2 // n        # lat (y) cell height in nanodegrees
-    q = _with_xy(queries, cell_col).select(
-        F.col(query_id_col), "lat_nano", "lon_nano", "_x", "_y",
-        F.col(cell_col).alias("q_cell"))
+    _, qx, qy = cell_xy(cell_col)
+    q = queries.select(F.col(query_id_col), "lat_nano", "lon_nano",
+                       qx.alias("_x"), qy.alias("_y"))
     pts = points.select(
         F.col(id_col), F.col("lat_nano").alias("p_lat"),
-        F.col("lon_nano").alias("p_lon"), F.col(cell_col).alias("p_cell"))
+        F.col("lon_nano").alias("p_lon"), F.col(cell_col).alias("jcell"))
 
     # d*d (not pow) so any engine replicating this gets bit-identical
     # doubles; integer diffs cast once then multiplied
@@ -148,6 +130,11 @@ def grid_knn(points: DataFrame, queries: DataFrame, k: int, *,
     spark = points.sparkSession
     sc = spark.sparkContext
     caller_desc = sc.getLocalProperty("spark.job.description")
+    # planner's size of an exploded query row: UnsafeRow null-bitset
+    # word plus one word per long column (q_cols + jcell)
+    row_bytes = 8 * (len(q_cols) + 2)
+    bcast_bytes = (spark._jsparkSession.sessionState().conf()
+                   .autoBroadcastJoinThreshold())
 
     def _ckpt(df, *, eager):
         """Per-round materialization. localCheckpoint stores blocks in
@@ -170,19 +157,28 @@ def grid_knn(points: DataFrame, queries: DataFrame, k: int, *,
         # union, never a join: a join would run an aggregate inside a
         # BroadcastExchange build thread and race broadcastTimeout)
         sc.setJobDescription("grid_knn probe")
+        _, px, py = cell_xy("jcell")
         stats = {r["side"]: r for r in pts.select(
             F.lit("p").alias("side"), F.count("*").alias("rows"),
-            F.approx_count_distinct("p_cell").alias("keys"))
+            F.approx_count_distinct("jcell").alias("keys"),
+            ((F.max(px) - F.min(px) + 1) * (F.max(py) - F.min(py) + 1))
+            .alias("bbox"))
             .unionByName(q.select(
                 F.lit("q").alias("side"), F.count("*").alias("rows"),
-                F.count_distinct(query_id_col).alias("keys")))
+                F.count_distinct(query_id_col).alias("keys")),
+                allowMissingColumns=True)
             .collect()}
         remaining_n = stats["q"]["rows"]
         if stats["q"]["keys"] != remaining_n:
             raise ValueError(
                 f"grid_knn: {query_id_col!r} must be unique and non-NULL "
                 f"({remaining_n} queries, {stats['q']['keys']} distinct ids)")
-        disk = _start_disk(stats["p"]["rows"], stats["p"]["keys"], k)
+        n_p, occupied, bbox = (stats["p"][c] or 0
+                               for c in ("rows", "keys", "bbox"))
+        disk = _start_disk(remaining_n, n_p, occupied, bbox, k)
+        lam = _density(n_p, occupied, bbox)
+        est = (f" lam={lam:.2f} est_open="
+               f"{_expected_open(remaining_n, lam, disk, k):.0f}")
         remaining = q
         done_parts = []
         rnd = 0
@@ -198,30 +194,26 @@ def grid_knn(points: DataFrame, queries: DataFrame, k: int, *,
             # guarantee is untouched. Cuts the fan-out ~40% at even disks.
             mdx = (disk // 2) + (disk % 2)
             n_offs = (2 * mdx + 1) * (2 * disk + 1)
-            offs = F.broadcast(neighbor_offsets(spark, disk)
-                               .filter(F.abs(F.col("dx")) <= mdx))
+            offs = F.broadcast(neighbor_offsets(spark, disk, max_dx=mdx))
+            # the open queries once per offset, the offset cell as jcell.
+            # y offsets outside [0, n) are dropped (no tiles beyond the
+            # poles); clamping would map several dy to one cell and one
+            # point would take several top-k ranks. x wraps (antimeridian)
+            y = F.col("_y") + F.col("dy")
+            cand = (remaining.join(offs).filter((y >= 0) & (y <= n - 1))
+                    .select(*q_cols, (
+                        F.lit(res).cast("long") * F.lit(RES_SHIFT)
+                        + F.pmod(F.col("_x") + F.col("dx"), F.lit(n))
+                        * F.lit(Y_SHIFT) + y).alias("jcell")))
             # join strategy never changes the result — ranking is
-            # deterministic on (dist2, id). The reversed probe keeps the
-            # driver-built broadcast n_offs× smaller (the point fan-out
-            # is map-side codegen on every core); pair-set identity needs
-            # an offset set symmetric under negation, which the full
-            # square and the |dx| ≤ mdx pruning both are.
-            if (remaining_n * n_offs >= _REV_MIN_ROWS
-                    and n_offs <= _REV_MAX_OFFS
-                    and remaining_n <= _BCAST_ROWS):
-                shape = "rev"
-                left = _shifted_cells(_with_xy(pts, "p_cell"), offs, res, n,
-                                      [id_col, "p_lat", "p_lon"])
-                right = F.broadcast(remaining.select(
-                    *q_cols, F.col("q_cell").alias("jcell")))
+            # deterministic on (dist2, id). A threshold of −1 never holds.
+            if remaining_n * n_offs * row_bytes <= bcast_bytes:
+                shape, cand = "bcast", F.broadcast(cand)
             else:
-                shape = ("bcast" if remaining_n * n_offs <= _BCAST_ROWS
-                         else "shuffle")
-                cand = _shifted_cells(remaining, offs, res, n, q_cols)
-                left = F.broadcast(cand) if shape == "bcast" else cand
-                right = pts.withColumnRenamed("p_cell", "jcell")
-            sc.setJobDescription(
-                f"grid_knn r{rnd} disk={disk} {shape} open={remaining_n}")
+                shape = "shuffle"
+            sc.setJobDescription(f"grid_knn r{rnd} disk={disk} {shape} "
+                                 f"open={remaining_n}{est}")
+            est = ""
             # guard pre-filter BEFORE the window: a candidate at dist ≥
             # disk*cell_h can never be in a PASSING query's top-k, and
             # failing queries retry at the next disk anyway — dropping it
@@ -232,7 +224,7 @@ def grid_knn(points: DataFrame, queries: DataFrame, k: int, *,
             # candidates — n_found, an unordered count over the SAME
             # window partitioning as the rank (no extra shuffle).
             guard = F.lit(float(disk * cell_h)) ** 2
-            flagged = _ckpt(left.join(right, "jcell")
+            flagged = _ckpt(cand.join(pts, "jcell")
                             .withColumn("dist2", dist2)
                             .filter(F.col("dist2") < guard)
                             .withColumn("rn", F.row_number().over(win))

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from osmpbf_spark.functions.grid import (
     GRID_RES_FINE,
+    neighbor_offsets,
     ring_offsets,
     with_grid_cells,
 )
@@ -104,6 +105,16 @@ def test_ring_offsets(spark):
     r2 = ring_offsets(spark, 2).collect()
     assert len(r2) == 16                      # ring k has 8k cells
     assert all(max(abs(r["dx"]), abs(r["dy"])) == 2 for r in r2)
+
+
+def test_neighbor_offsets_max_dx(spark):
+    # kNN's x-pruned disk is built in Python, not filtered in Spark: at
+    # disk 64 the plan embeds 65 × 129 offsets instead of 129 × 129
+    assert neighbor_offsets(spark, 64).count() == 16_641
+    pruned = neighbor_offsets(spark, 64, max_dx=32).collect()
+    assert len(pruned) == 8_385
+    assert max(abs(r["dx"]) for r in pruned) == 32
+    assert max(abs(r["dy"]) for r in pruned) == 64
 
 
 def test_lsh_multiprobe_recall_monotone_and_pinned(spark):

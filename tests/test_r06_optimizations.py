@@ -289,39 +289,54 @@ _KNN_PTS = _knn_coords(40_000, 2654435761, 2246822519)
 _KNN_QS = _knn_coords(500, 3141592653, 2718281829, offset=1_000_000)
 
 
+def test_start_disk_rule():
+    """The first disk follows the Poisson zero-count density of the
+    points' cell box, not the mean of an occupied cell."""
+    from osmpbf_spark.operators import knn
+    # store_knn seed-1 geometry: 100k queries, 500k points (35% in three
+    # megacity hotspots) in 225,371 occupied of 415,872 box cells. The
+    # occupied-cell mean (2.22) would give disk 2 and ~45% open; the
+    # box density 0.78 gives disk 4 and ~2 expected open queries.
+    assert knn._start_disk(100_000, 500_000, 225_371, 415_872, 5) == 4
+    assert round(knn._density(500_000, 225_371, 415_872), 2) == 0.78
+    lam = knn._density(500_000, 225_371, 415_872)
+    assert round(knn._expected_open(100_000, lam, 2, 5)) == 45_724
+    assert round(knn._expected_open(100_000, lam, 4, 5)) == 2
+    # approximate occupied count at or past the box: n/bbox, no log(0)
+    for occupied in (415_872, 450_000):
+        assert knn._start_disk(100_000, 500_000, occupied, 415_872, 5) == 3
+    assert knn._start_disk(10, 0, 0, 0, 5) == 1          # no points
+    assert knn._start_disk(100_000, 10, 10, 10**9, 5) == 8   # capped
+    assert knn._start_disk(100_000, 40_000, 1000, 1000, 3) == 1  # dense
+
+
 def test_grid_knn_auto_start_disk_matches_explicit(spark, monkeypatch):
     """The first disk is a SCHEDULE, never a result: the measured start
     and a forced wider one must return identical rows."""
     from osmpbf_spark.operators import knn
-    assert knn._start_disk(0, 0, 5) == 1
-    assert knn._start_disk(100, 1000, 5) == 8      # λ = 0.1 → capped
-    assert knn._start_disk(40_000, 1000, 3) == 1   # dense
     res = 12
     pts = _knn_frame(spark, _KNN_PTS, "id", res)
     qdf = _knn_frame(spark, _KNN_QS, "query_id", res)
     auto = knn.grid_knn(pts, qdf, 3, res=res).select("query_id", "id", "rn")
-    monkeypatch.setattr(knn, "_start_disk", lambda n, cells, k: 4)
+    monkeypatch.setattr(knn, "_start_disk", lambda *a: 4)
     fixed = knn.grid_knn(pts, qdf, 3, res=res).select("query_id", "id", "rn")
     assert auto.count() == fixed.count() == 1500
     assert auto.exceptAll(fixed).isEmpty()
     assert fixed.exceptAll(auto).isEmpty()
 
 
-@pytest.mark.parametrize("shape,consts", [
-    ("rev", {"_REV_MIN_ROWS": 0}),
-    ("bcast", {"_REV_MIN_ROWS": 1 << 60}),
-    ("shuffle", {"_BCAST_ROWS": 0}),
-], ids=["rev", "bcast", "shuffle"])
-def test_grid_knn_reversed_probe_matches_cand_cells(spark, monkeypatch,
-                                                    shape, consts):
-    """Each round shape — reversed probe (broadcast queries keyed by
-    their own cell; points explode by the offsets), broadcast candidate
-    cells, and the shuffle join — is a JOIN SHAPE, never a result: each
-    forced shape must return exactly the brute-force rows, including
-    duplicate-coordinate ties and near-cell-boundary points."""
+@pytest.mark.parametrize("shape,threshold", [
+    ("bcast", "1g"),
+    ("shuffle", "-1"),
+], ids=["bcast", "shuffle"])
+def test_grid_knn_reversed_probe_matches_cand_cells(spark, shape,
+                                                    threshold):
+    """Each round shape — broadcast candidate cells (forced by a large
+    spark.sql.autoBroadcastJoinThreshold) and the planner's join (−1:
+    no broadcast) — is a JOIN SHAPE, never a result: each must return
+    exactly the brute-force rows, including duplicate-coordinate ties
+    and near-cell-boundary points."""
     from osmpbf_spark.operators import knn
-    for name, value in consts.items():
-        monkeypatch.setattr(knn, name, value)
     res = 12
     # duplicate coordinates: ids 40000.. replay the first 200 points
     ids, lat, lon = _KNN_PTS
@@ -330,15 +345,21 @@ def test_grid_knn_reversed_probe_matches_cand_cells(spark, monkeypatch,
               np.concatenate([lon, lon[:200]]))
     pts = _knn_frame(spark, pts_np, "id", res)
     qdf = _knn_frame(spark, _KNN_QS, "query_id", res)
-    before = _last_execution_id(spark)
-    got = knn.grid_knn(pts, qdf, 3, res=res).select(
-        "query_id", "id", F.col("rn").cast("long"))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, threshold)
+    try:
+        before = _last_execution_id(spark)
+        got = knn.grid_knn(pts, qdf, 3, res=res).select(
+            "query_id", "id", F.col("rn").cast("long"))
+        rounds = _knn_labels(spark, before)[1:]
+    finally:
+        spark.conf.set(key, old)
     want = spark.createDataFrame(sorted(_numpy_knn(pts_np, _KNN_QS, 3)),
                                  "query_id long, id long, rn long")
     assert got.count() == 1500
     assert got.exceptAll(want).isEmpty()
     assert want.exceptAll(got).isEmpty()
-    rounds = _knn_labels(spark, before)[1:]
     assert rounds and all(f" {shape} " in r for r in rounds), rounds
 
 
@@ -347,7 +368,7 @@ def test_grid_knn_multi_round_brute_backstop(spark, monkeypatch):
     backstop returns the brute-force rows; every action is labelled by
     phase, and the caller's job description is restored."""
     from osmpbf_spark.operators import knn
-    monkeypatch.setattr(knn, "_start_disk", lambda n, cells, k: 1)
+    monkeypatch.setattr(knn, "_start_disk", lambda *a: 1)
     monkeypatch.setattr(knn, "_MAX_DISK", 2)
     res = 12
     rng = np.random.default_rng(7)
@@ -374,10 +395,47 @@ def test_grid_knn_multi_round_brute_backstop(spark, monkeypatch):
     got = {(r["query_id"], r["id"], r["rn"]) for r in out.collect()}
     assert got == _numpy_knn(pts_np, qs_np, 4)
     assert labels[0] == "grid_knn probe"
-    assert labels[1] == "grid_knn r1 disk=1 bcast open=50", labels
+    assert labels[1] == ("grid_knn r1 disk=1 bcast open=50 lam=5.70 "
+                         "est_open=1"), labels
     assert len(labels) == 3, labels
     assert labels[2].startswith("grid_knn r2 disk=2 bcast open="), labels
     assert int(labels[2].rsplit("=", 1)[1]) >= 10
+
+
+def test_grid_knn_hotspot_first_round_leaves_a_tail(spark, monkeypatch):
+    """Megacity hotspots must not shrink the first disk: on uniform
+    points plus three hotspots holding ~35% of them, round 1 runs at
+    disk 4 and round 2 opens with a pinned handful of queries (a density
+    from occupied cells alone picks disk 2 here and leaves 2,289 of
+    5,000 open). The open counts come from the job labels and do not
+    drift."""
+    from osmpbf_spark.operators import knn
+    # same open-queries-to-tail-rows ratio as 100k queries at 500k rows
+    monkeypatch.setattr(knn, "_TAIL_ROWS", 25_000)
+    res = 14
+    rng = np.random.default_rng(11)
+    lat = [rng.integers(44 * B, 46 * B, 13_000)]
+    lon = [rng.integers(7 * B, 9 * B, 13_000)]
+    for fy, fx in ((0.3, 0.4), (0.62, 0.55), (0.45, 0.8)):
+        lat.append(44 * B + int(2 * B * fy) + rng.integers(-B // 100,
+                                                           B // 100, 2300))
+        lon.append(7 * B + int(2 * B * fx) + rng.integers(-B // 100,
+                                                          B // 100, 2300))
+    pts = _knn_frame(spark, (np.arange(19_900, dtype=np.int64),
+                             np.concatenate(lat), np.concatenate(lon)),
+                     "id", res)
+    qs_np = (np.arange(5000, dtype=np.int64),
+             rng.integers(44 * B, 46 * B, 5000),
+             rng.integers(7 * B, 9 * B, 5000))
+    qdf = _knn_frame(spark, qs_np, "query_id", res)
+    before = _last_execution_id(spark)
+    assert knn.grid_knn(pts, qdf, 5, res=res).count() == 25_000
+    labels = _knn_labels(spark, before)
+    assert len(labels) == 3, labels
+    assert labels[1].startswith("grid_knn r1 disk=4 "), labels
+    assert labels[1].endswith(" open=5000 lam=0.82 est_open=0"), labels
+    assert labels[2].startswith("grid_knn r2 disk=32 "), labels
+    assert labels[2].endswith(" open=2"), labels
 
 
 def test_grid_knn_rejects_duplicate_query_ids(spark):
