@@ -5,13 +5,21 @@ counterpart (the reference has only the way→node semi-join,
 /root/reference/src/indexed.rs:264-330); built per SURVEY.md §2.4 J-row
 "engine supplies":
 
-  1. cover: each polygon's bbox is expanded to the set of grid cells it
-     touches (sequence-explode, distributed; tiny result → broadcast),
+  1. cover: the CLASSIFIED cover (``polygon_cover(classify=True)``):
+     each polygon's bbox cells split into BOUNDARY cells (some ring edge
+     may pass through), FULL cells (inside; complete blocks coarsened
+     to one parent cell) and outside cells (dropped) — sequence-explode,
+     distributed; tiny result → broadcast, memoized per polygon set
+     (:func:`cover_for`),
   2. prefilter: points equi-join cover on cell — a broadcast hash join,
      no shuffle of the big side,
-  3. refine: exact even-odd ray cast evaluated as a Catalyst ``aggregate``
+  3. refine: candidates from FULL cells are inside by construction; the
+     rest run the exact even-odd ray cast, a Catalyst ``aggregate``
      higher-order expression over ring edges with DECIMAL(38) cross
-     products — exact integer geometry, whole-stage codegen, zero Python.
+     products — exact integer geometry, zero Python.
+
+The unclassified covers (bbox, scanline, ``tight="auto"``) stay for
+``polyjoin``, whose candidate stage needs (poly_id, cell) only.
 
 Determinism: integer nanodegree inputs + exact decimal arithmetic ⇒ the
 join output rows are bit-for-bit reproducible at any parallelism (the
@@ -120,6 +128,44 @@ def make_polygons(spark, rows) -> DataFrame:
     return df
 
 
+def _bbox_rows(polygons: DataFrame, res: int
+               ) -> tuple[DataFrame, DataFrame]:
+    """(polygons + ``_ck``, one row per (ring copy, bbox cell row):
+    poly_id, _ck, ring, x0, x1, cy) — the bounds → grid x/y → clamp →
+    row-explode preamble shared by every cover shape."""
+    n = 1 << res
+    # ring-content key: antimeridian-split copies share poly_id but must
+    # NOT pool their edges in the scanline band join (pooled min/max
+    # degenerates the span to the full bbox row); identical rings
+    # colliding is harmless (min/max unaffected)
+    polygons = polygons.withColumn("_ck", F.xxhash64("ring"))
+    bounds = polygons.select(
+        "poly_id", "_ck", "ring",
+        F.expr(ring_bounds_sql("ring", "poly_id")).alias("b"))
+    # x stays UNWRAPPED (wrap=False) then clamps to [0, n-1]: an
+    # antimeridian-split ring copy has lons past ±180°, whose in-range
+    # slice is exactly the clamped x-range (the other side comes from the
+    # ∓360°-shifted copy); fully out-of-range copies are filtered out.
+    xy = bounds.select(
+        "poly_id", "_ck", "ring",
+        F.expr(grid_xy_sql("b.min_lat", "b.min_lon", res, "spark",
+                           wrap=False)[0]).alias("x0r"),
+        F.expr(grid_xy_sql("b.max_lat", "b.max_lon", res, "spark",
+                           wrap=False)[0]).alias("x1r"),
+        F.expr(grid_xy_sql("b.min_lat", "b.min_lon", res, "spark")[1])
+        .alias("y0"),
+        F.expr(grid_xy_sql("b.max_lat", "b.max_lon", res, "spark")[1])
+        .alias("y1"))
+    xy = (xy.filter((F.col("x1r") >= 0) & (F.col("x0r") <= n - 1))
+          .select("poly_id", "_ck", "ring",
+                  F.greatest(F.col("x0r"), F.lit(0)).alias("x0"),
+                  F.least(F.col("x1r"), F.lit(n - 1)).alias("x1"),
+                  "y0", "y1"))
+    return polygons, xy.select(
+        "poly_id", "_ck", "ring", "x0", "x1",
+        F.explode(F.expr("sequence(y0, y1)")).alias("cy"))
+
+
 def polygon_cover(polygons: DataFrame, res: int = GRID_RES_FINE,
                   *, tight: bool | str = "auto",
                   classify: bool = False) -> DataFrame:
@@ -149,18 +195,19 @@ def polygon_cover(polygons: DataFrame, res: int = GRID_RES_FINE,
     lat/lon field): they would silently corrupt both the bbox cover
     and the ray cast's crossing parity — quarantined, not guessed.
     With ``tight="auto"`` the raise is an eager driver-side ValueError
-    (the probe below); with an explicit ``tight`` it surfaces
-    executor-side from the bbox fold's gate when the cover job runs
-    (``ring_bounds_sql``) — no extra scan of the polygons side, which
-    matters for the one caller that feeds an UNBOUNDED layer here
-    (``polyjoin``'s left side, always ``tight=False``).
+    (the probe below); with an explicit ``tight`` or ``classify=True``
+    it surfaces executor-side from the bbox fold's gate when the cover
+    job runs (``ring_bounds_sql``) — no extra scan of the polygons
+    side, which matters for the one caller that feeds an UNBOUNDED
+    layer here (``polyjoin``'s left side, always ``tight=False``).
 
-    ``classify=True`` (r6, guide §1.2 "the distributed algorithm"):
-    returns (poly_id, _ck, cell, full) instead of (poly_id, cell) —
-    every bbox cell is classified as BOUNDARY (some ring edge may pass
-    through it; ``full=false``, must be refined), FULL (no edge touches
-    it and its center is inside; ``full=true``, every point in it is
-    inside — the per-point ray cast is skippable), or fully OUTSIDE
+    ``classify=True`` (r6, guide §1.2 "the distributed algorithm"), the
+    one cover :func:`pip_join` accepts: returns (poly_id, _ck, cell,
+    full) instead of (poly_id, cell) — every bbox cell is classified as
+    BOUNDARY (some ring edge may pass through it; ``full=false``, must
+    be refined), FULL (no edge touches it and its center is inside;
+    ``full=true``, every point in it is inside — the per-point ray
+    cast is skippable), or fully OUTSIDE
     (no edge touches it, center outside — dropped from the cover, so
     its points never even reach the refine). Classification reuses the
     scanline's per-edge band spans with the same ±1-cell float-safety
@@ -192,37 +239,9 @@ def polygon_cover(polygons: DataFrame, res: int = GRID_RES_FINE,
                 f"polygon_cover: {chk['nullv']} polygon(s) contain NULL "
                 "vertices (unresolved ref?) — resolve or drop them first")
         tight = (chk["m"] or 0) > 5   # closed ring: 5 verts == 4 edges
+    from ..functions.grid import NANO_360, RES_SHIFT, Y_SHIFT
     n = 1 << res
-    # ring-content key: antimeridian-split copies share poly_id but must
-    # NOT pool their edges in the scanline band join (pooled min/max
-    # degenerates the span to the full bbox row); identical rings
-    # colliding is harmless (min/max unaffected)
-    polygons = polygons.withColumn("_ck", F.xxhash64("ring"))
-    bounds = polygons.select(
-        "poly_id", "_ck", "ring",
-        F.expr(ring_bounds_sql("ring", "poly_id")).alias("b"))
-    # x stays UNWRAPPED (wrap=False) then clamps to [0, n-1]: an
-    # antimeridian-split ring copy has lons past ±180°, whose in-range
-    # slice is exactly the clamped x-range (the other side comes from the
-    # ∓360°-shifted copy); fully out-of-range copies are filtered out.
-    xy = bounds.select(
-        "poly_id", "_ck", "ring",
-        F.expr(grid_xy_sql("b.min_lat", "b.min_lon", res, "spark",
-                           wrap=False)[0]).alias("x0r"),
-        F.expr(grid_xy_sql("b.max_lat", "b.max_lon", res, "spark",
-                           wrap=False)[0]).alias("x1r"),
-        F.expr(grid_xy_sql("b.min_lat", "b.min_lon", res, "spark")[1])
-        .alias("y0"),
-        F.expr(grid_xy_sql("b.max_lat", "b.max_lon", res, "spark")[1])
-        .alias("y1"))
-    from ..functions.grid import NANO_180, NANO_360, RES_SHIFT, Y_SHIFT
-    xy = (xy.filter((F.col("x1r") >= 0) & (F.col("x0r") <= n - 1))
-          .select("poly_id", "_ck", "ring",
-                  F.greatest(F.col("x0r"), F.lit(0)).alias("x0"),
-                  F.least(F.col("x1r"), F.lit(n - 1)).alias("x1"),
-                  "y0", "y1"))
-    rows = xy.select("poly_id", "_ck", "ring", "x0", "x1",
-                     F.explode(F.expr("sequence(y0, y1)")).alias("cy"))
+    polygons, rows = _bbox_rows(polygons, res)
     if tight:
         band_h = NANO_360 / 2 / n   # lat height of one cell row (double)
         # EDGES AS ROWS, not a per-row HOF: higher-order lambdas are
@@ -297,28 +316,7 @@ def _classified_cover(polygons: DataFrame, res: int) -> DataFrame:
         cell_xy,
     )
     n = 1 << res
-    polygons = polygons.withColumn("_ck", F.xxhash64("ring"))
-    bounds = polygons.select(
-        "poly_id", "_ck", "ring",
-        F.expr(ring_bounds_sql("ring", "poly_id")).alias("b"))
-    xy = bounds.select(
-        "poly_id", "_ck", "ring",
-        F.expr(grid_xy_sql("b.min_lat", "b.min_lon", res, "spark",
-                           wrap=False)[0]).alias("x0r"),
-        F.expr(grid_xy_sql("b.max_lat", "b.max_lon", res, "spark",
-                           wrap=False)[0]).alias("x1r"),
-        F.expr(grid_xy_sql("b.min_lat", "b.min_lon", res, "spark")[1])
-        .alias("y0"),
-        F.expr(grid_xy_sql("b.max_lat", "b.max_lon", res, "spark")[1])
-        .alias("y1"))
-    xy = (xy.filter((F.col("x1r") >= 0) & (F.col("x0r") <= n - 1))
-          .select("poly_id", "_ck", "ring",
-                  F.greatest(F.col("x0r"), F.lit(0)).alias("x0"),
-                  F.least(F.col("x1r"), F.lit(n - 1)).alias("x1"),
-                  "y0", "y1"))
-    # one row per (ring copy, cell row)
-    rows = xy.select("poly_id", "_ck", "ring", "x0", "x1",
-                     F.explode(F.expr("sequence(y0, y1)")).alias("cy"))
+    _, rows = _bbox_rows(polygons, res)
     # Everything below is ROW-LOCAL on the (small by contract) polygons
     # side — no join, no shuffle, same stage count as the bbox cover.
     # Per-edge lat-band lon spans: same construction and pads as the
@@ -508,12 +506,13 @@ _RAY_CAST = """
 def point_in_ring_expr(px: str, py: str, ring: str = "ring"):
     """Exact even-odd test of point (lon=px, lat=py) against the ring
     column named ``ring`` — usable anywhere a boolean Catalyst
-    expression fits (``operators/polyjoin.py`` aims it at each side of
-    a polygon pair)."""
+    expression fits (``pip_join``'s refine; the tests' cover-free
+    brute force; ``polyjoin.ray_cast_edge_sql`` is its per-edge
+    body)."""
     return F.expr(_RAY_CAST.format(px=px, py=py, ring=ring))
 
 
-_COVER_CACHE: list[tuple[DataFrame, int, object, DataFrame]] = []
+_COVER_CACHE: list[list] = []   # [polygons, res, cover, persisted]
 _COVER_CACHE_MAX = 16
 # ADVICE r4: probe/insert/evict race under multi-threaded drivers (a
 # legitimate Spark pattern for concurrent job submission); the lock
@@ -521,12 +520,10 @@ _COVER_CACHE_MAX = 16
 _COVER_CACHE_LOCK = threading.Lock()
 
 
-def cover_for(polygons: DataFrame, res: int = GRID_RES_FINE, *,
-              tight: bool | str = "auto") -> DataFrame:
-    """Memoized ``split_antimeridian`` + :func:`polygon_cover` per
-    (polygons DataFrame, res, tight) — repeated :func:`pip_join` calls
-    against the same polygon set skip the three cover stages AND the
-    ``tight="auto"`` driver-side probe (VERDICT r3 #7).
+def cover_for(polygons: DataFrame, res: int = GRID_RES_FINE) -> DataFrame:
+    """Memoized ``split_antimeridian`` + classified :func:`polygon_cover`
+    per (polygons DataFrame, res) — repeated :func:`pip_join` calls
+    against the same polygon set skip the cover stages (VERDICT r3 #7).
 
     Matching is by OBJECT IDENTITY of the polygons DataFrame (``is``):
     a pure-Python probe that costs nothing on misses. Two rejected
@@ -545,7 +542,7 @@ def cover_for(polygons: DataFrame, res: int = GRID_RES_FINE, *,
     with _COVER_CACHE_LOCK:
         for i in range(len(_COVER_CACHE) - 1, -1, -1):
             entry = _COVER_CACHE[i]
-            p, r, t, c = entry[0], entry[1], entry[2], entry[3]
+            p, r, c = entry[0], entry[1], entry[2]
             try:
                 if p.sparkSession._sc._jsc is None:  # stopped session
                     _COVER_CACHE.pop(i)              # (code-review r4:
@@ -553,24 +550,23 @@ def cover_for(polygons: DataFrame, res: int = GRID_RES_FINE, *,
             except Exception:                        # for an exception)
                 _COVER_CACHE.pop(i)
                 continue
-            if r == res and t == tight and p is polygons:
-                if not entry[4]:
+            if r == res and p is polygons:
+                if not entry[3]:
                     c.persist()
-                    entry[4] = True
+                    entry[3] = True
                 return c
-    # build OUTSIDE the lock — the ~0.45 s cover build (and tight="auto"
-    # probe action) must not serialize concurrent joins on distinct
-    # polygon sets; a racing duplicate build is benign (both entries
-    # land, unpersisted-until-hit, FIFO-evicted later)
-    cover = polygon_cover(split_antimeridian(polygons), res, tight=tight,
-                          classify=True)
+    # build OUTSIDE the lock — the ~0.45 s cover build must not
+    # serialize concurrent joins on distinct polygon sets; a racing
+    # duplicate build is benign (both entries land, unpersisted-until-
+    # hit, FIFO-evicted later)
+    cover = polygon_cover(split_antimeridian(polygons), res, classify=True)
     with _COVER_CACHE_LOCK:
-        _COVER_CACHE.append([polygons, res, tight, cover, False])
+        _COVER_CACHE.append([polygons, res, cover, False])
         while len(_COVER_CACHE) > _COVER_CACHE_MAX:
             old = _COVER_CACHE.pop(0)
             try:
-                if old[4]:
-                    old[3].unpersist()
+                if old[3]:
+                    old[2].unpersist()
             except Exception:
                 pass
     return cover
@@ -578,67 +574,67 @@ def cover_for(polygons: DataFrame, res: int = GRID_RES_FINE, *,
 
 def pip_join(points: DataFrame, polygons: DataFrame, *,
              res: int = GRID_RES_FINE, cell_col: str = "cell",
-             salt_n: int | None = None, tight: bool | str = "auto",
+             salt_n: int | None = None,
              cover: DataFrame | None = None) -> DataFrame:
     """points (with ``cell``, ``lat_nano``, ``lon_nano``) ⋈ polygons →
     rows of points inside each polygon (point columns + poly_id).
 
     Plan shape at scale: big-side scan → broadcast hash join on cell →
-    broadcast hash join on poly_id (ring fetch) → codegen'd refine filter.
+    broadcast hash join on (poly_id, _ck) (ring fetch) → refine filter.
     The big side never shuffles. ``salt_n`` spreads hot cells before the
     join when a megacity cell dominates (north_rule skew handling).
     Antimeridian-crossing rings (unwrapped lons) are split transparently.
 
-    The cover is cached per (polygon plan, res) by default
-    (:func:`cover_for`), so repeated joins against one polygon set
-    compute it once. Pass ``cover=`` to share an explicitly precomputed
-    :func:`polygon_cover` instead (it must have been built from
-    ``split_antimeridian(polygons)`` at this ``res``).
+    The cover is the classified cover, cached per (polygon plan, res)
+    by default (:func:`cover_for`), so repeated joins against one
+    polygon set compute it once. Pass ``cover=`` to share an explicitly
+    precomputed one instead: it must be
+    ``polygon_cover(split_antimeridian(polygons), res, classify=True)``
+    at this ``res``. A cover without the ``full`` column (a bbox or
+    scanline cover) raises ValueError.
     """
     polys = split_antimeridian(polygons)
     if cover is None:
-        cover = cover_for(polygons, res, tight=tight)
+        cover = cover_for(polygons, res)
+    elif "full" not in cover.columns:
+        raise ValueError(
+            "pip_join: cover= must be a classified cover "
+            "(polygon_cover(split_antimeridian(polygons), res, "
+            "classify=True)); got columns " + ", ".join(cover.columns))
     pts = points
     if salt_n:
         from ..functions.grid import salted_repartition
         pts = salted_repartition(pts, cell_col, salt_n)
-    if "full" in cover.columns:
-        # classified cover (r6): candidates from FULL cells are inside by
-        # construction — the interpreted ray-cast fold runs only for
-        # boundary-cell candidates (OR short-circuits per row), and
-        # uniform-outside cells never entered the cover at all. The ring
-        # join carries _ck so each candidate meets only the antimeridian
-        # ring copy whose cover produced it (no fan-out).
-        cres = getattr(cover, "_osmpbf_coarse_res", None)
-        if cres is not None:
-            # coarsened cover: points probe BOTH their fine cell and
-            # its res-4 parent (the two row classes partition each
-            # polygon's interior, so every (point, polygon) pair
-            # matches exactly one cover row)
-            from ..functions.grid import RES_SHIFT, Y_SHIFT, cell_xy
-            k = 1 << _COARSE_STEP
-            _, x, y = cell_xy(cell_col)
-            parent = (F.lit(cres).cast("long") * F.lit(RES_SHIFT)
-                      + (x / k).cast("long") * F.lit(Y_SHIFT)
-                      + (y / k).cast("long"))
-            keyed = pts.withColumn(
-                "_jkey", F.explode(F.array(F.col(cell_col), parent)))
-            cand = (keyed.join(F.broadcast(cover),
-                               keyed["_jkey"] == cover["cell"])
-                    .drop("_jkey").drop(cover["cell"]))
-        else:
-            cand = (pts.join(F.broadcast(cover),
-                             pts[cell_col] == cover["cell"])
-                    .drop(cover["cell"]))
-        polys = polys.withColumn("_ck", F.xxhash64("ring"))
-        withring = cand.join(F.broadcast(polys), ["poly_id", "_ck"])
-        return (withring
-                .filter(F.col("full")
-                        | point_in_ring_expr("lon_nano", "lat_nano"))
-                .drop("ring", "full", "_ck"))
-    cand = pts.join(F.broadcast(cover),
-                    pts[cell_col] == cover["cell"]).drop(cover["cell"])
-    withring = cand.join(F.broadcast(polys), "poly_id")
+    # candidates from FULL cells are inside by construction — the
+    # interpreted ray-cast fold runs only for boundary-cell candidates
+    # (OR short-circuits per row), and uniform-outside cells never
+    # entered the cover at all. The ring join carries _ck so each
+    # candidate meets only the antimeridian ring copy whose cover
+    # produced it (no fan-out).
+    cres = getattr(cover, "_osmpbf_coarse_res", None)
+    if cres is not None:
+        # coarsened cover: points probe BOTH their fine cell and its
+        # res-4 parent (the two row classes partition each polygon's
+        # interior, so every (point, polygon) pair matches exactly one
+        # cover row)
+        from ..functions.grid import RES_SHIFT, Y_SHIFT, cell_xy
+        k = 1 << _COARSE_STEP
+        _, x, y = cell_xy(cell_col)
+        parent = (F.lit(cres).cast("long") * F.lit(RES_SHIFT)
+                  + (x / k).cast("long") * F.lit(Y_SHIFT)
+                  + (y / k).cast("long"))
+        keyed = pts.withColumn(
+            "_jkey", F.explode(F.array(F.col(cell_col), parent)))
+        cand = (keyed.join(F.broadcast(cover),
+                           keyed["_jkey"] == cover["cell"])
+                .drop("_jkey").drop(cover["cell"]))
+    else:
+        cand = (pts.join(F.broadcast(cover),
+                         pts[cell_col] == cover["cell"])
+                .drop(cover["cell"]))
+    polys = polys.withColumn("_ck", F.xxhash64("ring"))
+    withring = cand.join(F.broadcast(polys), ["poly_id", "_ck"])
     return (withring
-            .filter(point_in_ring_expr("lon_nano", "lat_nano"))
-            .drop("ring"))
+            .filter(F.col("full")
+                    | point_in_ring_expr("lon_nano", "lat_nano"))
+            .drop("ring", "full", "_ck"))

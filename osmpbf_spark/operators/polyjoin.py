@@ -10,11 +10,12 @@ reference joins elements by id only, /root/reference/src/indexed.rs:
 
 Shape at scale (the PIP recipe, one side heavier):
 
-1. **cover**: both sides expand to grid-cell covers
+1. **cover**: both sides expand to unclassified (poly_id, cell) covers
    (:func:`pip.polygon_cover`). The right side is broadcast-small by
-   contract (admin/zone layers); the left side is arbitrarily large and
-   its cover is computed distributed with ``tight=False`` (the scanline
-   variant broadcasts edge lists — only safe for the small side).
+   contract (admin/zone layers) and takes the ``tight="auto"`` cover;
+   the left side is arbitrarily large and its cover is computed
+   distributed with ``tight=False`` (the scanline variant broadcasts
+   edge lists — only safe for the small side).
 2. **candidates**: left cover ⋈ broadcast(right cover) on cell →
    DISTINCT (left, right) id pairs. The only shuffle of the candidate
    stage carries bare id pairs, never ring payloads.
@@ -25,11 +26,16 @@ Shape at scale (the PIP recipe, one side heavier):
    - boundary contact: any left edge × right edge segment intersection
      (orientation predicates in DECIMAL(38,0) — deltas < 2.2e12,
      products < 5e24, exact), including collinear overlap and
-     endpoint touches;
+     endpoint touches; edges are ROWS, met by a lat-band equi-join;
    - containment without contact: if no boundaries touch, each ring is
      either wholly inside or wholly outside the other, so ONE vertex
-     per side through the exact even-odd ray cast
-     (:func:`pip.point_in_ring_expr`) decides.
+     per side through the exact even-odd ray cast decides — its
+     crossing parity a row aggregate over the banded edges
+     (:func:`ray_cast_edge_sql`, the per-edge body of
+     :func:`pip.point_in_ring_expr`).
+
+   The whole refine is codegen'd SQL (:func:`_banded_refine`); no
+   higher-order lambda touches the DECIMAL math.
 
    ``relation`` reports which case fired: ``edges_cross`` (boundaries
    share ≥1 point) > ``left_within_right`` > ``right_within_left``.
@@ -59,12 +65,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.grid import GRID_RES_COARSE
-from .pip import (
-    point_in_ring_expr,
-    polygon_cover,
-    ring_bounds_sql,
-    split_antimeridian,
-)
+from .pip import polygon_cover, ring_bounds_sql, split_antimeridian
 
 __all__ = ["polygon_intersects_join", "segments_intersect_sql"]
 
@@ -150,8 +151,7 @@ def _ring_side(polys: DataFrame, out_id: str, ring: str) -> DataFrame:
     driver-side scan (code-review r5). ``_ck`` is the ring-content key
     (antimeridian copies of one poly_id must not pool in the banded
     refine's parity aggregates); ``_p0*`` the first vertex, the
-    containment probe point. Unused columns prune away in the hof
-    path."""
+    containment probe point."""
     return polys.select(F.col("poly_id").alias(out_id),
                         F.col("ring").alias(ring),
                         F.expr(ring_bounds_sql("ring", "poly_id"))
@@ -186,15 +186,13 @@ def _banded_refine(cand: DataFrame, lr: DataFrame, rr: DataFrame,
     """(left_id, right_id, ord) — the fully codegen'd refine
     (code-review r5): EDGES AS ROWS in a lat-band equi-join for
     boundary contact, and ray-cast PARITY AS A ROW AGGREGATE for
-    containment. No higher-order lambda touches the DECIMAL math.
-
-    The hof form evaluates nested ``exists(l_edges, a ->
-    exists(r_edges, b -> …))`` INTERPRETED (outside whole-stage
-    codegen — the CLAUDE.md invariant) and quadratic per pair, plus an
-    interpreted O(|ring|) ray-cast fold per pair. Here:
+    containment. No higher-order lambda touches the DECIMAL math —
+    a nested ``exists(l_edges, a -> exists(r_edges, b -> …))`` per
+    pair would run INTERPRETED (higher-order lambdas sit outside
+    whole-stage codegen) and quadratic per pair:
 
     - **combos** (``l_all``): candidate pairs join ring payloads once
-      per copy combination, bbox-filtered — same as the hof path.
+      per copy combination, bbox-filtered.
     - **cross leg**: left edges explode to rows, each replicated into
       the lat bands it spans (band height = one grid-cell row at
       ``res``); right edges band-explode on the broadcast-small side;
@@ -286,8 +284,7 @@ def _banded_refine(cand: DataFrame, lr: DataFrame, rr: DataFrame,
 
 
 def polygon_intersects_join(left: DataFrame, right: DataFrame, *,
-                            res: int = GRID_RES_COARSE,
-                            refine: str = "bands") -> DataFrame:
+                            res: int = GRID_RES_COARSE) -> DataFrame:
     """All (left_id, right_id, relation) pairs whose polygons intersect
     (share at least one point, boundary included — OGC `intersects`).
 
@@ -304,14 +301,10 @@ def polygon_intersects_join(left: DataFrame, right: DataFrame, *,
     :func:`segments_intersect_sql`), so no half-open ambiguity ever
     reaches the ray cast: it only decides strict inside/outside.
 
-    ``refine``: ``"bands"`` (default) runs the whole refine codegen'd
-    and near-linear in edge count (:func:`_banded_refine`); ``"hof"``
-    keeps the original nested-``exists`` per-pair form, competitive
-    only when BOTH layers are tiny rings (≲ 10 edges — measured
-    crossover in BENCH_NEWOPS.md) and kept mostly as the A/B
-    reference."""
-    if refine not in ("bands", "hof"):
-        raise ValueError(f"refine must be 'bands' or 'hof', got {refine!r}")
+    The refine is :func:`_banded_refine`: codegen'd and near-linear in
+    edge count (the per-pair nested-``exists`` form it replaced was
+    1.77× slower at 401-vertex zones and at parity with 4-edge zones,
+    BENCH_NEWOPS.md)."""
     ls = split_antimeridian(left)
     rs = split_antimeridian(right)
     # left cover distributed (tight=False: the scanline path broadcasts
@@ -322,38 +315,8 @@ def polygon_intersects_join(left: DataFrame, right: DataFrame, *,
         .select(F.col("poly_id").alias("right_id"), "cell")
     cand = (lc.join(F.broadcast(rc), "cell")
             .select("left_id", "right_id").distinct())
-    lr = _ring_side(ls, "left_id", "l_ring")
-    rr = _ring_side(rs, "right_id", "r_ring")
-    if refine == "bands":
-        scored = _banded_refine(cand, lr, rr, res)
-    else:
-        combos = (cand.join(lr, "left_id")
-                  .join(F.broadcast(rr), "right_id")
-                  .filter((F.col("l_ring_bb.max_lon")
-                           >= F.col("r_ring_bb.min_lon"))
-                          & (F.col("l_ring_bb.min_lon")
-                             <= F.col("r_ring_bb.max_lon"))
-                          & (F.col("l_ring_bb.max_lat")
-                             >= F.col("r_ring_bb.min_lat"))
-                          & (F.col("l_ring_bb.min_lat")
-                             <= F.col("r_ring_bb.max_lat")))
-                  .withColumn("l_edges", F.expr(_EDGES.format(r="l_ring")))
-                  .withColumn("r_edges", F.expr(_EDGES.format(r="r_ring"))))
-        cross_any = F.expr(
-            "exists(l_edges, a -> exists(r_edges, b -> "
-            + segments_intersect_sql("a", "b") + "))")
-        l0_in_r = point_in_ring_expr("element_at(l_ring, 1).lon_nano",
-                                     "element_at(l_ring, 1).lat_nano",
-                                     ring="r_ring")
-        r0_in_l = point_in_ring_expr("element_at(r_ring, 1).lon_nano",
-                                     "element_at(r_ring, 1).lat_nano",
-                                     ring="l_ring")
-        scored = (combos
-                  .withColumn("ord", F.when(cross_any, F.lit(1))
-                              .when(l0_in_r, F.lit(2))
-                              .when(r0_in_l, F.lit(3)))
-                  .filter(F.col("ord").isNotNull())
-                  .select("left_id", "right_id", "ord"))
+    scored = _banded_refine(cand, _ring_side(ls, "left_id", "l_ring"),
+                            _ring_side(rs, "right_id", "r_ring"), res)
     rel = F.create_map(*[x for k, v in _REL_NAMES.items()
                          for x in (F.lit(k), F.lit(v))])
     # multi-cell + antimeridian-copy + leg hits collapse here; the

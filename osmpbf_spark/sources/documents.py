@@ -142,53 +142,55 @@ def blob_metadata(documents: DataFrame) -> DataFrame:
 
 def join_payloads(meta: DataFrame, media: DataFrame, *,
                   broadcast_media: bool = False,
-                  media_join: str = "broadcast_meta",
                   columns=("doc_id", "blob_no", "blob_type", "payload")
                   ) -> DataFrame:
     """Attach payload bytes to blob metadata WITHOUT shuffling payloads.
 
     The fat ``payload`` column must never cross a shuffle at 100 TB, so the
     default plan broadcasts the narrow metadata side and streams the media
-    scan straight into the decode UDF (``media_join='broadcast_meta'``).
-    Alternatives: ``broadcast_media=True`` broadcasts the payload side
-    (only for tiny fixtures); ``media_join='shuffle'`` is the explicit
-    co-partitioned shuffle join for the regime where even the metadata
-    side exceeds broadcast limits AND the tables aren't co-bucketed —
-    at 10^12-doc scale the right answer is the co-bucketed Iceberg layout
-    (proven shuffle-free in tests/test_bucketed_join.py), not this.
+    scan straight into the decode UDF. ``broadcast_media=True`` broadcasts
+    the payload side instead (only for tiny fixtures). Where even the
+    metadata side exceeds broadcast limits, the answer is the co-bucketed
+    Iceberg layout (proven shuffle-free in tests/test_bucketed_join.py),
+    not a payload shuffle.
     """
     if broadcast_media:
         joined = meta.join(F.broadcast(media), "media_ref")
-    elif media_join == "broadcast_meta":
-        joined = media.join(F.broadcast(meta), "media_ref")
-    elif media_join == "shuffle":
-        joined = meta.join(media, "media_ref")
     else:
-        raise ValueError(f"unknown media_join: {media_join!r}")
+        joined = media.join(F.broadcast(meta), "media_ref")
     return joined.select(*columns)
 
 
-def _spread_for_decode(joined: DataFrame, documents: DataFrame,
-                       media: DataFrame, *, broadcast_media: bool,
-                       media_join: str,
-                       decode_partitions: int | None) -> DataFrame:
-    """Apply the caller's ``decode_partitions`` spread — UNLESS the
-    join's streaming side already arrives in exactly that many (hash-
-    balanced) partitions, in which case the repartition would shuffle
-    every payload byte 1:1 for nothing (r6, guide §2.4 "remove shuffles
+def _osmdata_payloads(documents: DataFrame, media: DataFrame, *,
+                      broadcast_media: bool,
+                      decode_partitions: int | None) -> DataFrame:
+    """(doc_id, blob_no, blob_type, payload) of every OSMData blob — the
+    shared preamble of the decode scans: prune to blob metadata, filter
+    blob_type='OSMData' BEFORE touching payloads (blob-type pruning,
+    src/reader.rs:74), :func:`join_payloads`, then the caller's
+    ``decode_partitions`` spread.
+
+    ``decode_partitions`` spreads fat blob rows across workers when the
+    blob count is small relative to the cluster (fixture/bench scale);
+    at production scale (millions of blobs) AQE's size-based coalescing is
+    right and ``decode_partitions`` should stay None. It is skipped when
+    the join's streaming side already arrives in exactly that many
+    (hash-balanced) partitions: the repartition would shuffle every
+    payload byte 1:1 for nothing (r6, guide §2.4 "remove shuffles
     outright": the bench feeds ``cpus*2``-partition synth tables into a
     ``decode_partitions=cpus*2`` decode — a pure pass-through Exchange
-    carrying the fat payload column). Only the broadcast join shapes
-    keep the streaming side's partitioning, so only they can skip."""
+    carrying the fat payload column). Both join shapes are broadcast
+    joins, so the streaming side keeps its partitioning."""
+    meta = blob_metadata(documents).filter(F.col("blob_type") == "OSMData")
+    joined = join_payloads(meta, media, broadcast_media=broadcast_media)
     if not decode_partitions:
         return joined
-    if media_join == "broadcast_meta" or broadcast_media:
-        base = documents if broadcast_media else media
-        try:
-            if base.rdd.getNumPartitions() == decode_partitions:
-                return joined
-        except Exception:
-            pass
+    base = documents if broadcast_media else media
+    try:
+        if base.rdd.getNumPartitions() == decode_partitions:
+            return joined
+    except Exception:
+        pass
     return joined.repartition(decode_partitions, "blob_no")
 
 
@@ -222,8 +224,7 @@ NODE_POINTS_DDL = ("id long, lat_nano long, lon_nano long, blob_no long, "
 
 def read_node_points(documents: DataFrame, media: DataFrame,
                      *, broadcast_media: bool = False,
-                     decode_partitions: int | None = None,
-                     media_join: str = "broadcast_meta") -> DataFrame:
+                     decode_partitions: int | None = None) -> DataFrame:
     """Pushdown fast path for spatial pipelines: decode ONLY node ids and
     nanodegree coordinates (skips string tables, tags, info, ways,
     relations inside the UDF — column pruning pushed through the Arrow
@@ -232,14 +233,9 @@ def read_node_points(documents: DataFrame, media: DataFrame,
     geometry is needed (PIP, kNN, tiling)."""
     from ..pbf.decode import decode_node_points_batch
 
-    meta = blob_metadata(documents).filter(F.col("blob_type") == "OSMData")
-    joined = join_payloads(meta, media, broadcast_media=broadcast_media,
-                           media_join=media_join)
-    joined = _spread_for_decode(joined, documents, media,
-                                broadcast_media=broadcast_media,
-                                media_join=media_join,
-                                decode_partitions=decode_partitions)
-
+    joined = _osmdata_payloads(documents, media,
+                               broadcast_media=broadcast_media,
+                               decode_partitions=decode_partitions)
     return joined.mapInArrow(_batch_decoder(decode_node_points_batch),
                              NODE_POINTS_DDL)
 
@@ -253,8 +249,7 @@ STRINGTABLE_DDL = "doc_id string, blob_no long, sidx int, value binary"
 
 def read_elements_raw(documents: DataFrame, media: DataFrame,
                       *, broadcast_media: bool = False,
-                      decode_partitions: int | None = None,
-                      media_join: str = "broadcast_meta") -> DataFrame:
+                      decode_partitions: int | None = None) -> DataFrame:
     """Raw-access projection scan (SURVEY.md §2.3 P8/P12): per element,
     the still-delta-coded way refs (Way::raw_refs,
     src/elements.rs:219-221) and the unresolved string-table (key, val)
@@ -264,21 +259,15 @@ def read_elements_raw(documents: DataFrame, media: DataFrame,
     coordinates, Info, and all cumsum work (the node-points pattern)."""
     from ..pbf.decode import decode_raw_access_batch
 
-    meta = blob_metadata(documents).filter(F.col("blob_type") == "OSMData")
-    joined = join_payloads(meta, media, broadcast_media=broadcast_media,
-                           media_join=media_join)
-    joined = _spread_for_decode(joined, documents, media,
-                                broadcast_media=broadcast_media,
-                                media_join=media_join,
-                                decode_partitions=decode_partitions)
-
+    joined = _osmdata_payloads(documents, media,
+                               broadcast_media=broadcast_media,
+                               decode_partitions=decode_partitions)
     return joined.mapInArrow(_batch_decoder(decode_raw_access_batch),
                              RAW_ACCESS_DDL)
 
 
 def read_stringtables(documents: DataFrame, media: DataFrame,
-                      *, broadcast_media: bool = False,
-                      media_join: str = "broadcast_meta") -> DataFrame:
+                      *, broadcast_media: bool = False) -> DataFrame:
     """Per-block dictionary scan (SURVEY.md §2.3 P16, raw_stringtable
     src/block.rs:148-151): one row per string-table entry, as raw BYTES
     (entries are not guaranteed UTF-8 — the decoded-tag path silently
@@ -287,10 +276,9 @@ def read_stringtables(documents: DataFrame, media: DataFrame,
     (doc_id, blob_no, sidx)."""
     from ..pbf.decode import decode_stringtable_batch
 
-    meta = blob_metadata(documents).filter(F.col("blob_type") == "OSMData")
-    joined = join_payloads(meta, media, broadcast_media=broadcast_media,
-                           media_join=media_join)
-
+    joined = _osmdata_payloads(documents, media,
+                               broadcast_media=broadcast_media,
+                               decode_partitions=None)
     return joined.mapInArrow(_batch_decoder(decode_stringtable_batch),
                              STRINGTABLE_DDL)
 
@@ -357,8 +345,7 @@ ERRORS_DDL = ("doc_id string, blob_no long, error string")
 
 def read_elements_quarantine(documents: DataFrame, media: DataFrame,
                              *, broadcast_media: bool = False,
-                             decode_partitions: int | None = None,
-                             media_join: str = "broadcast_meta"
+                             decode_partitions: int | None = None
                              ) -> tuple[DataFrame, DataFrame]:
     """Like :func:`read_elements` but corrupt blobs are quarantined to an
     errors DataFrame (with lineage) instead of failing the job — the
@@ -383,13 +370,9 @@ def read_elements_quarantine(documents: DataFrame, media: DataFrame,
 
     from ..pbf.decode import ELEMENT_SCHEMA, decode_blob_batch
 
-    meta = blob_metadata(documents).filter(F.col("blob_type") == "OSMData")
-    joined = join_payloads(meta, media, broadcast_media=broadcast_media,
-                           media_join=media_join)
-    joined = _spread_for_decode(joined, documents, media,
-                                broadcast_media=broadcast_media,
-                                media_join=media_join,
-                                decode_partitions=decode_partitions)
+    joined = _osmdata_payloads(documents, media,
+                               broadcast_media=broadcast_media,
+                               decode_partitions=decode_partitions)
 
     def bisect(rows):
         """yields (record_batch|None, [(doc_id, blob_no, err), ...])"""
@@ -443,8 +426,7 @@ def read_elements_quarantine(documents: DataFrame, media: DataFrame,
 
 def read_elements(documents: DataFrame, media: DataFrame,
                   *, broadcast_media: bool = False,
-                  decode_partitions: int | None = None,
-                  media_join: str = "broadcast_meta") -> DataFrame:
+                  decode_partitions: int | None = None) -> DataFrame:
     """The engine's top-level scan (SURVEY.md §2.1 S6): documents+media →
     canonical ``elements`` DataFrame.
 
@@ -455,21 +437,13 @@ def read_elements(documents: DataFrame, media: DataFrame,
     elements out; no per-row Python) → derived double coordinates as
     Catalyst expressions (doubles derived, never authoritative).
 
-    The default join shape is ``broadcast_meta``: the fat payload column
-    never crosses a shuffle (see :func:`join_payloads`); a plan audit
-    pins this in tests/test_store_plans.py.
+    The default join broadcasts the metadata side: the fat payload
+    column never crosses a shuffle (see :func:`join_payloads`); a plan
+    audit pins this in tests/test_store_plans.py.
     """
-    meta = blob_metadata(documents).filter(F.col("blob_type") == "OSMData")
-    joined = join_payloads(meta, media, broadcast_media=broadcast_media,
-                           media_join=media_join)
-    # spread fat blob rows across workers when the blob count is small
-    # relative to the cluster (fixture/bench scale); at production
-    # scale (millions of blobs) AQE's size-based coalescing is right
-    # and decode_partitions should stay None
-    joined = _spread_for_decode(joined, documents, media,
-                                broadcast_media=broadcast_media,
-                                media_join=media_join,
-                                decode_partitions=decode_partitions)
+    joined = _osmdata_payloads(documents, media,
+                               broadcast_media=broadcast_media,
+                               decode_partitions=decode_partitions)
     elements = joined.mapInArrow(_decode_batches, ELEMENTS_DDL)
     return with_coordinate_columns(elements)
 

@@ -22,7 +22,7 @@ module ingests a framed PBF file of any size in two passes:
    in :func:`pbf_frame_index`), and a ``mapInArrow`` over index ranges
    slices each frame's payload out of the mmap into Arrow batches —
    payload bytes never pass through the driver and never shuffle
-   (read_elements' broadcast_meta default).
+   (read_elements broadcasts the metadata side).
 
 ``blob_no`` is the index position (identical to the single-node
 ``split_fileblocks`` numbering), so both ingest paths are

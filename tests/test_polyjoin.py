@@ -79,18 +79,17 @@ def _relation(ra, rb):
     return None
 
 
-def _run(spark, left_rows, right_rows, **kw):
+def _run(spark, left_rows, right_rows):
     out = polygon_intersects_join(make_polygons(spark, left_rows),
-                                  make_polygons(spark, right_rows), **kw)
+                                  make_polygons(spark, right_rows))
     return {(r["left_id"], r["right_id"]): r["relation"]
             for r in out.collect()}
 
 
 # ---------------------------------------------------------------- tests
 
-@pytest.mark.parametrize("refine", ["bands", "hof"])
-def test_golden_relations(spark, refine):
-    got = _run(spark, refine=refine, left_rows=[
+def test_golden_relations(spark):
+    got = _run(spark, left_rows=[
         ("overlap", sq(0, 0, B)),
         ("inside", sq(B // 5, B // 5, B // 10)),
         ("far", sq(50 * B, 50 * B, B)),
@@ -121,8 +120,7 @@ def test_star_of_david_crosses_without_vertex_containment(spark):
     assert got == {("up", "down"): "edges_cross"}
 
 
-@pytest.mark.parametrize("refine", ["bands", "hof"])
-def test_property_matches_exact_oracle(spark, refine):
+def test_property_matches_exact_oracle(spark):
     rng = random.Random(42)
 
     def rand_poly(cx, cy, rad, k):
@@ -158,14 +156,14 @@ def test_property_matches_exact_oracle(spark, refine):
             rel = _relation(_xy(lring), _xy(rring))
             if rel:
                 expected[(lid, rid)] = rel
-    got = _run(spark, lefts, rights, refine=refine)
+    got = _run(spark, lefts, rights)
     assert got == expected
     assert expected, "oracle produced no intersections — inputs too sparse"
     # and the transpose is consistent
     flip = {"left_within_right": "right_within_left",
             "right_within_left": "left_within_right",
             "edges_cross": "edges_cross"}
-    got_t = _run(spark, rights, lefts, refine=refine)
+    got_t = _run(spark, rights, lefts)
     assert got_t == {(b, a): flip[rel] for (a, b), rel in got.items()}
 
 
@@ -176,9 +174,8 @@ def test_antimeridian_frames(spark):
     assert max(lon for _, lon in a) > 180 * B
     b = ("B", sq(0, int(-179.3 * B), B // 10))
     c = ("C", sq(0, -175 * B, B // 10))
-    for refine in ("bands", "hof"):
-        got = _run(spark, [b, c], [("A", a)], refine=refine)
-        assert got == {("B", "A"): "left_within_right"}, refine
+    got = _run(spark, [b, c], [("A", a)])
+    assert got == {("B", "A"): "left_within_right"}
 
 
 def test_partitioning_independence(spark):

@@ -53,26 +53,49 @@ def _zoo_points(spark, n=120_000):
     return with_grid_cells(pts, res=GRID_RES_FINE)
 
 
-def test_classified_cover_pip_join_matches_unclassified(spark):
+def test_classified_cover_pip_join_matches_unclassified(spark,
+                                                       pip_brute_force):
     """pip_join over the classified (interval-tested, coarsened) cover
-    must emit EXACTLY the rows the plain bbox cover + full ray cast
-    emits — incl. antimeridian copies and sub-cell polygons."""
+    must emit EXACTLY the rows of the unclassified, cover-free brute
+    force (every point × every ring copy, full ray cast) — incl.
+    antimeridian copies and sub-cell polygons."""
+    from osmpbf_spark.operators.pip import make_polygons, pip_join
+    pts = _zoo_points(spark)
+    polys = make_polygons(spark, _POLY_ZOO)
+    old = pip_brute_force(pts, polys).select("poly_id", "id")
+    new = pip_join(pts, polys, res=GRID_RES_FINE).select("poly_id", "id")
+    assert old.count() == new.count() > 0
+    assert old.exceptAll(new).isEmpty()
+    assert new.exceptAll(old).isEmpty()
+
+
+def test_pip_counters_pinned(spark, pip_brute_force):
+    """Drift-free counters of the PIP path: the classified cover's row
+    count for the benchmark's three boxes (bench.py / perfbench) at res
+    16, and pip_join's match count for a fixed seeded point set. A
+    cover change that alters either is a plan change, not noise."""
+    import random
+
     from osmpbf_spark.operators.pip import (
         make_polygons,
         pip_join,
         polygon_cover,
         split_antimeridian,
     )
-    pts = _zoo_points(spark)
-    polys = make_polygons(spark, _POLY_ZOO)
-    old_cover = polygon_cover(split_antimeridian(polys), GRID_RES_FINE,
-                              tight="auto")
-    old = pip_join(pts, polys, res=GRID_RES_FINE,
-                   cover=old_cover).select("poly_id", "id")
-    new = pip_join(pts, polys, res=GRID_RES_FINE).select("poly_id", "id")
-    assert old.count() == new.count() > 0
-    assert old.exceptAll(new).isEmpty()
-    assert new.exceptAll(old).isEmpty()
+    polys = make_polygons(spark, [
+        _box("megacity", int(42.9 * B), int(8.9 * B), int(43.1 * B),
+             int(9.1 * B)),
+        _box("band", 44 * B, 5 * B, 46 * B, 15 * B),
+        _box("corner", 40 * B, 5 * B, 41 * B, 6 * B)])
+    assert polygon_cover(split_antimeridian(polys), 16,
+                         classify=True).count() == 71_333
+    rng = random.Random(20261018)
+    pts = with_grid_cells(spark.createDataFrame(
+        [(i, rng.randrange(39 * B, 47 * B), rng.randrange(4 * B, 16 * B))
+         for i in range(20_000)], "id long, lat_nano long, lon_nano long"),
+        res=16)
+    assert pip_join(pts, polys, res=16).count() == 4_373
+    assert pip_brute_force(pts, polys).count() == 4_373
 
 
 def test_classified_cover_classes_partition_each_polygon(spark):

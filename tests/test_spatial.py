@@ -270,10 +270,10 @@ def test_grid_knn_join_skewed_hot_cell(spark):
         assert [i for _, i in sorted(got[qid])] == want, f"query {qid}"
 
 
-def test_antimeridian_polygon_pip(spark):
+def test_antimeridian_polygon_pip(spark, pip_brute_force):
     # dateline-crossing rectangle, lon 175°..185° unwrapped (VERDICT r2
     # #8): points on BOTH sides of ±180° must match; just-outside points
-    # must not. Verified on the auto, scanline, and bbox cover paths.
+    # must not — and the cover-free brute force agrees.
     B = 1_000_000_000
     ring = [(-5 * B, 175 * B), (-5 * B, 185 * B), (5 * B, 185 * B),
             (5 * B, 175 * B), (-5 * B, 175 * B)]
@@ -289,11 +289,25 @@ def test_antimeridian_polygon_pip(spark):
     res = 8
     pdf = with_grid_cells(spark.createDataFrame(
         pts, "id long, lat_nano long, lon_nano long"), res=res)
-    want = {1, 2, 3}
-    for tight in ("auto", True, False):
-        got = {r["id"] for r in
-               pip_join(pdf, polys, res=res, tight=tight).collect()}
-        assert got == want, (tight, got)
+    got = {r["id"] for r in pip_join(pdf, polys, res=res).collect()}
+    brute = {r["id"] for r in pip_brute_force(pdf, polys).collect()}
+    assert got == brute == {1, 2, 3}, (got, brute)
+
+
+def test_pip_join_rejects_unclassified_cover(spark):
+    # pip_join trusts a cover's `full` flag to skip the ray cast; a bbox
+    # or scanline cover has no such column and must be refused loudly
+    from osmpbf_spark.operators.pip import polygon_cover, split_antimeridian
+    B = 1_000_000_000
+    polys = make_polygons(spark, [("sq", [(0, 0), (B, 0), (B, B), (0, B),
+                                          (0, 0)])])
+    pdf = with_grid_cells(spark.createDataFrame(
+        [(1, B // 2, B // 2)], "id long, lat_nano long, lon_nano long"),
+        res=8)
+    for tight in (True, False):
+        cover = polygon_cover(split_antimeridian(polys), 8, tight=tight)
+        with pytest.raises(ValueError, match="classified cover"):
+            pip_join(pdf, polys, res=8, cover=cover)
 
 
 def test_auto_cover_is_bbox_for_quadrilaterals(spark):
@@ -310,12 +324,13 @@ def test_auto_cover_is_bbox_for_quadrilaterals(spark):
     bbox = polygon_cover(polys, res, tight=False).count()
     scan = polygon_cover(polys, res, tight=True).count()
     assert auto == bbox            # 4 edges → bbox path
-    assert scan < bbox             # the scanline does shrink a diamond…
-    # …but the exact refine makes all three agree on results (covered by
-    # test_antimeridian_polygon_pip's three-way loop above).
+    assert scan < bbox             # the scanline does shrink a diamond
+    # (no pip_join check here: pip_join always runs the classified
+    # cover; the unclassified shapes feed polyjoin's candidate stage)
 
 
-def test_tight_cover_tightens_each_antimeridian_copy(spark):
+def test_tight_cover_tightens_each_antimeridian_copy(spark,
+                                                     pip_brute_force):
     # code-review r3: the scanline band join must key edges per ring
     # COPY (poly_id alone pools the split copies' edges and the span
     # degenerates to the bbox row). A dateline-crossing diamond must
@@ -329,19 +344,17 @@ def test_tight_cover_tightens_each_antimeridian_copy(spark):
     scan = polygon_cover(polys, res, tight=True).count()
     bbox = polygon_cover(polys, res, tight=False).count()
     assert scan < bbox * 0.75, (scan, bbox)
-    # and PIP results agree between the two covers (exact refine)
+    # and pip_join over the dateline diamond matches the cover-free
+    # brute force
     pts = [(i * 41 + j, (i - 6) * B, ((174 + j + 180) % 360 - 180) * B)
            for i in range(13) for j in range(13)]   # lons 174°…−174°
     pdf = with_grid_cells(spark.createDataFrame(
         pts, "id long, lat_nano long, lon_nano long"), res=res)
-    got_t = {r["id"] for r in
-             pip_join(pdf, make_polygons(spark, [("xd", diamond)]),
-                      res=res, tight=True).collect()}
-    got_b = {r["id"] for r in
-             pip_join(pdf, make_polygons(spark, [("xd", diamond)]),
-                      res=res, tight=False).collect()}
-    assert got_t == got_b
-    assert got_t, "point grid must actually hit the dateline diamond"
+    xd = make_polygons(spark, [("xd", diamond)])
+    got = {r["id"] for r in pip_join(pdf, xd, res=res).collect()}
+    brute = {r["id"] for r in pip_brute_force(pdf, xd).collect()}
+    assert got == brute
+    assert got, "point grid must actually hit the dateline diamond"
 
 
 def test_cosine_pandas_null_rows_propagate_null(spark):

@@ -129,7 +129,6 @@ def main():
                          " — same geometry, realistic edge counts)")
     ap.add_argument("--building-verts", type=int, default=5)
     ap.add_argument("--res", type=int, default=12)
-    ap.add_argument("--refine", choices=["bands", "hof"], default="bands")
     ap.add_argument("--cpus", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
@@ -169,8 +168,7 @@ def main():
     exp_total, exp_within = expected_counts(gb, bp, hb, gz, zp, hz, n_b)
 
     t0 = time.time()
-    out = (polygon_intersects_join(buildings, zones, res=args.res,
-                                   refine=args.refine)
+    out = (polygon_intersects_join(buildings, zones, res=args.res)
            .groupBy("relation").count().collect())
     wall = time.time() - t0
     got = {r["relation"]: r["count"] for r in out}
@@ -184,7 +182,7 @@ def main():
           and exp_within > 0 and exp_total > exp_within)
     print(json.dumps({
         "buildings": n_b, "zones": n_z, "cpus": args.cpus,
-        "zone_verts": args.zone_verts, "refine": args.refine,
+        "zone_verts": args.zone_verts,
         "res": args.res, "wall_sec": round(wall, 2),
         "pairs": total, "pairs_per_sec": round(total / wall),
         "buildings_per_sec": round(n_b / wall),
