@@ -7,8 +7,9 @@ mmap path /root/reference/src/mmap_blob.rs:39-77).
     python examples/ingest_planet.py [file.osm.pbf]
 
 Without an argument, a synthetic multi-block file is written to /tmp and
-ingested with deliberately tiny chunks so the chunked frame scan +
-contiguity gate + mmap payload fetch all exercise.
+ingested with deliberately tiny chunks so the chunked frame scan and
+contiguity gate exercise; the decode tasks then slice each blob's byte
+range out of the mmap'd file themselves.
 """
 
 import os

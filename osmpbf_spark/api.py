@@ -5,7 +5,7 @@ reference and its engine equivalent):
 
 | reference (Rust)                         | engine (PySpark)            |
 |------------------------------------------|-----------------------------|
-| ElementReader::from_path(p)              | Engine.from_pbf_bytes / from_tables |
+| ElementReader::from_path(p)              | Engine.from_pbf_path / from_pbf_bytes / from_tables |
 | reader.for_each(|el| …)                  | engine.elements() → any DataFrame op |
 | reader.par_map_reduce(map, id, reduce)   | engine.elements().groupBy().agg(…) — Catalyst plans partial+final |
 | Element::Node/Way/Relation match         | filter(element_type = …)    |
@@ -34,13 +34,16 @@ from pyspark.sql import functions as F
 
 
 class Engine:
-    """Bound to a (documents, media) pair — the engine's input tables."""
+    """Bound to a (documents, media) pair — the engine's input tables —
+    or, from :meth:`from_pbf_path`, to a raw PBF file, whose scans decode
+    straight from the file's byte ranges."""
 
     def __init__(self, spark: SparkSession, documents: DataFrame,
                  media: DataFrame):
         self.spark = spark
         self.documents = documents
         self.media = media
+        self._file = None       # ingest.PbfFile of a file-backed engine
 
     # -- constructors -----------------------------------------------------
     @classmethod
@@ -57,12 +60,16 @@ class Engine:
     def from_pbf_path(cls, spark: SparkSession, path: str,
                       **kwargs) -> "Engine":
         """Distributed, bounded-memory ingest of a raw *.osm.pbf file of
-        any size (chunked frame scan + mmap payload fetch; see
-        sources/ingest.py). This is the production path for planet-scale
-        files; from_pbf_bytes remains for in-memory fixtures."""
-        from .sources.ingest import read_pbf_documents
-        docs, media = read_pbf_documents(spark, path, **kwargs)
-        return cls(spark, docs, media)
+        any size (chunked frame scan; each decode task maps the file and
+        slices its blobs' byte ranges itself; see sources/ingest.py).
+        This is the production path for planet-scale files;
+        from_pbf_bytes remains for in-memory fixtures. ``documents`` and
+        ``media`` hold the same file as tables."""
+        from .sources.ingest import read_pbf_file
+        f = read_pbf_file(spark, path, **kwargs)
+        eng = cls(spark, f.documents, f.media)
+        eng._file = f
+        return eng
 
     @classmethod
     def from_tables(cls, spark: SparkSession, documents_path: str,
@@ -71,9 +78,19 @@ class Engine:
                    spark.read.parquet(media_path))
 
     # -- scans ------------------------------------------------------------
+    def _file_scan(self, decode_fn, ddl: str, **kwargs) -> DataFrame:
+        from .sources.documents import read_blob_ranges
+        return read_blob_ranges(self._file.blobs, self._file.path,
+                                decode_fn, ddl, **kwargs)
+
     def elements(self, **kwargs) -> DataFrame:
         from .sources.documents import read_elements
-        return read_elements(self.documents, self.media, **kwargs)
+        if self._file is None:
+            return read_elements(self.documents, self.media, **kwargs)
+        from .pbf.decode import decode_blob_batch
+        from .sources.documents import ELEMENTS_DDL, with_coordinate_columns
+        return with_coordinate_columns(
+            self._file_scan(decode_blob_batch, ELEMENTS_DDL, **kwargs))
 
     def nodes(self, **kwargs) -> DataFrame:
         return self.elements(**kwargs).filter(
@@ -91,18 +108,35 @@ class Engine:
         still-delta-coded way refs (Way::raw_refs,
         src/elements.rs:219-221; raw_tags, src/elements.rs:542-564)."""
         from .sources.documents import read_elements_raw
-        return read_elements_raw(self.documents, self.media, **kwargs)
+        if self._file is None:
+            return read_elements_raw(self.documents, self.media, **kwargs)
+        from .pbf.decode import decode_raw_access_batch
+        from .sources.documents import RAW_ACCESS_DDL
+        return self._file_scan(decode_raw_access_batch, RAW_ACCESS_DDL,
+                               **kwargs)
 
     def stringtables(self) -> DataFrame:
         """Per-block dictionary as raw bytes (raw_stringtable,
         src/block.rs:148-151); join key (doc_id, blob_no, sidx) resolves
         ``elements_raw()`` index pairs."""
         from .sources.documents import read_stringtables
-        return read_stringtables(self.documents, self.media)
+        if self._file is None:
+            return read_stringtables(self.documents, self.media)
+        from .pbf.decode import decode_stringtable_batch
+        from .sources.documents import STRINGTABLE_DDL
+        return self._file_scan(decode_stringtable_batch, STRINGTABLE_DDL)
 
     def header(self) -> DataFrame:
         from .sources.documents import read_header
-        return read_header(self.documents, self.media)
+        if self._file is None:
+            return read_header(self.documents, self.media)
+        from .sources.documents import (
+            HEADER_DDL,
+            HEADER_KEYS,
+            decode_header_batch,
+        )
+        return self._file_scan(decode_header_batch, HEADER_DDL,
+                               blob_type="OSMHeader", keys=HEADER_KEYS)
 
     def blob_metadata(self) -> DataFrame:
         from .sources.documents import blob_metadata

@@ -180,10 +180,6 @@ def unzigzag(values: np.ndarray) -> np.ndarray:
             ^ -(values & np.uint64(1)).astype(np.int64))
 
 
-def decode_packed_sint64(buf) -> np.ndarray:
-    return unzigzag(decode_packed_u64(buf))
-
-
 def decode_packed_sint64_delta(buf) -> np.ndarray:
     """DELTA-coded packed sint64 (DenseNodes id/lat/lon, way refs, memids):
     zigzag decode then cumulative sum (/root/reference/src/dense.rs:148-151).
@@ -346,15 +342,6 @@ def scan_messages_vec(bufs: list, *, varint_fields: tuple,
             raise ValueError("truncated LEN field")
         active = active & (cur < ends)
     return big, vals, spans
-
-
-def gather_spans(big: np.ndarray, starts: np.ndarray,
-                 lens: np.ndarray) -> list:
-    """(starts, lens) spans into ``big`` → list of bytes payloads
-    (b'' where len 0) — for consumers that need per-message buffers
-    (Info submessages)."""
-    return [big[s:s + ln].tobytes() if ln else b""
-            for s, ln in zip(starts.tolist(), lens.tolist())]
 
 
 def decode_packed_u64_spans(big: np.ndarray, starts: np.ndarray,

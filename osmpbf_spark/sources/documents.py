@@ -8,7 +8,9 @@ store at production scale). Reading elements is:
 
     documents → explode media spans → join media payloads → mapInArrow decode
 
-which is the Spark lifecycle equivalent of the reference's
+(a file-backed ``Engine`` skips the join: its decode tasks slice each
+blob out of the raw file themselves, :func:`read_blob_ranges`), which
+is the Spark lifecycle equivalent of the reference's
 ``ElementReader::for_each`` trace (SURVEY.md §3.1): Catalyst prunes the
 payload column unless the decode UDF is in the plan, and the ``blob_type``
 predicate is pushed to the scan — the analogues of lazy decode and
@@ -194,23 +196,48 @@ def _osmdata_payloads(documents: DataFrame, media: DataFrame, *,
     return joined.repartition(decode_partitions, "blob_no")
 
 
-def _batch_decoder(decode_fn):
-    """mapInArrow generator over (doc_id, blob_no, blob_type, payload)
-    batches: skip empties, feed row tuples to ``decode_fn``, yield
-    non-empty output batches.  Shared by every blob-decode scan so
-    batch-handling fixes land in one place."""
+def _mmap_file(path: str):
+    import mmap
+    f = open(path, "rb")
+    return f, mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
+
+
+BLOB_KEYS = ("doc_id", "blob_no", "blob_type")
+
+
+def _batch_decoder(decode_fn, path: str | None = None, keys=BLOB_KEYS):
+    """mapInArrow generator over blob batches: skip empties, feed
+    ``(*keys, payload)`` row tuples to ``decode_fn``, yield non-empty
+    output batches.  Shared by every blob-decode scan so batch-handling
+    fixes land in one place.
+
+    The payload comes from the batch's ``payload`` column, or, given the
+    ``path`` of a raw PBF file, from the ``(body_off, datasize)`` byte
+    range of each row: the task maps the file once (on its first
+    non-empty batch) and slices every blob body out of the map itself,
+    so payload bytes never enter the JVM."""
     def batches(iterator):
-        for batch in iterator:
-            if batch.num_rows == 0:
-                continue
-            out = decode_fn(zip(
-                batch.column("doc_id").to_pylist(),
-                batch.column("blob_no").to_pylist(),
-                batch.column("blob_type").to_pylist(),
-                batch.column("payload").to_pylist(),
-            ))
-            if out.num_rows:
-                yield out
+        f = mm = None
+        try:
+            for batch in iterator:
+                if batch.num_rows == 0:
+                    continue
+                if path is None:
+                    payloads = batch.column("payload").to_pylist()
+                else:
+                    if mm is None:
+                        f, mm = _mmap_file(path)
+                    payloads = [mm[o:o + n] for o, n in zip(
+                        batch.column("body_off").to_pylist(),
+                        batch.column("datasize").to_pylist())]
+                out = decode_fn(zip(
+                    *(batch.column(k).to_pylist() for k in keys), payloads))
+                if out.num_rows:
+                    yield out
+        finally:
+            if mm is not None:
+                mm.close()
+                f.close()
     return batches
 
 
@@ -292,52 +319,43 @@ HEADER_DDL = ("doc_id string, blob_no long, bbox_left double, "
               "osmosis_replication_base_url string")
 
 
+def decode_header_batch(rows):
+    """(doc_id, blob_no, payload) of OSMHeader blobs → one HEADER_DDL row
+    each."""
+    import pyarrow as pa
+
+    from ..pbf.decode import decompress_blob, parse_header_block
+
+    fields = ("required_features", "optional_features", "writingprogram",
+              "source", "osmosis_replication_timestamp",
+              "osmosis_replication_sequence_number",
+              "osmosis_replication_base_url")
+    cols = {k: [] for k in ("doc_id", "blob_no", "bbox_left", "bbox_right",
+                            "bbox_top", "bbox_bottom") + fields}
+    for d, b, p in rows:
+        h = parse_header_block(decompress_blob(bytes(p)))
+        bb = h["bbox"] or {}
+        for col, v in zip(cols.values(), (
+                d, b, bb.get("left"), bb.get("right"), bb.get("top"),
+                bb.get("bottom"), *(h[k] for k in fields))):
+            col.append(v)
+    return pa.RecordBatch.from_pydict(cols)
+
+
+HEADER_KEYS = ("doc_id", "blob_no")
+
+
 def read_header(documents: DataFrame, media: DataFrame,
                 *, broadcast_media: bool = True) -> DataFrame:
     """OSMHeader blobs → one metadata row per header (HeaderBlock
     accessors, /root/reference/src/block.rs:21-86, incl. the osmosis
     replication checkpoint fields). Tiny result — the engine's ``header``
     table."""
-    import pyarrow as pa
-
-    from ..pbf.decode import decompress_blob, parse_header_block
-
     meta = blob_metadata(documents).filter(F.col("blob_type") == "OSMHeader")
     joined = join_payloads(meta, media, broadcast_media=broadcast_media,
-                           columns=("doc_id", "blob_no", "payload"))
-
-    def batches(it):
-        for batch in it:
-            rows = {k: [] for k in (
-                "doc_id", "blob_no", "bbox_left", "bbox_right", "bbox_top",
-                "bbox_bottom", "required_features", "optional_features",
-                "writingprogram", "source", "osmosis_replication_timestamp",
-                "osmosis_replication_sequence_number",
-                "osmosis_replication_base_url")}
-            for d, b, p in zip(batch.column("doc_id").to_pylist(),
-                               batch.column("blob_no").to_pylist(),
-                               batch.column("payload").to_pylist()):
-                h = parse_header_block(decompress_blob(bytes(p)))
-                bb = h["bbox"] or {}
-                rows["doc_id"].append(d)
-                rows["blob_no"].append(b)
-                rows["bbox_left"].append(bb.get("left"))
-                rows["bbox_right"].append(bb.get("right"))
-                rows["bbox_top"].append(bb.get("top"))
-                rows["bbox_bottom"].append(bb.get("bottom"))
-                rows["required_features"].append(h["required_features"])
-                rows["optional_features"].append(h["optional_features"])
-                rows["writingprogram"].append(h["writingprogram"])
-                rows["source"].append(h["source"])
-                rows["osmosis_replication_timestamp"].append(
-                    h["osmosis_replication_timestamp"])
-                rows["osmosis_replication_sequence_number"].append(
-                    h["osmosis_replication_sequence_number"])
-                rows["osmosis_replication_base_url"].append(
-                    h["osmosis_replication_base_url"])
-            if rows["doc_id"]:
-                yield pa.RecordBatch.from_pydict(rows)
-    return joined.mapInArrow(batches, HEADER_DDL)
+                           columns=HEADER_KEYS + ("payload",))
+    return joined.mapInArrow(
+        _batch_decoder(decode_header_batch, keys=HEADER_KEYS), HEADER_DDL)
 
 
 ERRORS_DDL = ("doc_id string, blob_no long, error string")
@@ -446,6 +464,22 @@ def read_elements(documents: DataFrame, media: DataFrame,
                                decode_partitions=decode_partitions)
     elements = joined.mapInArrow(_decode_batches, ELEMENTS_DDL)
     return with_coordinate_columns(elements)
+
+
+def read_blob_ranges(blobs: DataFrame, path: str, decode_fn, ddl: str, *,
+                     blob_type: str = "OSMData", keys=BLOB_KEYS,
+                     decode_partitions: int | None = None) -> DataFrame:
+    """File-backed decode scan: ``blobs`` is a raw PBF file's blob-range
+    table (``ingest.BLOBS_DDL``); each task maps the file at ``path`` once
+    and feeds ``decode_fn`` the bodies of its ``blob_type`` rows (see
+    :func:`_batch_decoder`). The plan is one Python node over the range
+    table: no payload column, no join, no exchange. Same kernels, output
+    and fail-fast errors as the documents-table scans;
+    ``decode_partitions`` hash-spreads the (narrow) range rows."""
+    rows = blobs.filter(F.col("blob_type") == blob_type)
+    if decode_partitions:
+        rows = rows.repartition(decode_partitions, "blob_no")
+    return rows.mapInArrow(_batch_decoder(decode_fn, path, keys), ddl)
 
 
 def with_coordinate_columns(elements: DataFrame) -> DataFrame:

@@ -16,13 +16,16 @@ module ingests a framed PBF file of any size in two passes:
    gaps, so any resync false-positive, corruption, or inter-frame
    garbage surfaces as a hard ValueError here (fail-fast, matching the
    reference's error-latching semantics).
-2. **Payloads** (distributed): the index rows become the ``documents``
-   metadata table directly (driver-side, tiny — offsets only: ~50 B per
-   blob, so a planet file's ~100k blobs cost ~5 MB; ceiling documented
-   in :func:`pbf_frame_index`), and a ``mapInArrow`` over index ranges
-   slices each frame's payload out of the mmap into Arrow batches —
-   payload bytes never pass through the driver and never shuffle
-   (read_elements broadcasts the metadata side).
+2. **Decode from byte ranges** (distributed): the index rows become a
+   narrow blob-range table (doc_id, blob_no, blob_type, body_off,
+   datasize — ~50 B per blob, so a planet file's ~100k blobs cost
+   ~5 MB; ceiling documented in :func:`pbf_frame_index`). Each decode
+   task maps the file once and slices its blobs' bodies itself
+   (``documents.read_blob_ranges``): one Python node per task, and
+   payload bytes never enter the JVM, the driver or a shuffle. The
+   same index also builds the ``documents``/``media`` tables (media
+   sliced out of the mmap into Arrow batches) for callers that want
+   the engine's input tables.
 
 ``blob_no`` is the index position (identical to the single-node
 ``split_fileblocks`` numbering), so both ingest paths are
@@ -33,24 +36,19 @@ from __future__ import annotations
 
 import json
 import os
+from typing import NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ..pbf.decode import scan_chunk_frames
-from .documents import DOCUMENTS_SCHEMA, MEDIA_SCHEMA
+from .documents import DOCUMENTS_SCHEMA, MEDIA_SCHEMA, _mmap_file
 from ..session import local_relation
 
 DEFAULT_CHUNK_BYTES = 64 * 1024 * 1024
 
 FRAME_DDL = ("offset long, blob_type string, header_size long, "
              "datasize long")
-
-
-def _mmap_file(path: str):
-    import mmap
-    f = open(path, "rb")
-    return f, mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
 
 
 def pbf_frame_index(spark: SparkSession, path: str, *,
@@ -64,18 +62,30 @@ def pbf_frame_index(spark: SparkSession, path: str, *,
     size = os.path.getsize(path)
     if size == 0:
         return []
-    rows = sorted(tuple(r) for r in
-                  _scan_frames_df(spark, path, size, chunk_bytes).collect())
+    sc = spark.sparkContext
+    caller_desc = sc.getLocalProperty("spark.job.description")
+    try:
+        sc.setJobDescription("pbf frame index")
+        rows = sorted(tuple(r) for r in
+                      _scan_frames_df(spark, path, size, chunk_bytes)
+                      .collect())
+    finally:
+        sc.setJobDescription(caller_desc)
     return validate_frame_index(rows, size)
 
 
 def _scan_frames_df(spark: SparkSession, path: str, size: int,
                     chunk_bytes: int) -> DataFrame:
-    """Distributed header scan → raw (unvalidated) frame DataFrame."""
-    ranges = [(s, min(s + chunk_bytes, size))
-              for s in range(0, size, chunk_bytes)]
-    rdf = local_relation(spark, ranges, "start long, end long") \
-        .repartition(len(ranges))
+    """Distributed header scan → raw (unvalidated) frame DataFrame: one
+    task per ``chunk_bytes`` range, numbered by ``spark.range`` (no
+    exchange)."""
+    from pyspark.sql import functions as F
+
+    n = -(-size // chunk_bytes)
+    start = F.col("id") * chunk_bytes
+    rdf = spark.range(n, numPartitions=n).select(
+        start.alias("start"),
+        F.least(start + chunk_bytes, F.lit(size)).alias("end"))
 
     def scan(batches):
         f, mm = _mmap_file(path)
@@ -242,30 +252,53 @@ def validate_frame_index(rows: list[tuple], size: int) -> list[tuple]:
     return accepted
 
 
-def read_pbf_documents(spark: SparkSession, path: str, *,
-                       name: str | None = None,
-                       chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-                       num_partitions: int | None = None,
-                       driver_index: bool = True
-                       ) -> tuple[DataFrame, DataFrame]:
-    """(documents, media) for a raw PBF file — same tables
-    ``Engine.from_pbf_bytes`` builds, but payloads are read distributed
-    with bounded memory. ``blob_no`` matches ``split_fileblocks``.
+BLOBS_DDL = ("doc_id string, blob_no long, blob_type string, "
+             "body_off long, datasize long")
+
+
+class PbfFile(NamedTuple):
+    """A raw PBF file read through its validated frame index.
+
+    ``blobs`` is the narrow blob-range table (BLOBS_DDL, one row per
+    frame, ``body_off`` the first byte of the Blob message): the
+    file-backed decode scans (``documents.read_blob_ranges``) slice each
+    body out of the file in the decoding task. ``documents`` and
+    ``media`` are the same frame index as the engine's input tables,
+    for callers that want the tables themselves."""
+    path: str
+    blobs: DataFrame
+    documents: DataFrame
+    media: DataFrame
+
+
+def read_pbf_file(spark: SparkSession, path: str, *,
+                  name: str | None = None,
+                  chunk_bytes: int = DEFAULT_CHUNK_BYTES,
+                  driver_index: bool = True) -> PbfFile:
+    """Frame-index a raw PBF file → :class:`PbfFile`. Payloads are read
+    distributed with bounded memory; ``blob_no`` matches
+    ``split_fileblocks``.
 
     ``driver_index=True`` (small-file fast path, ≲10M blobs) builds the
-    documents rows on the driver from the collected index;
-    ``driver_index=False`` keeps EVERYTHING distributed — the index
-    DataFrame from :func:`pbf_frame_index_df` becomes the documents
-    table via pure Catalyst expressions and feeds the payload fetch
-    directly, so no per-blob data ever sits on the driver (VERDICT r2
-    #4). Both paths are row-for-row identical (pinned in tests)."""
+    documents rows on the driver from the collected index, and the blob
+    table as a ``LocalTableScan`` (one decode task per default-parallelism
+    slot, no exchange); ``driver_index=False`` keeps EVERYTHING
+    distributed — the index DataFrame from :func:`pbf_frame_index_df`
+    becomes the documents and blob tables via pure Catalyst expressions,
+    so no per-blob data ever sits on the driver (VERDICT r2 #4). Both
+    paths are row-for-row identical (pinned in tests).
+
+    The media table and the distributed blob table spread over one
+    partition per blob, up to twice the default parallelism."""
     from pyspark.sql import functions as F
 
     name = name or os.path.basename(path)
+    spread = spark.sparkContext.defaultParallelism * 2
     if driver_index:
         index = pbf_frame_index(spark, path, chunk_bytes=chunk_bytes)
         doc_rows = []
         media_meta = []
+        blob_rows = []
         for blob_no, (off, bt, hs, ds) in enumerate(index):
             doc_id = f"{name}#{blob_no}"
             media_ref = f"media://{doc_id}"
@@ -278,15 +311,17 @@ def read_pbf_documents(spark: SparkSession, path: str, *,
                 ("media", None, media_ref, len(meta)),
             ]))
             media_meta.append((media_ref, off + 4 + hs, ds))
+            blob_rows.append((doc_id, blob_no, bt, off + 4 + hs, ds))
         docs = spark.createDataFrame(doc_rows, schema=DOCUMENTS_SCHEMA)
         mdf = spark.createDataFrame(
             media_meta, "media_ref string, body_off long, datasize long")
-        n_media = len(index)
+        spread = max(1, min(len(index), spread))
     else:
         idx = pbf_frame_index_df(spark, path, chunk_bytes=chunk_bytes)
         doc_id = F.concat(F.lit(f"{name}#"),
                           F.col("blob_no").cast("string"))
         media_ref = F.concat(F.lit("media://"), doc_id)
+        body_off = F.col("offset") + 4 + F.col("header_size")
         # byte-identical to json.dumps(..., sort_keys=True) for the
         # printable-ASCII blob types the scanner admits (JSON-special
         # chars in a type would need escaping; none are spec-plausible)
@@ -308,15 +343,9 @@ def read_pbf_documents(spark: SparkSession, path: str, *,
                          media_ref.alias("media_ref"),
                          F.length(meta).cast("int").alias("offset")),
             ).alias("spans"))
-        mdf = idx.select(
-            media_ref.alias("media_ref"),
-            (F.col("offset") + 4 + F.col("header_size")).alias("body_off"),
-            F.col("datasize"))
-        n_media = spark.sparkContext.defaultParallelism * 2
-
-    n_parts = num_partitions or max(
-        1, min(n_media, spark.sparkContext.defaultParallelism * 2))
-    mdf = mdf.repartition(n_parts, "media_ref")
+        mdf = idx.select(media_ref.alias("media_ref"),
+                         body_off.alias("body_off"), F.col("datasize"))
+    mdf = mdf.repartition(spread, "media_ref")
 
     def fetch(batches):
         f, mm = _mmap_file(path)
@@ -338,4 +367,10 @@ def read_pbf_documents(spark: SparkSession, path: str, *,
     media = mdf.mapInArrow(
         fetch, ", ".join(f"{f.name} {f.dataType.simpleString()}"
                          for f in MEDIA_SCHEMA.fields))
-    return docs, media
+    if driver_index:
+        blobs = local_relation(spark, blob_rows, BLOBS_DDL)
+    else:
+        blobs = idx.select(doc_id.alias("doc_id"), "blob_no", "blob_type",
+                           body_off.alias("body_off"), "datasize") \
+            .repartition(spread, "blob_no")
+    return PbfFile(path, blobs, docs, media)

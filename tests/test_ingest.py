@@ -1,6 +1,8 @@
 """Distributed chunked PBF ingest: resync, contiguity gate, parity with
 the single-node path, bounded chunk sizes smaller than one frame."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,7 +15,7 @@ from osmpbf_spark.pbf.encode import (
     frame_fileblock,
 )
 from osmpbf_spark.sources.fixtures import fixture_file_bytes
-from osmpbf_spark.sources.ingest import pbf_frame_index, read_pbf_documents
+from osmpbf_spark.sources.ingest import pbf_frame_index, read_pbf_file
 
 
 def _make_file(tmp_path, *, copies=40, big_block_nodes=60000):
@@ -100,20 +102,40 @@ def test_payloads_never_pass_driver_and_never_shuffle(spark, tmp_path):
     path, _ = _make_file(tmp_path, copies=3, big_block_nodes=1000)
     from osmpbf_spark.plans.audit import exchanges_carrying
     from osmpbf_spark.sources.documents import read_elements
-    docs, media = read_pbf_documents(spark, path, chunk_bytes=64 * 1024)
-    el = read_elements(docs, media)
+    f = read_pbf_file(spark, path, chunk_bytes=64 * 1024)
+    el = read_elements(f.documents, f.media)
     assert exchanges_carrying(el, "payload") == []
     assert el.filter("element_type = 'node'").count() > 0
+
+
+def _mixed_file(tmp_path):
+    """header+data, a spec-legal unknown blob type, header+data."""
+    base = fixture_file_bytes("zlib_dense")
+    p = tmp_path / "mixed.osm.pbf"
+    p.write_bytes(base + frame_fileblock("FancyFutureType", b"\x7f" * 333)
+                  + base)
+    return p
+
+
+def _embedded_file(tmp_path):
+    """An UNCOMPRESSED blob whose body embeds a valid chained frame pair:
+    a raw Blob message of an UNKNOWN type carrying the nested frames
+    verbatim (decode skips unknown types; framing must not false-sync)."""
+    from osmpbf_spark.pbf.wire import len_field
+    inner = frame_fileblock("OSMData", encode_blob(encode_primitive_block(
+        [[Node(id=7, lat_raw=1, lon_raw=1)]]), compress=True)) * 2
+    carrier = frame_fileblock("BinaryAttachment", len_field(1, inner))
+    base = fixture_file_bytes("zlib_dense")
+    p = tmp_path / "embedded.osm.pbf"
+    p.write_bytes(base + carrier + base)
+    return p
 
 
 def test_unknown_blob_types_index_and_skip(spark, tmp_path):
     # spec-legal unknown blob types must INDEX (contiguity holds) and be
     # dropped at decode, matching the reference's BlobType::Unknown
     # (src/blob.rs:22-29) — not fail the frame scan
-    base = fixture_file_bytes("zlib_dense")
-    unknown = frame_fileblock("FancyFutureType", b"\x7f" * 333)
-    p = tmp_path / "mixed.osm.pbf"
-    p.write_bytes(base + unknown + base)
+    p = _mixed_file(tmp_path)
     idx = pbf_frame_index(spark, str(p), chunk_bytes=256)
     assert [t for _, t, _, _ in idx] == \
         ["OSMHeader", "OSMData", "FancyFutureType", "OSMHeader", "OSMData"]
@@ -124,20 +146,11 @@ def test_unknown_blob_types_index_and_skip(spark, tmp_path):
 
 
 def test_embedded_fake_frames_are_cleaned(spark, tmp_path):
-    # an UNCOMPRESSED blob whose body embeds a valid chained frame pair:
-    # a chunk boundary inside that body makes the scanner sync onto the
-    # fake; the driver's cleanup must drop it (it lies inside the real
-    # frame's extent) and keep the true tiling
-    inner = frame_fileblock("OSMData", encode_blob(encode_primitive_block(
-        [[Node(id=7, lat_raw=1, lon_raw=1)]]), compress=True)) * 2
-    # raw Blob message of an UNKNOWN type carrying the nested frames
-    # verbatim (decode skips unknown types; framing must not false-sync)
-    from osmpbf_spark.pbf.wire import len_field
-    carrier = frame_fileblock("BinaryAttachment", len_field(1, inner))
-    base = fixture_file_bytes("zlib_dense")
-    data = base + carrier + base
-    p = tmp_path / "embedded.osm.pbf"
-    p.write_bytes(data)
+    # a chunk boundary inside the carrier's body makes the scanner sync
+    # onto the embedded fake; the driver's cleanup must drop it (it lies
+    # inside the real frame's extent) and keep the true tiling
+    p = _embedded_file(tmp_path)
+    data = p.read_bytes()
     # chunk size small enough that several boundaries land inside carrier
     idx = pbf_frame_index(spark, str(p), chunk_bytes=64)
     assert [(o, t, d) for o, t, h, d in idx] == \
@@ -215,12 +228,17 @@ def test_frame_index_df_fails_on_garbage_and_truncation(spark, tmp_path):
 
 def test_read_pbf_documents_distributed_equals_driver_path(spark, tmp_path):
     # forced tiny chunk ceiling: the driver_index=False path must build
-    # byte-identical documents + media tables (span text included)
+    # byte-identical documents + media + blob-range tables (span text
+    # included)
     path, data = _make_file(tmp_path, copies=3, big_block_nodes=2000)
-    d1, m1 = read_pbf_documents(spark, path, chunk_bytes=32 * 1024,
-                                driver_index=True)
-    d2, m2 = read_pbf_documents(spark, path, chunk_bytes=32 * 1024,
-                                driver_index=False)
+    f1 = read_pbf_file(spark, path, chunk_bytes=32 * 1024,
+                       driver_index=True)
+    f2 = read_pbf_file(spark, path, chunk_bytes=32 * 1024,
+                       driver_index=False)
+    assert sorted(map(tuple, f1.blobs.collect())) == \
+        sorted(map(tuple, f2.blobs.collect()))
+    d1, m1 = f1.documents, f1.media
+    d2, m2 = f2.documents, f2.media
     rows1 = sorted((r["doc_id"], str(r["spans"])) for r in d1.collect())
     rows2 = sorted((r["doc_id"], str(r["spans"])) for r in d2.collect())
     assert rows1 == rows2
@@ -252,3 +270,126 @@ def test_frame_index_df_embedded_fake_cleanup(spark, tmp_path):
            for r in pbf_frame_index_df(spark, str(p), chunk_bytes=64)
            .orderBy("offset").collect()]
     assert got == want
+
+
+# -- file-backed decode: each task slices its blobs out of the file ---------
+
+def _fixture_files(tmp_path):
+    """(path, chunk_bytes) of the files above: a frame far larger than
+    the chunk (uncompressed), an unknown blob type, embedded fake
+    frames inside a blob body."""
+    big, _ = _make_file(tmp_path, copies=3, big_block_nodes=2000)
+    return [(big, 4096), (str(_mixed_file(tmp_path)), 256),
+            (str(_embedded_file(tmp_path)), 64)]
+
+
+def _scan_rows(eng):
+    """Sorted (scan, to_json(row)) of the four decode scans, one action."""
+    scans = [getattr(eng, n)().select(F.lit(n), F.to_json(F.struct("*")))
+             for n in ("elements", "elements_raw", "stringtables", "header")]
+    union = scans[0]
+    for df in scans[1:]:
+        union = union.union(df)
+    return sorted(map(tuple, union.collect()))
+
+
+@pytest.mark.parametrize("driver_index", [True, False])
+def test_file_scans_equal_documents_scans(spark, tmp_path, driver_index):
+    # every file-backed scan equals the documents-table scan over the
+    # same file's (documents, media), row for row
+    for path, chunk in _fixture_files(tmp_path):
+        eng = Engine.from_pbf_path(spark, path, chunk_bytes=chunk,
+                                   driver_index=driver_index)
+        want = _scan_rows(Engine(spark, eng.documents, eng.media))
+        assert {n for n, _ in want} == {
+            "elements", "elements_raw", "stringtables", "header"}, path
+        assert _scan_rows(eng) == want, path
+
+
+def test_file_scan_corrupt_blob_fails_fast(spark, tmp_path):
+    # one corrupt OSMData body (its zlib checksum) fails the file-backed
+    # scan as it fails the documents-table scan: no silent skip
+    data = fixture_file_bytes("zlib_dense")
+    body = next(b for b in split_fileblocks(data)
+                if b["blob_type"] == "OSMData")
+    bad = bytearray(data)
+    bad[data.index(body["blob_bytes"], body["offset"])
+        + len(body["blob_bytes"]) - 1] ^= 0xFF
+    p = tmp_path / "corrupt.osm.pbf"
+    p.write_bytes(bytes(bad))
+    eng = Engine.from_pbf_path(spark, str(p), chunk_bytes=256)
+    with pytest.raises(Exception, match="zlib|checksum|data check"):
+        Engine(spark, eng.documents, eng.media).elements().count()
+    with pytest.raises(Exception, match="zlib|checksum|data check"):
+        eng.elements().count()
+
+
+_PYTHON_NODE = re.compile(r"MapIn\w+|\w*EvalPython\w*|FlatMap\w*InPandas\w*")
+
+
+def _final_tree(df):
+    """Node-tree lines of the executed (AQE final) plan."""
+    from osmpbf_spark.plans.audit import explain_formatted
+    tree = explain_formatted(df).split("\n\n")[0]
+    return tree.split("== Initial Plan ==")[0].splitlines()
+
+
+def _subtree(lines, i):
+    """Lines of the subtree rooted at ``lines[i]`` (deeper indentation)."""
+    depth = len(lines[i]) - len(lines[i].lstrip(" :|+-"))
+    out = []
+    for ln in lines[i + 1:]:
+        if len(ln) - len(ln.lstrip(" :|+-")) <= depth:
+            break
+        out.append(ln)
+    return out
+
+
+def test_file_backed_pip_plan_one_python_node(spark, tmp_path):
+    # the pbf_pip pass shape: file-backed nodes → grid → PIP → count. The
+    # decode is the plan's only Python node, reads the range table
+    # straight from a LocalTableScan (no Python-RDD scan, no exchange
+    # below it) and no payload column exists anywhere
+    from osmpbf_spark.functions.grid import with_grid_cells
+    from osmpbf_spark.operators.pip import make_polygons, pip_join
+    from osmpbf_spark.plans.audit import explain_formatted
+    from osmpbf_spark.sources.synth import synth_fileblocks
+    fileblocks, _ = synth_fileblocks(20_000, seed=1)
+    p = tmp_path / "synth.osm.pbf"
+    p.write_bytes(b"".join(frame_fileblock(t, b) for t, b in fileblocks))
+    b = 1_000_000_000
+    polys = make_polygons(spark, [       # bench.py's three boxes
+        (name, [(a, c), (d, c), (d, e), (a, e), (a, c)])
+        for name, a, c, d, e in [
+            ("megacity", 42_900 * b // 1000, 8_900 * b // 1000,
+             43_100 * b // 1000, 9_100 * b // 1000),
+            ("band", 44 * b, 5 * b, 46 * b, 15 * b),
+            ("corner", 40 * b, 5 * b, 41 * b, 6 * b)]])
+
+    def counted():
+        eng = Engine.from_pbf_path(spark, str(p))
+        return pip_join(with_grid_cells(eng.nodes(), res=16), polys,
+                        res=16).groupBy().count()
+
+    for _ in range(2):          # the cover memo persists on its first hit
+        counted().collect()
+    df = counted()
+    sc = spark.sparkContext
+    group = f"file-pip-plan-{id(df)}"
+    sc.setJobGroup(group, "file-backed pip count")
+    try:
+        assert df.collect()[0][0] > 0
+    finally:
+        sc.setJobGroup(None, None)
+    tree = _final_tree(df)
+    py = [i for i, ln in enumerate(tree) if _PYTHON_NODE.search(ln)]
+    assert len(py) == 1, tree
+    below = _subtree(tree, py[0])
+    assert [ln.strip(" :|+-") for ln in below] == ["LocalTableScan (1)"], \
+        below
+    assert not [ln for ln in tree if "Scan ExistingRDD" in ln]
+    assert not re.search(r"\bpayload\b", explain_formatted(df))
+    # drift-free: the count runs one job per query stage, whatever the
+    # host load (the frame-index collect ran in from_pbf_path, outside)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
