@@ -36,14 +36,23 @@ from pyspark.sql import functions as F
 class Engine:
     """Bound to a (documents, media) pair — the engine's input tables —
     or, from :meth:`from_pbf_path`, to a raw PBF file, whose scans decode
-    straight from the file's byte ranges."""
+    straight from the file's byte ranges. A file-backed engine builds
+    its ``documents``/``media`` tables on their first access."""
 
-    def __init__(self, spark: SparkSession, documents: DataFrame,
-                 media: DataFrame):
+    def __init__(self, spark: SparkSession, documents: DataFrame | None,
+                 media: DataFrame | None):
         self.spark = spark
-        self.documents = documents
-        self.media = media
+        self._tables = (documents, media)
         self._file = None       # ingest.PbfFile of a file-backed engine
+
+    @property
+    def documents(self) -> DataFrame:
+        return self._tables[0] if self._file is None else \
+            self._file.documents
+
+    @property
+    def media(self) -> DataFrame:
+        return self._tables[1] if self._file is None else self._file.media
 
     # -- constructors -----------------------------------------------------
     @classmethod
@@ -64,11 +73,12 @@ class Engine:
         slices its blobs' byte ranges itself; see sources/ingest.py).
         This is the production path for planet-scale files;
         from_pbf_bytes remains for in-memory fixtures. ``documents`` and
-        ``media`` hold the same file as tables."""
+        ``media`` hold the same file as tables, built on first access.
+        A file no larger than one chunk (``chunk_bytes``, 64 MiB by
+        default) is indexed in the driver, with no Spark job."""
         from .sources.ingest import read_pbf_file
-        f = read_pbf_file(spark, path, **kwargs)
-        eng = cls(spark, f.documents, f.media)
-        eng._file = f
+        eng = cls(spark, None, None)
+        eng._file = read_pbf_file(spark, path, **kwargs)
         return eng
 
     @classmethod

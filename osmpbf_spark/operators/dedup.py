@@ -29,6 +29,7 @@ from ..functions.text import (
     shingles_sql,
     tokens_sql,
 )
+from ..session import materialize
 
 P = HASH_MOD
 
@@ -591,7 +592,7 @@ def ngram_jaccard_pairs(docs: DataFrame, candidates: DataFrame, *,
                         6).alias("jaccard")))
 
 
-def _star_contraction(sym: DataFrame, _ckpt, max_rounds: int,
+def _star_contraction(sym: DataFrame, max_rounds: int,
                       stats: dict | None = None) -> DataFrame:
     """Large-star/small-star contraction (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC'14 — public paper) →
@@ -610,10 +611,10 @@ def _star_contraction(sym: DataFrame, _ckpt, max_rounds: int,
     fixed-point check anyway).
     """
     # canonical orientation a > b; self-loops carry no information
-    e = _ckpt(sym.filter(F.col("a") != F.col("b"))
-              .select(F.greatest("a", "b").alias("a"),
-                      F.least("a", "b").alias("b"))
-              .distinct())
+    e = materialize(sym.filter(F.col("a") != F.col("b"))
+                    .select(F.greatest("a", "b").alias("a"),
+                            F.least("a", "b").alias("b"))
+                    .distinct())
     n_edges = e.count()
     if stats is not None:
         stats["rounds"] = 0
@@ -632,11 +633,11 @@ def _star_contraction(sym: DataFrame, _ckpt, max_rounds: int,
         # small-star over the larger→smaller directed edges (a > b here
         # by construction: m = min(N(u) ∪ {u}) < v for every emitted v)
         mins = e.groupBy("a").agg(F.min("b").alias("mn"))
-        e = _ckpt(e.join(mins, "a")
-                  .filter(F.col("b") != F.col("mn"))
-                  .select(F.col("b").alias("a"), F.col("mn").alias("b"))
-                  .unionByName(mins.select("a", F.col("mn").alias("b")))
-                  .distinct())
+        e = materialize(e.join(mins, "a")
+                        .filter(F.col("b") != F.col("mn"))
+                        .select(F.col("b").alias("a"), F.col("mn").alias("b"))
+                        .unionByName(mins.select("a", F.col("mn").alias("b")))
+                        .distinct())
         n_edges = e.count()
         if stats is not None:
             stats["rounds"] += 1
@@ -670,8 +671,9 @@ def _star_contraction(sym: DataFrame, _ckpt, max_rounds: int,
                                    F.col("b").alias("label")))
              .groupBy("node").agg(F.min("label").alias("label")))
     nodes = sym.select(F.col("a").alias("node")).distinct()
-    return _ckpt(nodes.join(stars, "node", "left")
-                 .select("node", F.coalesce("label", "node").alias("label")))
+    return materialize(nodes.join(stars, "node", "left")
+                       .select("node",
+                               F.coalesce("label", "node").alias("label")))
 
 
 def connected_components(edges: DataFrame, src: str = "doc_a",
@@ -700,26 +702,20 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     list is partitioned once and reused.
     """
     spark = edges.sparkSession
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        if spark.sparkContext.getCheckpointDir() is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
            .unionByName(edges.select(F.col(dst).alias("a"),
                                      F.col(src).alias("b")))
            .distinct()
            .repartition(n_shuffle, "a").persist())
-    labels = _ckpt(sym.select(F.col("a").alias("node"))
-                   .distinct()
-                   .withColumn("label", F.col("node")))
+    labels = materialize(sym.select(F.col("a").alias("node"))
+                         .distinct()
+                         .withColumn("label", F.col("node")))
     for _ in range(min(max_iters, fallback_after)):
         prop = (sym.join(labels, sym["a"] == labels["node"])
                 .select(F.col("b").alias("node"), "label"))
-        new = _ckpt(labels.unionByName(prop)
-                    .groupBy("node").agg(F.min("label").alias("label")))
+        new = materialize(labels.unionByName(prop)
+                          .groupBy("node").agg(F.min("label").alias("label")))
         changed = (new.alias("n")
                    .join(labels.alias("o"), "node")
                    .filter(F.col("n.label") != F.col("o.label")).count())
@@ -727,7 +723,7 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
         if changed == 0:
             sym.unpersist()
             return labels
-    result = _star_contraction(sym, _ckpt, max_rounds=max_iters,
+    result = _star_contraction(sym, max_rounds=max_iters,
                                stats=stats)
     sym.unpersist()
     return result

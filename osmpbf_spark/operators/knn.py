@@ -31,7 +31,7 @@ from ..functions.grid import (
     cell_xy,
     neighbor_offsets,
 )
-from ..session import local_relation
+from ..session import local_relation, materialize
 
 # disks double up to _MAX_DISK; open queries left after it take the
 # brute-force backstop. A tail of open queries whose candidate cells at
@@ -136,22 +136,6 @@ def grid_knn(points: DataFrame, queries: DataFrame, k: int, *,
     bcast_bytes = (spark._jsparkSession.sessionState().conf()
                    .autoBroadcastJoinThreshold())
 
-    def _ckpt(df, *, eager):
-        """Per-round materialization. localCheckpoint stores blocks in
-        executor storage ONLY — losing an executor after the source
-        lineage is truncated fails the job. On a real cluster set
-        sparkContext.setCheckpointDir(...) and rounds persist reliably
-        (HDFS/object store) instead; local mode keeps the cheap path.
-
-        ``eager=False`` (local path only) defers materialization to the
-        FIRST action over the frame — the round's passed-count job then
-        materializes the blocks as a side effect, one job per round
-        instead of two. A reliable ``checkpoint()`` re-runs the lineage
-        after the triggering job, so the cluster path stays eager."""
-        if sc.getCheckpointDir() is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=eager)
-
     try:
         # ONE plain action over two independent 1-row aggregates (a
         # union, never a join: a join would run an aggregate inside a
@@ -224,16 +208,17 @@ def grid_knn(points: DataFrame, queries: DataFrame, k: int, *,
             # candidates — n_found, an unordered count over the SAME
             # window partitioning as the rank (no extra shuffle).
             guard = F.lit(float(disk * cell_h)) ** 2
-            flagged = _ckpt(cand.join(pts, "jcell")
-                            .withColumn("dist2", dist2)
-                            .filter(F.col("dist2") < guard)
-                            .withColumn("rn", F.row_number().over(win))
-                            .filter(F.col("rn") <= k)
-                            .withColumn("n_found", F.count("*").over(
-                                Window.partitionBy(query_id_col)))
-                            .select(query_id_col, F.col(id_col), "dist2",
-                                    "rn", "n_found"),
-                            eager=False)
+            # lazy: the round's passed-count job below stores the blocks
+            flagged = materialize(cand.join(pts, "jcell")
+                                  .withColumn("dist2", dist2)
+                                  .filter(F.col("dist2") < guard)
+                                  .withColumn("rn", F.row_number().over(win))
+                                  .filter(F.col("rn") <= k)
+                                  .withColumn("n_found", F.count("*").over(
+                                      Window.partitionBy(query_id_col)))
+                                  .select(query_id_col, F.col(id_col),
+                                          "dist2", "rn", "n_found"),
+                                  eager=False)
             done_parts.append(flagged.filter(F.col("n_found") >= k)
                               .select(query_id_col, F.col(id_col), "dist2",
                                       "rn"))
@@ -248,9 +233,8 @@ def grid_knn(points: DataFrame, queries: DataFrame, k: int, *,
                 break
             # the next round may broadcast a frame derived from the open
             # set, so it is materialized eagerly here
-            remaining = _ckpt(remaining.join(passed.select(query_id_col),
-                                             query_id_col, "left_anti"),
-                              eager=True)
+            remaining = materialize(remaining.join(
+                passed.select(query_id_col), query_id_col, "left_anti"))
             disk *= 2
             # tail-round collapse (schedule only): one straggler round
             # at a much larger disk is cheaper than 2-3 more doubling

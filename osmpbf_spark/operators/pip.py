@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.grid import GRID_RES_FINE, grid_xy_sql
-from ..session import local_relation
+from ..session import local_relation, materialize
 
 POLYGONS_DDL = ("poly_id string, "
                 "ring array<struct<lat_nano:bigint,lon_nano:bigint>>")
@@ -512,11 +512,11 @@ def point_in_ring_expr(px: str, py: str, ring: str = "ring"):
     return F.expr(_RAY_CAST.format(px=px, py=py, ring=ring))
 
 
-_COVER_CACHE: list[list] = []   # [polygons, res, cover, persisted]
+_COVER_CACHE: list[list] = []   # [polygons, res, cover, is_leaf]
 _COVER_CACHE_MAX = 16
 # ADVICE r4: probe/insert/evict race under multi-threaded drivers (a
 # legitimate Spark pattern for concurrent job submission); the lock
-# costs ns against the ~0.45 s cover build it guards
+# guards list edits only and never waits on a Spark job
 _COVER_CACHE_LOCK = threading.Lock()
 
 
@@ -534,42 +534,58 @@ def cover_for(polygons: DataFrame, res: int = GRID_RES_FINE) -> DataFrame:
     separately-created but identical LocalRelations are never
     ``sameSemantics`` anyway, so plan-level matching bought no extra
     hits. Hold ONE DataFrame per polygon set to get the reuse (as
-    ``jobs/decode_pip_job.py`` does). Persist happens on the FIRST
-    HIT, when reuse is proven; the cover is broadcast-small by
-    contract, so that is a few KB of executor memory per
-    actually-reused set. Entries from stopped sessions are evicted;
-    FIFO-capped at ``_COVER_CACHE_MAX`` sets."""
+    ``jobs/decode_pip_job.py`` does).
+
+    On the FIRST HIT, when reuse is proven, the cover is stored as a
+    one-partition checkpoint (:func:`session.materialize` of
+    ``cover.coalesce(1)``) and that leaf replaces the entry: later
+    plans scan the stored rows (one ``Scan ExistingRDD``, one task to
+    broadcast) instead of re-planning the cover's HOF build and
+    re-collecting cached partitions on every action. The cover is
+    broadcast-small by contract, so the leaf is a few KB per
+    actually-reused set. The storing job runs outside the cache lock.
+    Without a checkpoint directory the leaf is a ``localCheckpoint``:
+    its blocks live in executor storage only, and losing the executor
+    that holds them fails every later join against the memo (a
+    persisted cover would have been recomputed). Set
+    ``sparkContext.setCheckpointDir`` on a cluster and the leaf is a
+    reliable checkpoint instead. Entries from stopped sessions are
+    evicted; FIFO-capped at ``_COVER_CACHE_MAX`` sets, an evicted
+    leaf's blocks are freed when Spark's context cleaner collects it."""
     with _COVER_CACHE_LOCK:
+        hit = None
         for i in range(len(_COVER_CACHE) - 1, -1, -1):
             entry = _COVER_CACHE[i]
-            p, r, c = entry[0], entry[1], entry[2]
             try:
-                if p.sparkSession._sc._jsc is None:  # stopped session
-                    _COVER_CACHE.pop(i)              # (code-review r4:
-                    continue                         # probe, don't wait
-            except Exception:                        # for an exception)
+                if entry[0].sparkSession._sc._jsc is None:  # stopped
+                    _COVER_CACHE.pop(i)        # (code-review r4: probe,
+                    continue                   # don't wait for an
+            except Exception:                  # exception)
                 _COVER_CACHE.pop(i)
                 continue
-            if r == res and p is polygons:
-                if not entry[3]:
-                    c.persist()
-                    entry[3] = True
-                return c
-    # build OUTSIDE the lock — the ~0.45 s cover build must not
-    # serialize concurrent joins on distinct polygon sets; a racing
-    # duplicate build is benign (both entries land, unpersisted-until-
-    # hit, FIFO-evicted later)
-    cover = polygon_cover(split_antimeridian(polygons), res, classify=True)
+            if entry[1] == res and entry[0] is polygons:
+                hit = entry
+                break
+        if hit is not None and hit[3]:
+            return hit[2]
+    if hit is None:
+        # build OUTSIDE the lock — the ~0.45 s cover build must not
+        # serialize concurrent joins on distinct polygon sets; a racing
+        # duplicate build is benign (both entries land, FIFO-evicted)
+        cover = polygon_cover(split_antimeridian(polygons), res,
+                              classify=True)
+        with _COVER_CACHE_LOCK:
+            _COVER_CACHE.append([polygons, res, cover, False])
+            del _COVER_CACHE[:-_COVER_CACHE_MAX]
+        return cover
+    leaf = materialize(hit[2].coalesce(1))
+    cres = getattr(hit[2], "_osmpbf_coarse_res", None)
+    if cres is not None:
+        leaf._osmpbf_coarse_res = cres
     with _COVER_CACHE_LOCK:
-        _COVER_CACHE.append([polygons, res, cover, False])
-        while len(_COVER_CACHE) > _COVER_CACHE_MAX:
-            old = _COVER_CACHE.pop(0)
-            try:
-                if old[3]:
-                    old[2].unpersist()
-            except Exception:
-                pass
-    return cover
+        if not hit[3]:          # a racing first hit may have stored one
+            hit[2], hit[3] = leaf, True
+        return hit[2]
 
 
 def pip_join(points: DataFrame, polygons: DataFrame, *,

@@ -97,6 +97,26 @@ def local_relation(spark: SparkSession, rows, ddl: str):
     return df
 
 
+def materialize(df, *, eager: bool = True):
+    """``df`` as a checkpointed leaf: its lineage is cut, so later plans
+    scan the stored rows (a ``Scan ExistingRDD``) instead of re-planning
+    and re-running the lineage on every action.
+
+    With a checkpoint directory set (``sparkContext.setCheckpointDir``,
+    HDFS/object store on a real cluster) this is a reliable, eager
+    ``checkpoint()``. Otherwise it is a ``localCheckpoint()``, whose
+    blocks live in executor storage ONLY: losing an executor after the
+    lineage is cut fails every job that reads them; local mode keeps
+    this cheap path. ``eager=False`` applies to the local path only: it
+    defers materialization to the first action over the frame, which
+    then stores the blocks as a side effect (one job instead of two). A
+    reliable checkpoint re-runs the lineage after the triggering job, so
+    it stays eager."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=eager)
+
+
 def get_spark(app_name: str = "osmpbf_spark", *, master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:

@@ -11,7 +11,10 @@ module ingests a framed PBF file of any size in two passes:
    range for fileblock frames, resyncing on the ``[u32 BE len]
    [BlobHeader]`` boundary (chain-validated). A frame belongs to the
    task whose range contains its first byte, so straddling frames are
-   counted exactly once. The driver then verifies the merged index is
+   counted exactly once. A file of one chunk (≤ ``chunk_bytes``) is
+   scanned in the driver instead — the same scan over the same single
+   range, without the one-task Spark job a distributed scan of it
+   would be. The driver then verifies the merged index is
    CONTIGUOUS from byte 0 to EOF — PBF frames tile the file with no
    gaps, so any resync false-positive, corruption, or inter-frame
    garbage surfaces as a hard ValueError here (fail-fast, matching the
@@ -25,7 +28,7 @@ module ingests a framed PBF file of any size in two passes:
    payload bytes never enter the JVM, the driver or a shuffle. The
    same index also builds the ``documents``/``media`` tables (media
    sliced out of the mmap into Arrow batches) for callers that want
-   the engine's input tables.
+   the engine's input tables, on their first access.
 
 ``blob_no`` is the index position (identical to the single-node
 ``split_fileblocks`` numbering), so both ingest paths are
@@ -34,16 +37,16 @@ row-for-row equivalent.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
-from typing import NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ..pbf.decode import scan_chunk_frames
 from .documents import DOCUMENTS_SCHEMA, MEDIA_SCHEMA, _mmap_file
-from ..session import local_relation
+from ..session import local_relation, materialize
 
 DEFAULT_CHUNK_BYTES = 64 * 1024 * 1024
 
@@ -53,22 +56,33 @@ FRAME_DDL = ("offset long, blob_type string, header_size long, "
 
 def pbf_frame_index(spark: SparkSession, path: str, *,
                     chunk_bytes: int = DEFAULT_CHUNK_BYTES) -> list[tuple]:
-    """Distributed header scan → driver-validated contiguous frame index
+    """Header scan → driver-validated contiguous frame index
     [(offset, blob_type, header_size, datasize)], ordered by offset.
 
-    Driver memory holds offsets only: fine to ~10M blobs (multi-TB
-    files); beyond that, stream the index to a table instead.
+    A file larger than ``chunk_bytes`` is scanned distributed, one task
+    per chunk; a file of one chunk is scanned in the driver, with no
+    Spark job. Driver memory holds offsets only: fine to ~10M blobs
+    (multi-TB files); beyond that, stream the index to a table instead.
     """
     size = os.path.getsize(path)
     if size == 0:
         return []
+    if size <= chunk_bytes:
+        # one chunk: the distributed scan would be a one-task job, so the
+        # driver runs the same scan over the same range
+        f, mm = _mmap_file(path)
+        try:
+            rows = list(scan_chunk_frames(mm, 0, size))
+        finally:
+            mm.close()
+            f.close()
+        return validate_frame_index(rows, size)
     sc = spark.sparkContext
     caller_desc = sc.getLocalProperty("spark.job.description")
     try:
         sc.setJobDescription("pbf frame index")
-        rows = sorted(tuple(r) for r in
-                      _scan_frames_df(spark, path, size, chunk_bytes)
-                      .collect())
+        rows = [tuple(r) for r in
+                _scan_frames_df(spark, path, size, chunk_bytes).collect()]
     finally:
         sc.setJobDescription(caller_desc)
     return validate_frame_index(rows, size)
@@ -117,7 +131,9 @@ def pbf_frame_index_df(spark: SparkSession, path: str, *,
     blob_type, header_size, datasize) — the index never passes through
     the driver as rows; write it straight to a table if persistence is
     wanted. Driver memory here is O(#chunks) stitch metadata (two tiny
-    per-bucket aggregates), not O(#blobs).
+    per-bucket aggregates), not O(#blobs). The validated index is
+    returned as a checkpointed leaf (:func:`session.materialize`), so
+    the header scan runs once per call, not once per action.
 
     Validation mirrors :func:`validate_frame_index` scalably:
 
@@ -203,15 +219,16 @@ def pbf_frame_index_df(spark: SparkSession, path: str, *,
         bdf = local_relation(
             spark, [(b, v) for b, v in base.items()],
             "bucket long, base long")
-        out = (clean.join(F.broadcast(bdf), "bucket")
-               .withColumn("blob_no", F.col("base")
-                           + F.row_number().over(w_b) - 1)
-               .select("blob_no", "offset", "blob_type", "header_size",
-                       "datasize"))
-        return out
+        # stored once while the header scan is still persisted: the
+        # returned index is a leaf, so no later action re-runs the chunk
+        # scan, the two window stages or the two broadcast joins
+        return materialize(
+            clean.join(F.broadcast(bdf), "bucket")
+            .withColumn("blob_no", F.col("base")
+                        + F.row_number().over(w_b) - 1)
+            .select("blob_no", "offset", "blob_type", "header_size",
+                    "datasize"))
     finally:
-        # persist() guards the double pass above; the returned plan
-        # re-scans lazily after unpersist (headers only — cheap)
         sdf.unpersist()
 
 
@@ -256,7 +273,7 @@ BLOBS_DDL = ("doc_id string, blob_no long, blob_type string, "
              "body_off long, datasize long")
 
 
-class PbfFile(NamedTuple):
+class PbfFile:
     """A raw PBF file read through its validated frame index.
 
     ``blobs`` is the narrow blob-range table (BLOBS_DDL, one row per
@@ -264,11 +281,25 @@ class PbfFile(NamedTuple):
     file-backed decode scans (``documents.read_blob_ranges``) slice each
     body out of the file in the decoding task. ``documents`` and
     ``media`` are the same frame index as the engine's input tables,
-    for callers that want the tables themselves."""
-    path: str
-    blobs: DataFrame
-    documents: DataFrame
-    media: DataFrame
+    for callers that want the tables themselves; they are built on
+    first access (the file-backed scans never read them)."""
+
+    def __init__(self, path: str, blobs: DataFrame, tables):
+        self.path = path
+        self.blobs = blobs
+        self._build_tables = tables     # () -> (documents, media)
+
+    @functools.cached_property
+    def _tables(self) -> tuple[DataFrame, DataFrame]:
+        return self._build_tables()
+
+    @property
+    def documents(self) -> DataFrame:
+        return self._tables[0]
+
+    @property
+    def media(self) -> DataFrame:
+        return self._tables[1]
 
 
 def read_pbf_file(spark: SparkSession, path: str, *,
@@ -279,14 +310,16 @@ def read_pbf_file(spark: SparkSession, path: str, *,
     distributed with bounded memory; ``blob_no`` matches
     ``split_fileblocks``.
 
-    ``driver_index=True`` (small-file fast path, ≲10M blobs) builds the
-    documents rows on the driver from the collected index, and the blob
-    table as a ``LocalTableScan`` (one decode task per default-parallelism
-    slot, no exchange); ``driver_index=False`` keeps EVERYTHING
-    distributed — the index DataFrame from :func:`pbf_frame_index_df`
-    becomes the documents and blob tables via pure Catalyst expressions,
-    so no per-blob data ever sits on the driver (VERDICT r2 #4). Both
-    paths are row-for-row identical (pinned in tests).
+    ``driver_index=True`` (small-file fast path, ≲10M blobs) collects the
+    index (:func:`pbf_frame_index`; a file of one chunk is indexed in the
+    driver with no Spark job) and builds the blob table as a
+    ``LocalTableScan`` (one decode task per default-parallelism slot, no
+    exchange) and, on first use, the documents rows on the driver;
+    ``driver_index=False`` keeps EVERYTHING distributed — the index
+    DataFrame from :func:`pbf_frame_index_df` becomes the documents and
+    blob tables via pure Catalyst expressions, so no per-blob data ever
+    sits on the driver (VERDICT r2 #4). Both paths are row-for-row
+    identical (pinned in tests).
 
     The media table and the distributed blob table spread over one
     partition per blob, up to twice the default parallelism."""
@@ -296,56 +329,18 @@ def read_pbf_file(spark: SparkSession, path: str, *,
     spread = spark.sparkContext.defaultParallelism * 2
     if driver_index:
         index = pbf_frame_index(spark, path, chunk_bytes=chunk_bytes)
-        doc_rows = []
-        media_meta = []
-        blob_rows = []
-        for blob_no, (off, bt, hs, ds) in enumerate(index):
-            doc_id = f"{name}#{blob_no}"
-            media_ref = f"media://{doc_id}"
-            meta = json.dumps({
-                "blob_no": blob_no, "blob_type": bt,
-                "datasize": ds, "offset": off,
-            }, sort_keys=True)
-            doc_rows.append((doc_id, [
-                ("text", meta, None, 0),
-                ("media", None, media_ref, len(meta)),
-            ]))
-            media_meta.append((media_ref, off + 4 + hs, ds))
-            blob_rows.append((doc_id, blob_no, bt, off + 4 + hs, ds))
-        docs = spark.createDataFrame(doc_rows, schema=DOCUMENTS_SCHEMA)
-        mdf = spark.createDataFrame(
-            media_meta, "media_ref string, body_off long, datasize long")
-        spread = max(1, min(len(index), spread))
+        blobs = local_relation(
+            spark, [(f"{name}#{blob_no}", blob_no, bt, off + 4 + hs, ds)
+                    for blob_no, (off, bt, hs, ds) in enumerate(index)],
+            BLOBS_DDL)
     else:
         idx = pbf_frame_index_df(spark, path, chunk_bytes=chunk_bytes)
         doc_id = F.concat(F.lit(f"{name}#"),
                           F.col("blob_no").cast("string"))
-        media_ref = F.concat(F.lit("media://"), doc_id)
         body_off = F.col("offset") + 4 + F.col("header_size")
-        # byte-identical to json.dumps(..., sort_keys=True) for the
-        # printable-ASCII blob types the scanner admits (JSON-special
-        # chars in a type would need escaping; none are spec-plausible)
-        meta = F.concat(
-            F.lit('{"blob_no": '), F.col("blob_no").cast("string"),
-            F.lit(', "blob_type": "'), F.col("blob_type"),
-            F.lit('", "datasize": '), F.col("datasize").cast("string"),
-            F.lit(', "offset": '), F.col("offset").cast("string"),
-            F.lit("}"))
-        docs = idx.select(
-            doc_id.alias("doc_id"),
-            F.array(
-                F.struct(F.lit("text").alias("kind"),
-                         meta.alias("text"),
-                         F.lit(None).cast("string").alias("media_ref"),
-                         F.lit(0).alias("offset")),
-                F.struct(F.lit("media").alias("kind"),
-                         F.lit(None).cast("string").alias("text"),
-                         media_ref.alias("media_ref"),
-                         F.length(meta).cast("int").alias("offset")),
-            ).alias("spans"))
-        mdf = idx.select(media_ref.alias("media_ref"),
-                         body_off.alias("body_off"), F.col("datasize"))
-    mdf = mdf.repartition(spread, "media_ref")
+        blobs = idx.select(doc_id.alias("doc_id"), "blob_no", "blob_type",
+                           body_off.alias("body_off"), "datasize") \
+            .repartition(spread, "blob_no")
 
     def fetch(batches):
         f, mm = _mmap_file(path)
@@ -364,13 +359,55 @@ def read_pbf_file(spark: SparkSession, path: str, *,
             mm.close()
             f.close()
 
-    media = mdf.mapInArrow(
-        fetch, ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                         for f in MEDIA_SCHEMA.fields))
-    if driver_index:
-        blobs = local_relation(spark, blob_rows, BLOBS_DDL)
-    else:
-        blobs = idx.select(doc_id.alias("doc_id"), "blob_no", "blob_type",
-                           body_off.alias("body_off"), "datasize") \
-            .repartition(spread, "blob_no")
-    return PbfFile(path, blobs, docs, media)
+    def tables():
+        if driver_index:
+            doc_rows = []
+            media_meta = []
+            for blob_no, (off, bt, hs, ds) in enumerate(index):
+                ref = f"media://{name}#{blob_no}"
+                meta = json.dumps({
+                    "blob_no": blob_no, "blob_type": bt,
+                    "datasize": ds, "offset": off,
+                }, sort_keys=True)
+                doc_rows.append((f"{name}#{blob_no}", [
+                    ("text", meta, None, 0),
+                    ("media", None, ref, len(meta)),
+                ]))
+                media_meta.append((ref, off + 4 + hs, ds))
+            docs = spark.createDataFrame(doc_rows, schema=DOCUMENTS_SCHEMA)
+            mdf = spark.createDataFrame(
+                media_meta, "media_ref string, body_off long, datasize long")
+            parts = max(1, min(len(index), spread))
+        else:
+            media_ref = F.concat(F.lit("media://"), doc_id)
+            # byte-identical to json.dumps(..., sort_keys=True) for the
+            # printable-ASCII blob types the scanner admits (JSON-special
+            # chars in a type would need escaping; none are
+            # spec-plausible)
+            meta = F.concat(
+                F.lit('{"blob_no": '), F.col("blob_no").cast("string"),
+                F.lit(', "blob_type": "'), F.col("blob_type"),
+                F.lit('", "datasize": '), F.col("datasize").cast("string"),
+                F.lit(', "offset": '), F.col("offset").cast("string"),
+                F.lit("}"))
+            docs = idx.select(
+                doc_id.alias("doc_id"),
+                F.array(
+                    F.struct(F.lit("text").alias("kind"),
+                             meta.alias("text"),
+                             F.lit(None).cast("string").alias("media_ref"),
+                             F.lit(0).alias("offset")),
+                    F.struct(F.lit("media").alias("kind"),
+                             F.lit(None).cast("string").alias("text"),
+                             media_ref.alias("media_ref"),
+                             F.length(meta).cast("int").alias("offset")),
+                ).alias("spans"))
+            mdf = idx.select(media_ref.alias("media_ref"),
+                             body_off.alias("body_off"), F.col("datasize"))
+            parts = spread
+        media = mdf.repartition(parts, "media_ref").mapInArrow(
+            fetch, ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                             for f in MEDIA_SCHEMA.fields))
+        return docs, media
+
+    return PbfFile(path, blobs, tables)

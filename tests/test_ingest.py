@@ -1,7 +1,9 @@
 """Distributed chunked PBF ingest: resync, contiguity gate, parity with
 the single-node path, bounded chunk sizes smaller than one frame."""
 
+import os
 import re
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -79,6 +81,41 @@ def test_distributed_ingest_decodes_identically(spark, tmp_path):
     assert meta_d == meta_b
 
 
+def _jobs_run(spark, fn):
+    """(fn()'s result or its ValueError, Spark jobs it ran) — counted
+    from the status tracker after the listener bus drains."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"    # never reused
+    sc.setJobGroup(group, "count jobs")
+    try:
+        out = fn()
+    except ValueError as e:
+        out = e
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _index_both_sides(spark, path, small_chunk):
+    """The frame index of ``path`` scanned in the driver (one chunk of
+    the whole file: no Spark job) and distributed (``small_chunk``-byte
+    chunks): both sides must give the same rows or the same
+    ValueError. Returns that rows list or error message."""
+    size = os.path.getsize(path)
+    assert small_chunk < size
+    driver, jobs = _jobs_run(
+        spark, lambda: pbf_frame_index(spark, path, chunk_bytes=size))
+    assert jobs == 0
+    dist, jobs = _jobs_run(
+        spark, lambda: pbf_frame_index(spark, path, chunk_bytes=small_chunk))
+    assert jobs == 1
+    sides = [str(x) if isinstance(x, ValueError) else x
+             for x in (driver, dist)]
+    assert sides[0] == sides[1]
+    return sides[0]
+
+
 def test_interframe_garbage_fails_contiguity(spark, tmp_path):
     path, data = _make_file(tmp_path, copies=3, big_block_nodes=1000)
     blocks = list(split_fileblocks(data))
@@ -86,16 +123,17 @@ def test_interframe_garbage_fails_contiguity(spark, tmp_path):
     bad = data[:cut] + b"\x00garbage\xff" + data[cut:]
     p = tmp_path / "garbage.osm.pbf"
     p.write_bytes(bad)
-    with pytest.raises(ValueError, match="contiguous"):
-        pbf_frame_index(spark, str(p), chunk_bytes=64 * 1024)
+    err = _index_both_sides(spark, str(p), 4096)
+    assert isinstance(err, str) and "contiguous" in err, err
 
 
 def test_truncated_tail_fails(spark, tmp_path):
     path, data = _make_file(tmp_path, copies=2, big_block_nodes=1000)
     p = tmp_path / "trunc.osm.pbf"
     p.write_bytes(data[:-37])
-    with pytest.raises(ValueError, match="contiguous|trailing"):
-        pbf_frame_index(spark, str(p), chunk_bytes=64 * 1024)
+    err = _index_both_sides(spark, str(p), 4096)
+    assert isinstance(err, str) and re.search("contiguous|trailing", err), \
+        err
 
 
 def test_payloads_never_pass_driver_and_never_shuffle(spark, tmp_path):
@@ -152,7 +190,7 @@ def test_embedded_fake_frames_are_cleaned(spark, tmp_path):
     p = _embedded_file(tmp_path)
     data = p.read_bytes()
     # chunk size small enough that several boundaries land inside carrier
-    idx = pbf_frame_index(spark, str(p), chunk_bytes=64)
+    idx = _index_both_sides(spark, str(p), 64)
     assert [(o, t, d) for o, t, h, d in idx] == \
         [(b["offset"], b["blob_type"], b["datasize"])
          for b in split_fileblocks(data)]
@@ -235,6 +273,11 @@ def test_read_pbf_documents_distributed_equals_driver_path(spark, tmp_path):
                        driver_index=True)
     f2 = read_pbf_file(spark, path, chunk_bytes=32 * 1024,
                        driver_index=False)
+    # the validated index is a stored leaf: no action on the tables
+    # re-runs the distributed header scan (its MapInArrow)
+    from osmpbf_spark.plans.audit import explain_formatted
+    assert "MapInArrow" not in explain_formatted(f2.blobs)
+    assert "MapInArrow" not in explain_formatted(f2.documents)
     assert sorted(map(tuple, f1.blobs.collect())) == \
         sorted(map(tuple, f2.blobs.collect()))
     d1, m1 = f1.documents, f1.media
@@ -349,7 +392,8 @@ def test_file_backed_pip_plan_one_python_node(spark, tmp_path):
     # the pbf_pip pass shape: file-backed nodes → grid → PIP → count. The
     # decode is the plan's only Python node, reads the range table
     # straight from a LocalTableScan (no Python-RDD scan, no exchange
-    # below it) and no payload column exists anywhere
+    # below it) and no payload column exists anywhere. The memoized
+    # cover is one checkpointed leaf, not a cached HOF build plan
     from osmpbf_spark.functions.grid import with_grid_cells
     from osmpbf_spark.operators.pip import make_polygons, pip_join
     from osmpbf_spark.plans.audit import explain_formatted
@@ -371,25 +415,37 @@ def test_file_backed_pip_plan_one_python_node(spark, tmp_path):
         return pip_join(with_grid_cells(eng.nodes(), res=16), polys,
                         res=16).groupBy().count()
 
-    for _ in range(2):          # the cover memo persists on its first hit
+    # a one-chunk file is indexed in the driver: no Spark job
+    _, jobs = _jobs_run(spark, lambda: Engine.from_pbf_path(spark, str(p)))
+    assert jobs == 0
+    for _ in range(2):          # the cover memo is stored on its first hit
         counted().collect()
     df = counted()
-    sc = spark.sparkContext
-    group = f"file-pip-plan-{id(df)}"
-    sc.setJobGroup(group, "file-backed pip count")
-    try:
-        assert df.collect()[0][0] > 0
-    finally:
-        sc.setJobGroup(None, None)
+    rows, jobs = _jobs_run(spark, df.collect)
+    assert rows[0][0] > 0
     tree = _final_tree(df)
     py = [i for i, ln in enumerate(tree) if _PYTHON_NODE.search(ln)]
     assert len(py) == 1, tree
     below = _subtree(tree, py[0])
     assert [ln.strip(" :|+-") for ln in below] == ["LocalTableScan (1)"], \
         below
-    assert not [ln for ln in tree if "Scan ExistingRDD" in ln]
-    assert not re.search(r"\bpayload\b", explain_formatted(df))
+    text = explain_formatted(df)
+    # no Python-RDD scan anywhere; the one RDD scan is the cover leaf,
+    # read straight into its broadcast, and nothing is cached
+    assert "applySchemaToPythonRDD" not in text
+    rdd = [i for i, ln in enumerate(tree) if "Scan ExistingRDD" in ln]
+    assert len(rdd) == 1, tree
+    bx = max(i for i in range(rdd[0]) if "BroadcastExchange" in tree[i])
+    assert [ln.strip(" :|+-*").split(" (")[0]
+            for ln in _subtree(tree, bx)] == ["Filter", "Scan ExistingRDD"], \
+        tree
+    node = re.search(r"\((\d+)\)", tree[rdd[0]]).group(1)
+    detail = text.split(f"\n({node}) Scan ExistingRDD", 1)[1].split(
+        "\n\n", 1)[0]
+    assert "at localCheckpoint" in detail, detail
+    assert "poly_id" in detail and "full" in detail, detail
+    assert not re.search(r"InMemory(TableScan|Relation)", text)
+    assert not re.search(r"\bpayload\b", text)
     # drift-free: the count runs one job per query stage, whatever the
-    # host load (the frame-index collect ran in from_pbf_path, outside)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+    # host load
+    assert jobs == 4

@@ -1,15 +1,24 @@
 """Regenerate PLANS.md: formatted physical plans of the flagship
 operators, with the scale-relevant properties called out. Run after any
-operator change: python tools/dump_plans.py"""
+operator change: python tools/dump_plans.py
+
+``python tools/dump_plans.py --pin NAME`` re-prints one pinned default
+scan of ``plans/default_scans/NAME.txt`` (pbf_pip, read_elements,
+read_elements_broadcast_media) in this fresh local[2] session: its
+id-normalized and full sha256 and its node tree. It exits 1 when the
+id-normalized sha256 differs from the one the pin records."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+PIN_DIR = os.path.join(REPO, "plans", "default_scans")
+PIN_SHA = re.compile(r"^# id-normalized sha256[^:]*: ([0-9a-f]{64})$", re.M)
 
 
 def fmt(df, max_lines=60):
@@ -377,5 +386,81 @@ def main():
     spark.stop()
 
 
+def normalized_sha256(text: str) -> str:
+    """sha256 of a formatted plan with its session-dependent ids masked
+    (``#n`` expression ids, ``plan_id=n``, ``RDD[n]``): two prints of
+    one plan hash alike whatever their sessions ran before."""
+    for pat, rep in ((r"#\d+", "#n"), (r"plan_id=\d+", "plan_id=n"),
+                     (r"RDD\[\d+\]", "RDD[n]")):
+        text = re.sub(pat, rep, text)
+    return hashlib.sha256(text.encode()).hexdigest()
+
+
+def pin_plan(name: str) -> str:
+    """Formatted executed plan of one default scan over the synth 20k-node
+    .osm.pbf (seed 1): ``pbf_pip`` is the third file-backed nodes →
+    ``with_grid_cells(res=16)`` → ``pip_join`` (bench.py's boxes) →
+    count pass, so the cover memo is warm; ``read_elements*`` collect
+    ``read_elements`` over the file engine's (documents, media)."""
+    import tempfile
+
+    from osmpbf_spark.api import Engine
+    from osmpbf_spark.functions.grid import with_grid_cells
+    from osmpbf_spark.operators.pip import make_polygons, pip_join
+    from osmpbf_spark.pbf.encode import frame_fileblock
+    from osmpbf_spark.plans.audit import explain_formatted
+    from osmpbf_spark.session import get_spark
+    from osmpbf_spark.sources.documents import read_elements
+    from osmpbf_spark.sources.synth import synth_fileblocks
+
+    spark = get_spark("default-scan-pin", master="local[2]",
+                      shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    b = 1_000_000_000
+    with tempfile.TemporaryDirectory() as tmp:
+        path = os.path.join(tmp, "synth-20k-s1.osm.pbf")
+        with open(path, "wb") as f:
+            for t, blob in synth_fileblocks(20_000, seed=1)[0]:
+                f.write(frame_fileblock(t, blob))
+        if name == "pbf_pip":
+            polys = make_polygons(spark, [
+                (pid, [(a, c), (d, c), (d, e), (a, e), (a, c)])
+                for pid, a, c, d, e in [
+                    ("megacity", 42_900 * b // 1000, 8_900 * b // 1000,
+                     43_100 * b // 1000, 9_100 * b // 1000),
+                    ("band", 44 * b, 5 * b, 46 * b, 15 * b),
+                    ("corner", 40 * b, 5 * b, 41 * b, 6 * b)]])
+            for _ in range(3):
+                df = pip_join(with_grid_cells(
+                    Engine.from_pbf_path(spark, path).nodes(), res=16),
+                    polys, res=16).groupBy().count()
+                df.collect()
+        else:
+            eng = Engine.from_pbf_path(spark, path)
+            df = read_elements(eng.documents, eng.media,
+                               broadcast_media=name.endswith("_media"))
+            df.collect()
+        text = explain_formatted(df)
+    spark.stop()
+    return text
+
+
+def check_pin(name: str) -> int:
+    text = pin_plan(name)
+    got = normalized_sha256(text)
+    print(f"id-normalized sha256: {got}")
+    print(f"full sha256:          "
+          f"{hashlib.sha256(text.encode()).hexdigest()}")
+    print(text.split("\n\n")[0])
+    with open(os.path.join(PIN_DIR, name + ".txt")) as f:
+        m = PIN_SHA.search(f.read())
+    if m is None or m.group(1) != got:
+        print(f"{name}: pinned {m and m.group(1)}, printed {got}")
+        return 1
+    return 0
+
+
 if __name__ == "__main__":
+    if sys.argv[1:2] == ["--pin"]:
+        sys.exit(check_pin(sys.argv[2]))
     main()
