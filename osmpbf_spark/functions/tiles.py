@@ -61,14 +61,3 @@ def with_tiles(df: DataFrame, *, zoom: int = 12, lat_col: str = "lat",
         out_col,
         F.when(F.col(lat_col).isNotNull(),
                tile_id(F.col(lat_col), F.col(lon_col), zoom)))
-
-
-def raster_vector_assignment(points: DataFrame, *, zoom: int = 12,
-                             lat_col: str = "lat", lon_col: str = "lon"
-                             ) -> DataFrame:
-    """Per-tile element counts — the raster↔vector assignment rollup
-    (each vector element lands in exactly one raster tile; a tile-keyed
-    equi-join against raster metadata follows for enrichment)."""
-    return (with_tiles(points, zoom=zoom, lat_col=lat_col, lon_col=lon_col)
-            .filter(F.col("tile").isNotNull())
-            .groupBy("tile").agg(F.count("*").alias("cnt")))

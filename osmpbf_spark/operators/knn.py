@@ -31,7 +31,7 @@ from ..functions.grid import (
     cell_xy,
     neighbor_offsets,
 )
-from ..session import local_relation, materialize
+from ..session import job_labels, local_relation, materialize
 
 # disks double up to _MAX_DISK; open queries left after it take the
 # brute-force backstop. A tail of open queries whose candidate cells at
@@ -128,19 +128,16 @@ def grid_knn(points: DataFrame, queries: DataFrame, k: int, *,
     q_cols = [query_id_col, "lat_nano", "lon_nano"]
 
     spark = points.sparkSession
-    sc = spark.sparkContext
-    caller_desc = sc.getLocalProperty("spark.job.description")
     # planner's size of an exploded query row: UnsafeRow null-bitset
     # word plus one word per long column (q_cols + jcell)
     row_bytes = 8 * (len(q_cols) + 2)
     bcast_bytes = (spark._jsparkSession.sessionState().conf()
                    .autoBroadcastJoinThreshold())
 
-    try:
+    with job_labels(spark, "grid_knn probe") as label:
         # ONE plain action over two independent 1-row aggregates (a
         # union, never a join: a join would run an aggregate inside a
         # BroadcastExchange build thread and race broadcastTimeout)
-        sc.setJobDescription("grid_knn probe")
         _, px, py = cell_xy("jcell")
         stats = {r["side"]: r for r in pts.select(
             F.lit("p").alias("side"), F.count("*").alias("rows"),
@@ -195,8 +192,8 @@ def grid_knn(points: DataFrame, queries: DataFrame, k: int, *,
                 shape, cand = "bcast", F.broadcast(cand)
             else:
                 shape = "shuffle"
-            sc.setJobDescription(f"grid_knn r{rnd} disk={disk} {shape} "
-                                 f"open={remaining_n}{est}")
+            label(f"grid_knn r{rnd} disk={disk} {shape} "
+                  f"open={remaining_n}{est}")
             est = ""
             # guard pre-filter BEFORE the window: a candidate at dist ≥
             # disk*cell_h can never be in a PASSING query's top-k, and
@@ -250,8 +247,6 @@ def grid_knn(points: DataFrame, queries: DataFrame, k: int, *,
                               .filter(F.col("rn") <= k)
                               .select(query_id_col, F.col(id_col), "dist2",
                                       "rn"))
-    finally:
-        sc.setJobDescription(caller_desc)
     out = done_parts[0]
     for p in done_parts[1:]:
         out = out.unionByName(p)

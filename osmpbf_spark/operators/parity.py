@@ -27,18 +27,6 @@ def tag_eq(key: str, value: str) -> Column:
     return F.element_at("tags", key) == value
 
 
-def has_tag(key: str) -> Column:
-    return F.element_at("tags", key).isNotNull()
-
-
-def filter_visible(elements: DataFrame) -> DataFrame:
-    """Snapshot semantics for history (.osh) inputs: drop deleted versions
-    (P15, /root/reference/src/elements.rs:614-626). Elements with no Info
-    carry visible=NULL and are kept (proto default is true)."""
-    return elements.filter(
-        F.col("visible").isNull() | F.col("visible"))
-
-
 def ways_and_deps(elements: DataFrame, way_predicate: Column,
                   *, broadcast_ids: bool = True) -> tuple[DataFrame, DataFrame]:
     """The reference's two-pass filtered semi-join

@@ -8,7 +8,11 @@ counterpart (the reference has only the way→node semi-join,
   1. cover: the CLASSIFIED cover (``polygon_cover(classify=True)``):
      each polygon's bbox cells split into BOUNDARY cells (some ring edge
      may pass through), FULL cells (inside; complete blocks coarsened
-     to one parent cell) and outside cells (dropped) — sequence-explode,
+     to one parent cell) and outside cells (dropped). It is built on
+     the scanline's band join of cell rows × ring edges: each edge's
+     padded span marks boundary cells, and a gap between spans is FULL
+     iff an odd number of the row's center-latitude crossings lie left
+     of it — crossing-count parity, no ray cast. Sequence-explode,
      distributed; tiny result → broadcast, memoized per polygon set
      (:func:`cover_for`),
   2. prefilter: points equi-join cover on cell — a broadcast hash join,
@@ -40,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.grid import GRID_RES_FINE, grid_xy_sql
-from ..session import local_relation, materialize
+from ..session import job_labels, local_relation, materialize
 
 POLYGONS_DDL = ("poly_id string, "
                 "ring array<struct<lat_nano:bigint,lon_nano:bigint>>")
@@ -48,6 +52,17 @@ POLYGONS_DDL = ("poly_id string, "
 # classified covers aggregate complete 2^4×2^4 full-cell blocks into one
 # parent supercell at res - _COARSE_STEP (see _classified_cover)
 _COARSE_STEP = 4
+
+
+def _coarse_parent(cell: str, cres: int):
+    """The res-``cres`` parent of a res-(cres + _COARSE_STEP) cell id —
+    the same arithmetic on the cover side and the point side."""
+    from ..functions.grid import RES_SHIFT, Y_SHIFT, cell_xy
+    k = 1 << _COARSE_STEP
+    _, x, y = cell_xy(cell)
+    return (F.lit(cres).cast("long") * F.lit(RES_SHIFT)
+            + (x / k).cast("long") * F.lit(Y_SHIFT)
+            + (y / k).cast("long"))
 
 
 def ring_bounds_sql(ring: str = "ring", id_col: str = "poly_id") -> str:
@@ -205,20 +220,26 @@ def polygon_cover(polygons: DataFrame, res: int = GRID_RES_FINE,
     one cover :func:`pip_join` accepts: returns (poly_id, _ck, cell,
     full) instead of (poly_id, cell) — every bbox cell is classified as
     BOUNDARY (some ring edge may pass through it; ``full=false``, must
-    be refined), FULL (no edge touches it and its center is inside;
+    be refined), FULL (no edge touches it and it is inside;
     ``full=true``, every point in it is inside — the per-point ray
     cast is skippable), or fully OUTSIDE
-    (no edge touches it, center outside — dropped from the cover, so
-    its points never even reach the refine). Classification reuses the
-    scanline's per-edge band spans with the same ±1-cell float-safety
-    pad, so a cell is only called uniform when it is ≥ 1 cell away
-    from every edge's padded span — exact by the same argument that
-    makes the tight cover lossless. The center test is the exact
-    integer ray cast, run once per uniform COVER cell (broadcast-small
-    side) instead of once per point. ``tight`` extent-tightening is
-    subsumed (uniform-outside cells are dropped entirely) and ignored.
-    ``_ck`` (the ring-content key) is kept so callers can join the
-    matching antimeridian ring copy without fanning out."""
+    (no edge touches it, outside — dropped from the cover, so
+    its points never even reach the refine). Classification runs on
+    the same band-join rows as the scanline, with the same ±1-cell
+    float-safety pad, so a cell is only called uniform when it lies
+    outside every edge's padded span — exact by the same argument that
+    makes the tight cover lossless. Inside/outside needs no ray cast:
+    the edges crossing the row's center latitude are found with the
+    ray cast's exact integer half-open test, and each crossing lies in
+    its own padded span, so strictly left or right of every uniform
+    gap. Under the half-open rule a closed ring crosses any latitude an
+    even number of times, so the crossings left of a gap have the
+    parity of those right of it, the ones a ray cast from the gap
+    counts: the gap is FULL iff the left count is odd. ``tight``
+    extent-tightening is subsumed (uniform-outside cells are dropped
+    entirely) and ignored. ``_ck`` (the ring-content key) is kept so
+    callers can join the matching antimeridian ring copy without
+    fanning out."""
     if classify:
         return _classified_cover(polygons, res)
     if tight == "auto":
@@ -239,55 +260,16 @@ def polygon_cover(polygons: DataFrame, res: int = GRID_RES_FINE,
                 f"polygon_cover: {chk['nullv']} polygon(s) contain NULL "
                 "vertices (unresolved ref?) — resolve or drop them first")
         tight = (chk["m"] or 0) > 5   # closed ring: 5 verts == 4 edges
-    from ..functions.grid import NANO_360, RES_SHIFT, Y_SHIFT
-    n = 1 << res
+    from ..functions.grid import RES_SHIFT, Y_SHIFT
     polygons, rows = _bbox_rows(polygons, res)
     if tight:
-        band_h = NANO_360 / 2 / n   # lat height of one cell row (double)
-        # EDGES AS ROWS, not a per-row HOF: higher-order lambdas are
-        # interpreted in Spark, and inlining the edge array into each
-        # exploded row would re-evaluate it O(edges × rows) times. One
-        # explode per polygon, then a codegen'd band join + hash
-        # aggregate does the same scanline.
-        edges = (polygons
-                 .select("poly_id", "_ck", F.explode(F.expr(
-                     "zip_with(slice(ring, 1, size(ring) - 1), "
-                     "slice(ring, 2, size(ring) - 1), (a, b) -> struct("
-                     "CAST(LEAST(a.lat_nano, b.lat_nano) AS DOUBLE) AS lo, "
-                     "CAST(GREATEST(a.lat_nano, b.lat_nano) AS DOUBLE) AS hi, "
-                     "CAST(a.lat_nano AS DOUBLE) AS la1, "
-                     "CAST(a.lon_nano AS DOUBLE) AS lo1, "
-                     "CAST(b.lat_nano AS DOUBLE) AS la2, "
-                     "CAST(b.lon_nano AS DOUBLE) AS lo2))")).alias("e"))
-                 .select("poly_id", "_ck", "e.*"))
-        blo = F.col("cy") * F.lit(band_h) - F.lit(9e10) - F.lit(1.0)
-        bhi = ((F.col("cy") + 1) * F.lit(band_h) - F.lit(9e10)
-               + F.lit(1.0))
-
-        def lon_at(t):
-            # lon of the edge at lat t clamped into the edge's lat range
-            return (F.col("lo1") + (F.col("lo2") - F.col("lo1"))
-                    * (F.greatest(F.least(t, F.col("hi")), F.col("lo"))
-                       - F.col("la1")) / (F.col("la2") - F.col("la1")))
-        flat = F.col("la1") == F.col("la2")
-        l0, l1 = lon_at(blo), lon_at(bhi)
-        hit = (rows.join(F.broadcast(edges), ["poly_id", "_ck"])
-               .filter((F.col("lo") <= bhi) & (F.col("hi") >= blo))
-               .select("poly_id", "_ck", "cy", "x0", "x1",
-                       F.when(flat, F.least("lo1", "lo2"))
-                       .otherwise(F.least(l0, l1)).alias("lmn"),
-                       F.when(flat, F.greatest("lo1", "lo2"))
-                       .otherwise(F.greatest(l0, l1)).alias("lmx")))
-        span = hit.groupBy("poly_id", "_ck", "cy", "x0", "x1").agg(
-            F.min("lmn").alias("mn"), F.max("lmx").alias("mx"))
-        # double→cell x with a ±1-cell pad (every bbox row of a closed
-        # ring meets ≥1 edge, so the groupBy loses no rows)
-        xf = (f"CAST(floor(({{m}} + {180_000_000_000}D) * {n} "
-              f"/ {360_000_000_000}D) AS BIGINT)")
-        rows = span.select(
-            "poly_id", "cy",
-            F.expr(f"GREATEST(x0, {xf.format(m='mn')} - 1)").alias("rx0"),
-            F.expr(f"LEAST(x1, {xf.format(m='mx')} + 1)").alias("rx1"))
+        # floor is monotone, so clamping the min/max of the per-edge
+        # padded spans equals padding the min/max lon (every bbox row
+        # of a closed ring meets ≥1 edge, so the groupBy loses no rows)
+        rows = (_band_hits(polygons, rows, res)
+                .groupBy("poly_id", "_ck", "cy", "x0", "x1")
+                .agg(F.greatest(F.col("x0"), F.min("ux0")).alias("rx0"),
+                     F.least(F.col("x1"), F.max("ux1")).alias("rx1")))
     else:
         rows = rows.select("poly_id", "cy", F.col("x0").alias("rx0"),
                            F.col("x1").alias("rx1"))
@@ -300,67 +282,103 @@ def polygon_cover(polygons: DataFrame, res: int = GRID_RES_FINE,
                      + F.col("cy")).alias("cell")))
 
 
-def _classified_cover(polygons: DataFrame, res: int) -> DataFrame:
-    """Classified cover: (poly_id, _ck, cell, full) — see
-    :func:`polygon_cover` ``classify=True``. Boundary detection reuses
-    the scanline's per-edge lat-band lon spans (double interpolation
-    with the same ±1 nano and ±1 cell pads, so float error can only
-    WIDEN the boundary set); uniform cells run ONE exact integer ray
-    cast on their center, and keep (full) or drop (outside) the cell."""
-    from ..functions.grid import (
-        NANO_90,
-        NANO_180,
-        NANO_360,
-        RES_SHIFT,
-        Y_SHIFT,
-        cell_xy,
-    )
+def _band_hits(polygons: DataFrame, rows: DataFrame, res: int
+               ) -> DataFrame:
+    """The scanline's band join: one row per (bbox cell row, ring edge
+    meeting that row's lat band) — poly_id, _ck, cy, x0, x1, the edge's
+    UNCLAMPED padded cell span ``ux0..ux1`` and ``cross``, whether the
+    edge crosses the row's center latitude (the exact integer half-open
+    test of ``_RAY_CAST``). ``polygons``/``rows`` as :func:`_bbox_rows`
+    returns them.
+
+    EDGES AS ROWS, not a per-row HOF: higher-order lambdas are
+    interpreted in Spark, and inlining the edge array into each
+    exploded row would re-evaluate it O(edges × rows) times. One
+    explode per polygon, then a codegen'd broadcast band join."""
+    from ..functions.grid import NANO_90, NANO_180, NANO_360
     n = 1 << res
-    _, rows = _bbox_rows(polygons, res)
-    # Everything below is ROW-LOCAL on the (small by contract) polygons
-    # side — no join, no shuffle, same stage count as the bbox cover.
-    # Per-edge lat-band lon spans: same construction and pads as the
-    # tight scanline above, rendered as a nested HOF over the ring
-    # (edge counts here are polygon complexity, not data volume).
-    band_h = NANO_360 / 2 / n
-    blo = f"(cy * {band_h!r}D - {float(NANO_90)!r}D - 1.0D)"
-    bhi = f"((cy + 1) * {band_h!r}D - {float(NANO_90)!r}D + 1.0D)"
+    band_h = NANO_360 / 2 / n   # lat height of one cell row (double)
+    # la1/la2 stay integer: exact in the crossing test, and exact as
+    # doubles in the interpolation (|lat| < 2^53)
+    edges = (polygons
+             .select(F.col("poly_id").alias("_eid"),
+                     F.col("_ck").alias("_eck"), F.explode(F.expr(
+                 "zip_with(slice(ring, 1, size(ring) - 1), "
+                 "slice(ring, 2, size(ring) - 1), (a, b) -> struct("
+                 "CAST(LEAST(a.lat_nano, b.lat_nano) AS DOUBLE) AS lo, "
+                 "CAST(GREATEST(a.lat_nano, b.lat_nano) AS DOUBLE) AS hi, "
+                 "a.lat_nano AS la1, CAST(a.lon_nano AS DOUBLE) AS lo1, "
+                 "b.lat_nano AS la2, CAST(b.lon_nano AS DOUBLE) AS lo2))"
+             )).alias("e"))
+             .select("_eid", "_eck", "e.*"))
+    # the row's lat band, padded ±1 nano against float error
+    blo = F.col("cy") * F.lit(band_h) - F.lit(9e10) - F.lit(1.0)
+    bhi = (F.col("cy") + 1) * F.lit(band_h) - F.lit(9e10) + F.lit(1.0)
 
     def lon_at(t):
-        return (f"(e.lo1 + (e.lo2 - e.lo1) * "
-                f"(GREATEST(LEAST({t}, e.hi), e.lo) - e.la1) / "
-                f"(e.la2 - e.la1))")
+        # lon of the edge at lat t clamped into the edge's lat range
+        return (F.col("lo1") + (F.col("lo2") - F.col("lo1"))
+                * (F.greatest(F.least(t, F.col("hi")), F.col("lo"))
+                   - F.col("la1")) / (F.col("la2") - F.col("la1")))
+
+    def xcell(m):
+        # double lon → unwrapped cell x
+        return F.expr(f"CAST(floor(({m} + {NANO_180}D) * {n} "
+                      f"/ {NANO_360}D) AS BIGINT)")
+    flat = F.col("la1") == F.col("la2")
     l0, l1 = lon_at(blo), lon_at(bhi)
-    lmn = (f"CASE WHEN e.la1 = e.la2 THEN LEAST(e.lo1, e.lo2) "
-           f"ELSE LEAST({l0}, {l1}) END")
-    lmx = (f"CASE WHEN e.la1 = e.la2 THEN GREATEST(e.lo1, e.lo2) "
-           f"ELSE GREATEST({l0}, {l1}) END")
-    xf = (f"CAST(floor(({{m}} + {NANO_180}D) * {n} "
-          f"/ {NANO_360}D) AS BIGINT)")
-    ed = ("zip_with(slice(ring, 1, size(ring) - 1), "
-          "slice(ring, 2, size(ring) - 1), (a, b) -> struct("
-          "CAST(LEAST(a.lat_nano, b.lat_nano) AS DOUBLE) AS lo, "
-          "CAST(GREATEST(a.lat_nano, b.lat_nano) AS DOUBLE) AS hi, "
-          "CAST(a.lat_nano AS DOUBLE) AS la1, "
-          "CAST(a.lon_nano AS DOUBLE) AS lo1, "
-          "CAST(b.lat_nano AS DOUBLE) AS la2, "
-          "CAST(b.lon_nano AS DOUBLE) AS lo2))")
-    # NULL span = edge misses the band, or its padded span falls outside
-    # the in-range x window of an antimeridian copy — dropped by the
-    # filter; the ROW survives, its cells classified by the center test
-    spans = (f"sort_array(filter(transform({ed}, e -> "
-             f"CASE WHEN e.lo <= {bhi} AND e.hi >= {blo} THEN struct("
-             f"GREATEST(x0, {xf.format(m=f'({lmn})')} - 1) AS bx0, "
-             f"LEAST(x1, {xf.format(m=f'({lmx})')} + 1) AS bx1) END), "
-             f"s -> s.bx1 >= s.bx0))")
+    # the row's exact integer center latitude (strictly inside the row:
+    # the grid divisors never divide NANO_180 exactly)
+    clat = F.expr(f"(((2 * cy + 1) * {NANO_180}) DIV {2 * n}) - {NANO_90}")
+    # NULL-safe on poly_id: a ring without an id keeps its rows, as in
+    # the bbox cover (an equi-join would drop them)
+    return (rows.join(F.broadcast(edges),
+                      F.col("poly_id").eqNullSafe(F.col("_eid"))
+                      & (F.col("_ck") == F.col("_eck")))
+            .filter((F.col("lo") <= bhi) & (F.col("hi") >= blo))
+            .select("poly_id", "_ck", "cy", "x0", "x1",
+                    F.when(flat, F.least("lo1", "lo2"))
+                    .otherwise(F.least(l0, l1)).alias("lmn"),
+                    F.when(flat, F.greatest("lo1", "lo2"))
+                    .otherwise(F.greatest(l0, l1)).alias("lmx"),
+                    ((F.col("la1") > clat) != (F.col("la2") > clat))
+                    .alias("cross"))
+            # ±1-cell float-safety pad: the edge's true cells in this
+            # row lie within ux0..ux1
+            .select("poly_id", "_ck", "cy", "x0", "x1", "cross",
+                    (xcell("lmn") - 1).alias("ux0"),
+                    (xcell("lmx") + 1).alias("ux1")))
+
+
+def _classified_cover(polygons: DataFrame, res: int) -> DataFrame:
+    """Classified cover: (poly_id, _ck, cell, full) — see
+    :func:`polygon_cover` ``classify=True``. Built on the scanline's
+    band-join rows (:func:`_band_hits`), one groupBy per cell row: the
+    row's merged padded edge spans are its BOUNDARY cells; each gap
+    between them is uniform, and it is FULL iff an odd number of the
+    row's center-latitude crossings lie to its left (the crossing-count
+    parity equals the ray cast's, since the total is even). Cost is
+    O(band hits), independent of how many cells the intervals explode
+    to; complete blocks of FULL cells are then coarsened."""
+    from ..functions.grid import RES_SHIFT, Y_SHIFT
+    polygons, rows = _bbox_rows(polygons, res)
+    cx0 = F.greatest(F.col("x0"), F.col("ux0"))
+    cx1 = F.least(F.col("x1"), F.col("ux1"))
+    # per row: the sorted non-empty spans clamped to the copy's x window
+    # (an antimeridian copy's out-of-window edges clamp to nothing), and
+    # the UNCLAMPED right end of every crossing edge — clamped-out edges
+    # still count toward the parity
+    spans = (_band_hits(polygons, rows, res)
+             .groupBy("poly_id", "_ck", "cy", "x0", "x1")
+             .agg(F.sort_array(F.collect_list(F.when(
+                 cx0 <= cx1, F.struct(cx0.alias("bx0"), cx1.alias("bx1")))))
+                  .alias("sp"),
+                  F.collect_list(F.when(F.col("cross"), F.col("ux1")))
+                  .alias("xs")))
     # classification at INTERVAL granularity: merge the sorted spans
-    # (boundary intervals), complement them within [x0, x1] (uniform
-    # intervals), and ray cast ONE center per uniform interval — cells
-    # inside one interval share parity (no edge passes through any of
-    # them, and adjacent same-row cells connect without crossing an
-    # edge). Cost is O(rows × edges), independent of how many cells
-    # the intervals explode to.
-    merged = (f"aggregate({spans}, "
+    # (boundary intervals) and complement them within [x0, x1] (uniform
+    # intervals: no edge passes through any of their cells)
+    merged = ("aggregate(sp, "
               "CAST(array() AS ARRAY<STRUCT<lo:BIGINT,hi:BIGINT>>), "
               "(acc, s) -> CASE WHEN size(acc) > 0 "
               "AND s.bx0 <= element_at(acc, -1).hi + 1 "
@@ -373,16 +391,13 @@ def _classified_cover(polygons: DataFrame, res: int) -> DataFrame:
             "concat(array(x0), transform(w.m, t -> t.hi + 1)), "
             "concat(transform(w.m, t -> t.lo - 1), array(x1)), "
             "(s, e) -> struct(s AS lo, e AS hi)), g -> g.hi >= g.lo)")
-    # exact integer cell-center coordinates (strictly inside the cell:
-    # the grid divisors never divide NANO_180/NANO_360 exactly, and the
-    # floor error < one cell)
-    clat = f"(((2 * cy + 1) * {NANO_180}) DIV {2 * n}) - {NANO_90}"
-    clon = f"(((2 * g.lo + 1) * {NANO_360}) DIV {2 * n}) - {NANO_180}"
-    in_gap = _RAY_CAST.format(px=clon, py=clat, ring="ring")
+    # a gap is inside iff an odd number of crossings lie left of it
+    # (no crossing lies in a gap; see polygon_cover for the parity)
+    in_gap = "size(filter(xs, u -> u < g.lo)) % 2 = 1"
     # w-wrapper = a let-binding: the merged-span array evaluates ONCE
-    # per row even though the interval builder references it four times
-    # (projection collapse would otherwise re-inline the whole span
-    # pipeline per reference — the known interpreted-HOF trap)
+    # per row even though the interval builder references it three times
+    # (projection collapse would otherwise re-inline the fold per
+    # reference — the known interpreted-HOF trap)
     ivs = (f"element_at(transform(array(struct(({merged}) AS m)), w -> "
            f"concat("
            f"transform(w.m, s -> struct(s.lo AS lo, s.hi AS hi, "
@@ -391,7 +406,7 @@ def _classified_cover(polygons: DataFrame, res: int) -> DataFrame:
            f"g -> struct(g.lo AS lo, g.hi AS hi, true AS full)))), 1)")
     cell_id = (F.lit(res).cast("long") * F.lit(RES_SHIFT)
                + F.col("cx") * F.lit(Y_SHIFT) + F.col("cy"))
-    fine = (rows
+    fine = (spans
             .select("poly_id", "_ck", "cy",
                     F.explode(F.expr(ivs)).alias("iv"))
             .select("poly_id", "_ck", "cy", F.col("iv.full").alias("full"),
@@ -408,26 +423,20 @@ def _classified_cover(polygons: DataFrame, res: int) -> DataFrame:
     # cell id. ``pip_join`` probes points by BOTH their fine cell and
     # its res-4 parent (see the `_osmpbf_coarse_res` marker).
     cres = res - _COARSE_STEP
-    k = 1 << _COARSE_STEP
-    r0, x, y = cell_xy("cell")
-    parent = (F.lit(cres).cast("long") * F.lit(RES_SHIFT)
-              + (x / k).cast("long") * F.lit(Y_SHIFT)
-              + (y / k).cast("long"))
-    fullc = fine.filter("full").withColumn("pcell", parent)
-    counts = (fullc.groupBy("poly_id", "_ck", "pcell")
-              .agg(F.count("*").alias("_n")))
-    coarse = (counts.filter(F.col("_n") == k * k)
-              .select("poly_id", "_ck", F.col("pcell").alias("cell"),
-                      F.lit(True).alias("full")))
+    fullc = fine.filter("full").withColumn("pcell",
+                                           _coarse_parent("cell", cres))
+    blocks = (fullc.groupBy("poly_id", "_ck", "pcell").count()
+              .filter(F.col("count") == 1 << 2 * _COARSE_STEP)
+              .select("poly_id", "_ck", "pcell"))
+    coarse = blocks.select("poly_id", "_ck", F.col("pcell").alias("cell"),
+                           F.lit(True).alias("full"))
     # the anti-join's right side is one row per COMPLETE parent block —
     # cover-scale/256, broadcast-small by the same contract as the
     # polygons side (and without the hint the unknown post-aggregation
     # stats plan a SortMergeJoin, shuffling the cover build)
-    resid_full = (fullc.join(F.broadcast(
-        counts.filter(F.col("_n") == k * k)
-        .select("poly_id", "_ck", "pcell")),
-        ["poly_id", "_ck", "pcell"], "left_anti")
-        .select("poly_id", "_ck", "cell", "full"))
+    resid_full = (fullc.join(F.broadcast(blocks),
+                             ["poly_id", "_ck", "pcell"], "left_anti")
+                  .select("poly_id", "_ck", "cell", "full"))
     out = (fine.filter(~F.col("full"))
            .unionByName(resid_full).unionByName(coarse))
     out._osmpbf_coarse_res = cres
@@ -578,7 +587,8 @@ def cover_for(polygons: DataFrame, res: int = GRID_RES_FINE) -> DataFrame:
             _COVER_CACHE.append([polygons, res, cover, False])
             del _COVER_CACHE[:-_COVER_CACHE_MAX]
         return cover
-    leaf = materialize(hit[2].coalesce(1))
+    with job_labels(polygons.sparkSession, f"pip cover store res={res}"):
+        leaf = materialize(hit[2].coalesce(1))
     cres = getattr(hit[2], "_osmpbf_coarse_res", None)
     if cres is not None:
         leaf._osmpbf_coarse_res = cres
@@ -633,14 +643,8 @@ def pip_join(points: DataFrame, polygons: DataFrame, *,
         # res-4 parent (the two row classes partition each polygon's
         # interior, so every (point, polygon) pair matches exactly one
         # cover row)
-        from ..functions.grid import RES_SHIFT, Y_SHIFT, cell_xy
-        k = 1 << _COARSE_STEP
-        _, x, y = cell_xy(cell_col)
-        parent = (F.lit(cres).cast("long") * F.lit(RES_SHIFT)
-                  + (x / k).cast("long") * F.lit(Y_SHIFT)
-                  + (y / k).cast("long"))
-        keyed = pts.withColumn(
-            "_jkey", F.explode(F.array(F.col(cell_col), parent)))
+        keyed = pts.withColumn("_jkey", F.explode(F.array(
+            F.col(cell_col), _coarse_parent(cell_col, cres))))
         cand = (keyed.join(F.broadcast(cover),
                            keyed["_jkey"] == cover["cell"])
                 .drop("_jkey").drop(cover["cell"]))

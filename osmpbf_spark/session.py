@@ -9,6 +9,7 @@ UDF path, and shuffle partitions default to a multiple of the parallelism.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -115,6 +116,21 @@ def materialize(df, *, eager: bool = True):
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=eager)
+
+
+@contextmanager
+def job_labels(spark: SparkSession, label: str):
+    """Run the body's Spark jobs under ``label`` (their
+    ``spark.job.description``, shown in the UI and the SQL status
+    store). Yields the setter, so the body can relabel later jobs; the
+    caller's description is restored on exit, also on error."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield sc.setJobDescription
+    finally:
+        sc.setJobDescription(caller)
 
 
 def get_spark(app_name: str = "osmpbf_spark", *, master: str | None = None,

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..pbf.decode import scan_chunk_frames
 from .documents import DOCUMENTS_SCHEMA, MEDIA_SCHEMA, _mmap_file
-from ..session import local_relation, materialize
+from ..session import job_labels, local_relation, materialize
 
 DEFAULT_CHUNK_BYTES = 64 * 1024 * 1024
 
@@ -77,14 +77,9 @@ def pbf_frame_index(spark: SparkSession, path: str, *,
             mm.close()
             f.close()
         return validate_frame_index(rows, size)
-    sc = spark.sparkContext
-    caller_desc = sc.getLocalProperty("spark.job.description")
-    try:
-        sc.setJobDescription("pbf frame index")
+    with job_labels(spark, "pbf frame index"):
         rows = [tuple(r) for r in
                 _scan_frames_df(spark, path, size, chunk_bytes).collect()]
-    finally:
-        sc.setJobDescription(caller_desc)
     return validate_frame_index(rows, size)
 
 

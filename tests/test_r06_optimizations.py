@@ -6,6 +6,9 @@ formulations (or an independent oracle) value-for-value, including the
 edge cases that motivated each guard.
 """
 
+import math
+import random
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -45,6 +48,38 @@ _POLY_ZOO = [
 ]
 
 
+def _subdiv_square(pid, la0, lo0, la1, lo1, k):
+    """Box ring with each side split into ``k`` collinear edges."""
+    corners = [(la0, lo0), (la0, lo1), (la1, lo1), (la1, lo0), (la0, lo0)]
+    ring = [(a0 + (a1 - a0) * t // k, b0 + (b1 - b0) * t // k)
+            for (a0, b0), (a1, b1) in zip(corners, corners[1:])
+            for t in range(k)]
+    return (pid, ring + ring[:1])
+
+
+def _radial_ring(pid, cla, clo, radii):
+    """Ring through ``radii[i]`` at angle 2πi/len(radii) (star-shaped,
+    hence simple)."""
+    m = len(radii)
+    ring = [(cla + round(r * math.sin(2 * math.pi * i / m)),
+             clo + round(r * math.cos(2 * math.pi * i / m)))
+            for i, r in enumerate(radii)]
+    return (pid, ring + ring[:1])
+
+
+_rng = random.Random(11)
+# complex rings: a 401-vertex subdivided square, a 24-edge star and a
+# 200-vertex blob across the antimeridian (unwrapped lons)
+_COMPLEX_RINGS = [
+    _subdiv_square("sq401", 40 * B, 5 * B, 42 * B, 7 * B, 100),
+    _radial_ring("star", 44 * B, 10 * B,
+                 [2 * B if i % 2 == 0 else int(0.8 * B) for i in range(24)]),
+    _radial_ring("xblob", 48 * B, int(179.5 * B),
+                 [int(1.5 * B) * (0.6 + 0.4 * _rng.random())
+                  for _ in range(200)]),
+]
+
+
 def _zoo_points(spark, n=120_000):
     pts = spark.range(0, n).select(
         F.col("id"),
@@ -58,7 +93,9 @@ def test_classified_cover_pip_join_matches_unclassified(spark,
     """pip_join over the classified (interval-tested, coarsened) cover
     must emit EXACTLY the rows of the unclassified, cover-free brute
     force (every point × every ring copy, full ray cast) — incl.
-    antimeridian copies and sub-cell polygons."""
+    antimeridian copies and sub-cell polygons, and the complex rings at
+    res 12 through the memoized cover's stored leaf, whose store runs
+    under its own job label."""
     from osmpbf_spark.operators.pip import make_polygons, pip_join
     pts = _zoo_points(spark)
     polys = make_polygons(spark, _POLY_ZOO)
@@ -67,15 +104,35 @@ def test_classified_cover_pip_join_matches_unclassified(spark,
     assert old.count() == new.count() > 0
     assert old.exceptAll(new).isEmpty()
     assert new.exceptAll(old).isEmpty()
+    # 15k points over the complex rings' bboxes, both sides of ±180°
+    rng = random.Random(20261019)
+    boxes = [(39.9, 4.9, 42.1, 7.1), (41.9, 7.9, 46.1, 12.1),
+             (46.4, 177.9, 49.6, 181.1)]
+    rows = [(i, rng.randrange(int(a * B), int(c * B)),
+             (rng.randrange(int(b * B), int(d * B)) + 180 * B)
+             % (360 * B) - 180 * B)
+            for i in range(15_000) for a, b, c, d in [boxes[i % 3]]]
+    cpts = with_grid_cells(spark.createDataFrame(
+        rows, "id long, lat_nano long, lon_nano long"), res=12)
+    cpolys = make_polygons(spark, _COMPLEX_RINGS)
+    pip_join(cpts, cpolys, res=12)          # memo miss: builds the cover
+    before = _last_execution_id(spark)
+    new = pip_join(cpts, cpolys, res=12).select("poly_id", "id")
+    assert "pip cover store res=12" in {
+        d for i, d in _executions(spark) if i > before}
+    old = pip_brute_force(cpts, cpolys).select("poly_id", "id")
+    assert {r["poly_id"] for r in new.collect()} == {"sq401", "star",
+                                                     "xblob"}
+    assert old.exceptAll(new).isEmpty()
+    assert new.exceptAll(old).isEmpty()
 
 
 def test_pip_counters_pinned(spark, pip_brute_force):
     """Drift-free counters of the PIP path: the classified cover's row
     count for the benchmark's three boxes (bench.py / perfbench) at res
-    16, and pip_join's match count for a fixed seeded point set. A
-    cover change that alters either is a plan change, not noise."""
-    import random
-
+    16, pip_join's match count for a fixed seeded point set, and the
+    complex rings' classified cover at res 12. A cover change that
+    alters any of them is a plan change, not noise."""
     from osmpbf_spark.operators.pip import (
         make_polygons,
         pip_join,
@@ -96,6 +153,16 @@ def test_pip_counters_pinned(spark, pip_brute_force):
         res=16)
     assert pip_join(pts, polys, res=16).count() == 4_373
     assert pip_brute_force(pts, polys).count() == 4_373
+    # the complex rings at res 12: cover rows, FULL rows and an
+    # order-free checksum, all three computed by the per-gap ray-cast
+    # cover this one replaced
+    pins = polygon_cover(
+        split_antimeridian(make_polygons(spark, _COMPLEX_RINGS)), 12,
+        classify=True).selectExpr(
+            "count(*)", "count_if(full)",
+            "sum(CAST(xxhash64(poly_id, _ck, cell, full) "
+            "AS DECIMAL(38, 0)))").first()
+    assert tuple(pins) == (4_811, 2_290, -556_643_048_516_512_569_461)
 
 
 def test_classified_cover_classes_partition_each_polygon(spark):
@@ -109,7 +176,7 @@ def test_classified_cover_classes_partition_each_polygon(spark):
         polygon_cover,
         split_antimeridian,
     )
-    polys = make_polygons(spark, _POLY_ZOO)
+    polys = make_polygons(spark, _POLY_ZOO + _COMPLEX_RINGS)
     cc = polygon_cover(split_antimeridian(polys), GRID_RES_FINE,
                        classify=True)
     assert getattr(cc, "_osmpbf_coarse_res", None) == \
