@@ -56,13 +56,16 @@ _COARSE_STEP = 4
 
 def _coarse_parent(cell: str, cres: int):
     """The res-``cres`` parent of a res-(cres + _COARSE_STEP) cell id —
-    the same arithmetic on the cover side and the point side."""
-    from ..functions.grid import RES_SHIFT, Y_SHIFT, cell_xy
+    the same arithmetic on the cover side and the point side. It is
+    ``grid.cell_xy``'s arithmetic written as one SQL expression: one
+    parse on the driver instead of a JVM call per operator."""
+    from ..functions.grid import RES_SHIFT, Y_SHIFT
     k = 1 << _COARSE_STEP
-    _, x, y = cell_xy(cell)
-    return (F.lit(cres).cast("long") * F.lit(RES_SHIFT)
-            + (x / k).cast("long") * F.lit(Y_SHIFT)
-            + (y / k).cast("long"))
+    rem = f"({cell} - CAST({cell} / {RES_SHIFT} AS BIGINT) * {RES_SHIFT})"
+    x = f"CAST({rem} / {Y_SHIFT} AS BIGINT)"
+    y = f"({rem} - {x} * {Y_SHIFT})"
+    return F.expr(f"CAST({cres} AS BIGINT) * {RES_SHIFT} + CAST({x} / {k} "
+                  f"AS BIGINT) * {Y_SHIFT} + CAST({y} / {k} AS BIGINT)")
 
 
 def ring_bounds_sql(ring: str = "ring", id_col: str = "poly_id") -> str:
@@ -265,11 +268,15 @@ def polygon_cover(polygons: DataFrame, res: int = GRID_RES_FINE,
     if tight:
         # floor is monotone, so clamping the min/max of the per-edge
         # padded spans equals padding the min/max lon (every bbox row
-        # of a closed ring meets ≥1 edge, so the groupBy loses no rows)
+        # of a closed ring meets ≥1 edge, so the groupBy loses no rows).
+        # A row of an antimeridian copy whose spans all lie outside the
+        # copy's x window clamps to rx0 > rx1: it covers no cell, and
+        # sequence(rx0, rx1) would count down, so it is dropped
         rows = (_band_hits(polygons, rows, res)
                 .groupBy("poly_id", "_ck", "cy", "x0", "x1")
                 .agg(F.greatest(F.col("x0"), F.min("ux0")).alias("rx0"),
-                     F.least(F.col("x1"), F.max("ux1")).alias("rx1")))
+                     F.least(F.col("x1"), F.max("ux1")).alias("rx1"))
+                .filter(F.col("rx0") <= F.col("rx1")))
     else:
         rows = rows.select("poly_id", "cy", F.col("x0").alias("rx0"),
                            F.col("x1").alias("rx1"))

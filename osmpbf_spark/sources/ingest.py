@@ -27,8 +27,8 @@ module ingests a framed PBF file of any size in two passes:
    (``documents.read_blob_ranges``): one Python node per task, and
    payload bytes never enter the JVM, the driver or a shuffle. The
    same index also builds the ``documents``/``media`` tables (media
-   sliced out of the mmap into Arrow batches) for callers that want
-   the engine's input tables, on their first access.
+   sliced out of the mmap, one Arrow batch per blob) for callers that
+   want the engine's input tables, on their first access.
 
 ``blob_no`` is the index position (identical to the single-node
 ``split_fileblocks`` numbering), so both ingest paths are
@@ -268,6 +268,32 @@ BLOBS_DDL = ("doc_id string, blob_no long, blob_type string, "
              "body_off long, datasize long")
 
 
+def _payload_fetcher(path: str):
+    """mapInArrow function over ``(media_ref, body_off, datasize)`` rows
+    of the PBF file at ``path``: one ``(media_ref, payload)`` batch per
+    row, each body sliced out of the task's map of the file before the
+    next row is read, so a task holds one payload at a time."""
+    schema = pa.schema([("media_ref", pa.string()),
+                        ("payload", pa.binary())])
+
+    def fetch(batches):
+        f, mm = _mmap_file(path)
+        try:
+            for batch in batches:
+                for ref, off, size in zip(
+                        batch.column("media_ref").to_pylist(),
+                        batch.column("body_off").to_pylist(),
+                        batch.column("datasize").to_pylist()):
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array([ref], pa.string()),
+                         pa.array([mm[off:off + size]], pa.binary())],
+                        schema=schema)
+        finally:
+            mm.close()
+            f.close()
+    return fetch
+
+
 class PbfFile:
     """A raw PBF file read through its validated frame index.
 
@@ -317,7 +343,9 @@ def read_pbf_file(spark: SparkSession, path: str, *,
     identical (pinned in tests).
 
     The media table and the distributed blob table spread over one
-    partition per blob, up to twice the default parallelism."""
+    partition per blob, up to twice the default parallelism. The media
+    table's payloads are read by :func:`_payload_fetcher`, one blob per
+    Arrow batch, so a fetch task holds one payload at a time."""
     from pyspark.sql import functions as F
 
     name = name or os.path.basename(path)
@@ -336,23 +364,6 @@ def read_pbf_file(spark: SparkSession, path: str, *,
         blobs = idx.select(doc_id.alias("doc_id"), "blob_no", "blob_type",
                            body_off.alias("body_off"), "datasize") \
             .repartition(spread, "blob_no")
-
-    def fetch(batches):
-        f, mm = _mmap_file(path)
-        try:
-            for batch in batches:
-                refs = batch.column("media_ref").to_pylist()
-                offs = batch.column("body_off").to_pylist()
-                sizes = batch.column("datasize").to_pylist()
-                payloads = [mm[o:o + s] for o, s in zip(offs, sizes)]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(refs, type=pa.string()),
-                     pa.array(payloads, type=pa.binary())],
-                    schema=pa.schema([("media_ref", pa.string()),
-                                      ("payload", pa.binary())]))
-        finally:
-            mm.close()
-            f.close()
 
     def tables():
         if driver_index:
@@ -401,7 +412,7 @@ def read_pbf_file(spark: SparkSession, path: str, *,
                              body_off.alias("body_off"), F.col("datasize"))
             parts = spread
         media = mdf.repartition(parts, "media_ref").mapInArrow(
-            fetch, ", ".join(f"{f.name} {f.dataType.simpleString()}"
+            _payload_fetcher(path), ", ".join(f"{f.name} {f.dataType.simpleString()}"
                              for f in MEDIA_SCHEMA.fields))
         return docs, media
 

@@ -165,6 +165,39 @@ def test_pip_counters_pinned(spark, pip_brute_force):
     assert tuple(pins) == (4_811, 2_290, -556_643_048_516_512_569_461)
 
 
+def test_tight_cover_within_bbox_cover(spark):
+    """The scanline cover only drops cells of the bbox cover, on every
+    ring copy: a row of an antimeridian copy whose edge spans all lie
+    outside the copy's x window covers no cell (it once counted down
+    from rx0 > rx1 and emitted out-of-range cells: 15 at res 12 and 306
+    at res 14 on ``xblob``). The polygon join, whose right cover is the
+    scanline one here, keeps its result."""
+    from osmpbf_spark.operators.pip import (
+        make_polygons,
+        polygon_cover,
+        split_antimeridian,
+    )
+    from osmpbf_spark.operators.polyjoin import polygon_intersects_join
+    polys = make_polygons(spark, _POLY_ZOO + _COMPLEX_RINGS)
+    split = split_antimeridian(polys)
+    for res in (12, 14):
+        tight = polygon_cover(split, res, tight=True)
+        bbox = polygon_cover(split, res, tight=False)
+        assert tight.exceptAll(bbox).count() == 0, res
+    pairs = {(r["left_id"], r["right_id"], r["relation"]) for r in
+             polygon_intersects_join(polys, polys, res=12).collect()}
+    assert pairs == {(a, b, "edges_cross") for a, b in [
+        ("am", "am"), ("am", "xblob"), ("band", "band"),
+        ("band", "concave"), ("band", "diamond"), ("band", "star"),
+        ("concave", "band"), ("concave", "concave"), ("concave", "star"),
+        ("diamond", "band"), ("diamond", "diamond"),
+        ("diamond", "megacity"), ("diamond", "star"),
+        ("megacity", "diamond"), ("megacity", "megacity"),
+        ("sq401", "sq401"), ("star", "band"), ("star", "concave"),
+        ("star", "diamond"), ("star", "star"), ("tiny", "tiny"),
+        ("xblob", "am"), ("xblob", "xblob")]}
+
+
 def test_classified_cover_classes_partition_each_polygon(spark):
     """Coarse supercells, residual fine fulls and boundary cells must
     tile disjoint areas: no fine cell may also be covered by a coarse

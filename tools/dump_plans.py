@@ -6,7 +6,10 @@ operator change: python tools/dump_plans.py
 scan of ``plans/default_scans/NAME.txt`` (pbf_pip, read_elements,
 read_elements_broadcast_media) in this fresh local[2] session: its
 id-normalized and full sha256 and its node tree. It exits 1 when the
-id-normalized sha256 differs from the one the pin records."""
+id-normalized sha256 differs from the one the pin records.
+``--pin`` with no name, or with several, re-checks each named pin (every
+pin in ``plans/default_scans/`` when none is named) in its own fresh
+process and exits 1 if any of them differs."""
 
 from __future__ import annotations
 
@@ -460,7 +463,21 @@ def check_pin(name: str) -> int:
     return 0
 
 
+def check_pins(names: list[str]) -> int:
+    """Re-check each pin in a fresh process; 1 if any differs."""
+    import subprocess
+    failed = [n for n in names if subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "--pin", n]).returncode]
+    for n in names:
+        print(f"{n}: {'MISMATCH' if n in failed else 'ok'}")
+    return 1 if failed else 0
+
+
 if __name__ == "__main__":
     if sys.argv[1:2] == ["--pin"]:
-        sys.exit(check_pin(sys.argv[2]))
+        names = sys.argv[2:] or sorted(
+            f[:-len(".txt")] for f in os.listdir(PIN_DIR)
+            if f.endswith(".txt"))
+        sys.exit(check_pin(names[0]) if len(names) == 1
+                 else check_pins(names))
     main()
