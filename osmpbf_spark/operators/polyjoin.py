@@ -14,8 +14,9 @@ Shape at scale (the PIP recipe, one side heavier):
    (:func:`pip.polygon_cover`). The right side is broadcast-small by
    contract (admin/zone layers) and takes the ``tight="auto"`` cover;
    the left side is arbitrarily large and its cover is computed
-   distributed with ``tight=False`` (the scanline variant broadcasts
-   edge lists — only safe for the small side).
+   distributed with ``tight=False``: the scanline's edge explode and
+   per-row groupBy cost more to build than the refine saves on the
+   bbox cover's extra candidates.
 2. **candidates**: left cover ⋈ broadcast(right cover) on cell →
    DISTINCT (left, right) id pairs. The only shuffle of the candidate
    stage carries bare id pairs, never ring payloads.
@@ -64,8 +65,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.grid import GRID_RES_COARSE
-from .pip import polygon_cover, ring_bounds_sql, split_antimeridian
+from ..functions.grid import GRID_RES_COARSE, grid_xy_sql
+from .pip import (
+    edge_rows_sql,
+    polygon_cover,
+    ring_bounds_sql,
+    ring_edges_sql,
+    split_antimeridian,
+)
 
 __all__ = ["polygon_intersects_join", "segments_intersect_sql"]
 
@@ -132,11 +139,6 @@ def segments_intersect_sql(a: str, b: str) -> str:
     return f"(({bbox}) AND (({proper}) OR {touch}))"
 
 
-_EDGES = ("zip_with(slice({r}, 1, size({r}) - 1), "
-          "slice({r}, 2, size({r}) - 1), "
-          "(p, q) -> struct(p.lon_nano AS x1, p.lat_nano AS y1, "
-          "q.lon_nano AS x2, q.lat_nano AS y2))")
-
 _REL_NAMES = {1: "edges_cross", 2: "left_within_right",
               3: "right_within_left"}
 
@@ -194,8 +196,9 @@ def _banded_refine(cand: DataFrame, lr: DataFrame, rr: DataFrame,
     - **combos** (``l_all``): candidate pairs join ring payloads once
       per copy combination, bbox-filtered.
     - **cross leg**: left edges explode to rows, each replicated into
-      the lat bands it spans (band height = one grid-cell row at
-      ``res``); right edges band-explode on the broadcast-small side;
+      the grid cell rows its lat range spans (:func:`pip.edge_rows_sql`,
+      the rows the PIP cover's band hits use); right edges
+      band-explode on the broadcast-small side;
       a broadcast equi-join on (right_id, r_ck, band) meets only edges
       sharing a band and the exact segment predicate runs as flat
       codegen'd SQL. Work per pair drops from |lE|·|rE| to
@@ -214,19 +217,11 @@ def _banded_refine(cand: DataFrame, lr: DataFrame, rr: DataFrame,
     shuffle. The left ring table feeds two consumers (edge explode +
     combo scalars), i.e. two pruned scans — the price of replacing the
     quadratic interpreted refine with linear codegen'd legs."""
-    from ..functions.grid import NANO_360
-    n = 1 << res
-    band_nano = max(NANO_360 // 2 // n, 1)
-    shift = NANO_360 // 2  # lats land in [0, 180e9] before the DIV
-
     def ebands(edge):
-        return (f"sequence((LEAST({edge}.y1, {edge}.y2) + {shift}) "
-                f"DIV {band_nano}, "
-                f"(GREATEST({edge}.y1, {edge}.y2) + {shift}) "
-                f"DIV {band_nano})")
+        return "sequence({}, {})".format(*edge_rows_sql(edge, res))
 
     def pband(py):
-        return F.expr(f"({py} + {shift}) DIV {band_nano}")
+        return F.expr(grid_xy_sql(py, "0", res)[1])
 
     r_meta = rr.select("right_id",
                        F.col("r_ring_ck").alias("r_ck"),
@@ -234,7 +229,7 @@ def _banded_refine(cand: DataFrame, lr: DataFrame, rr: DataFrame,
                        F.col("r_ring_p0x").alias("r0x"),
                        F.col("r_ring_p0y").alias("r0y"))
     r_e = (rr.select("right_id", F.col("r_ring_ck").alias("r_ck"),
-                     F.explode(F.expr(_EDGES.format(r="r_ring")))
+                     F.explode(F.expr(ring_edges_sql("r_ring")))
                      .alias("b"))
            .select("right_id", "r_ck", "b",
                    F.explode(F.expr(ebands("b"))).alias("band")))
@@ -253,7 +248,7 @@ def _banded_refine(cand: DataFrame, lr: DataFrame, rr: DataFrame,
     l_e = (l_all.select(
         "left_id", "right_id", F.col("l_ring_ck").alias("l_ck"), "r_ck",
         "r0x", "r0y",
-        F.explode(F.expr(_EDGES.format(r="l_ring"))).alias("a"))
+        F.explode(F.expr(ring_edges_sql("l_ring"))).alias("a"))
         .select("left_id", "right_id", "l_ck", "r_ck", "r0x", "r0y", "a",
                 F.explode(F.expr(ebands("a"))).alias("band")))
     # no .distinct()/assembly joins on any leg: every leg emits bare
@@ -307,8 +302,9 @@ def polygon_intersects_join(left: DataFrame, right: DataFrame, *,
     BENCH_NEWOPS.md)."""
     ls = split_antimeridian(left)
     rs = split_antimeridian(right)
-    # left cover distributed (tight=False: the scanline path broadcasts
-    # edge lists, only safe for the small side); right cover broadcast.
+    # left cover distributed and bbox (tight=False: the scanline costs
+    # more to build than its fewer candidates save); right cover
+    # broadcast.
     lc = polygon_cover(ls, res, tight=False) \
         .select(F.col("poly_id").alias("left_id"), "cell")
     rc = polygon_cover(rs, res) \

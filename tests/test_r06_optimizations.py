@@ -134,6 +134,8 @@ def test_pip_counters_pinned(spark, pip_brute_force):
     complex rings' classified cover at res 12. A cover change that
     alters any of them is a plan change, not noise."""
     from osmpbf_spark.operators.pip import (
+        _band_hits,
+        _ring_copies,
         make_polygons,
         pip_join,
         polygon_cover,
@@ -163,6 +165,14 @@ def test_pip_counters_pinned(spark, pip_brute_force):
             "sum(CAST(xxhash64(poly_id, _ck, cell, full) "
             "AS DECIMAL(38, 0)))").first()
     assert tuple(pins) == (4_811, 2_290, -556_643_048_516_512_569_461)
+    # band hits (edge × cell row) and their center-latitude crossings
+    # for the zoo and complex rings, the values of the band join the
+    # per-edge row explode replaced
+    zoo = split_antimeridian(make_polygons(spark, _POLY_ZOO + _COMPLEX_RINGS))
+    for res, want in ((12, (3_104, 2_312)), (16, (37_102, 36_278))):
+        got = _band_hits(_ring_copies(zoo, res), res).agg(
+            F.count("*"), F.count_if("cross")).first()
+        assert tuple(got) == want, res
 
 
 def test_tight_cover_within_bbox_cover(spark):
@@ -196,6 +206,62 @@ def test_tight_cover_within_bbox_cover(spark):
         ("sq401", "sq401"), ("star", "band"), ("star", "concave"),
         ("star", "diamond"), ("star", "star"), ("tiny", "tiny"),
         ("xblob", "am"), ("xblob", "xblob")]}
+
+
+def test_cover_plans_join_no_edges_to_rows(spark):
+    """Each ring edge explodes over its own cell rows: the tight cover's
+    optimized plan has no join at all, and the classified cover's only
+    join is the coarsening's left_anti against complete blocks."""
+    import re
+
+    from osmpbf_spark.operators.pip import (
+        make_polygons,
+        polygon_cover,
+        split_antimeridian,
+    )
+    polys = split_antimeridian(make_polygons(spark, _POLY_ZOO))
+
+    def joins(df):
+        return re.findall(r"\bJoin (\w+)", df._jdf.queryExecution()
+                          .optimizedPlan().toString())
+    assert joins(polygon_cover(polys, 12, tight=True)) == []
+    assert joins(polygon_cover(polys, 12, classify=True)) == ["LeftAnti"]
+
+
+def test_null_id_ring_covers_like_its_named_twin(spark):
+    """A ring without a poly_id keeps every cover row, and its complete
+    FULL blocks coarsen: its tight and classified covers equal those of
+    the same ring under an id (the classified one once kept both the
+    fine FULL cells and their 12 parent cells: 5,302 rows, not 2,230)."""
+    from osmpbf_spark.operators.pip import (
+        make_polygons,
+        polygon_cover,
+        split_antimeridian,
+    )
+    band = _POLY_ZOO[1]
+    polys = split_antimeridian(make_polygons(spark, [band, (None, band[1])]))
+    for cover in (polygon_cover(polys, 12, tight=True),
+                  polygon_cover(polys, 12, classify=True)):
+        named = cover.filter(F.col("poly_id") == "band").drop("poly_id")
+        anon = cover.filter(F.col("poly_id").isNull()).drop("poly_id")
+        assert named.count() == anon.count() > 0
+        assert named.exceptAll(anon).isEmpty()
+        assert anon.exceptAll(named).isEmpty()
+
+
+def test_duplicate_ring_rows_raise(spark):
+    """The same (poly_id, ring) row given twice would double every
+    crossing in the classified cover, whose parity then reads every
+    interior cell as outside (the point inside ``band`` matched 0 times,
+    not twice). The cover build raises, naming the polygon."""
+    from osmpbf_spark.operators.pip import make_polygons, pip_join
+    band = _POLY_ZOO[1]
+    pts = with_grid_cells(spark.createDataFrame(
+        [(1, 45 * B, 10 * B)], "id long, lat_nano long, lon_nano long"),
+        res=12)
+    assert pip_join(pts, make_polygons(spark, [band]), res=12).count() == 1
+    with pytest.raises(Exception, match="polygon band: the same ring"):
+        pip_join(pts, make_polygons(spark, [band, band]), res=12).count()
 
 
 def test_classified_cover_classes_partition_each_polygon(spark):
