@@ -13,8 +13,11 @@ counterpart (the reference has only the way→node semi-join,
      cell rows (no join): each edge's padded span marks boundary
      cells, and a gap between spans is FULL iff an odd number of the
      row's center-latitude crossings lie left of it — crossing-count
-     parity, no ray cast. Sequence-explode, distributed; tiny result
-     → broadcast, memoized per polygon set (:func:`cover_for`),
+     parity, no ray cast. Complete blocks are found on the row
+     intervals cut into parent-column pieces, with one window, so
+     interior cells are never listed. Distributed; tiny result →
+     broadcast, memoized per polygon set and stored as a checkpoint
+     leaf on its first build (:func:`cover_for`),
   2. prefilter: points equi-join cover on cell — a broadcast hash join,
      no shuffle of the big side,
   3. refine: candidates from FULL cells are inside by construction; the
@@ -41,6 +44,7 @@ from __future__ import annotations
 import threading
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.grid import GRID_RES_FINE, grid_xy_sql
@@ -55,8 +59,9 @@ _COARSE_STEP = 4
 
 
 def _coarse_parent(cell: str, cres: int):
-    """The res-``cres`` parent of a res-(cres + _COARSE_STEP) cell id —
-    the same arithmetic on the cover side and the point side. It is
+    """The res-``cres`` parent of a res-(cres + _COARSE_STEP) cell id,
+    for the point side of :func:`pip_join`; the classified cover names
+    the same parent from its pieces (x and y DIV 2^_COARSE_STEP). It is
     ``grid.cell_xy``'s arithmetic written as one SQL expression: one
     parse on the driver instead of a JVM call per operator."""
     from ..functions.grid import RES_SHIFT, Y_SHIFT
@@ -250,7 +255,10 @@ def polygon_cover(polygons: DataFrame, res: int = GRID_RES_FINE,
     parity of those right of it, the ones a ray cast from the gap
     counts: the gap is FULL iff the left count is odd. ``tight``
     extent-tightening is subsumed (uniform-outside cells are dropped
-    entirely) and ignored. ``_ck`` (the ring-content key) is kept so
+    entirely) and ignored. From res 4 up, every complete 16×16 block
+    of FULL cells is one FULL cell at res - 4 (the result's
+    ``_osmpbf_coarse_res`` attribute); only the cells outside complete
+    blocks are listed. ``_ck`` (the ring-content key) is kept so
     callers can join the matching antimeridian ring copy without
     fanning out. A ring copy given twice — the same (poly_id, ring)
     row repeated — raises executor-side, naming the poly_id: its
@@ -373,11 +381,16 @@ def _classified_cover(polygons: DataFrame, res: int) -> DataFrame:
     row's merged padded edge spans are its BOUNDARY cells; each gap
     between them is uniform, and it is FULL iff an odd number of the
     row's center-latitude crossings lie to its left (the crossing-count
-    parity equals the ray cast's, since the total is even). Cost is
-    O(band hits), independent of how many cells the intervals explode
-    to; complete blocks of FULL cells are then coarsened. Each ring
-    copy row carries a row-unique ``_tag``: a cell row fed by two tags
-    is a (poly_id, _ck) given twice, and raises in the same job."""
+    parity equals the ray cast's, since the total is even). The
+    intervals explode once, cut at parent-column boundaries into
+    pieces (Raptor's per-row pixel ranges, VLDB 2019); one window per
+    16×16 block counts its FULL pieces that span the block's width,
+    and a block with 16 of them is complete and emits one parent cell.
+    Every other piece explodes into its fine cells. So the build is
+    O(band hits + pieces + cells emitted), never O(cells inside), with
+    no join and two shuffles (per cell row, per block). Each ring copy
+    row carries a row-unique ``_tag``: a cell row fed by two tags is a
+    (poly_id, _ck) given twice, and raises in the same job."""
     from ..functions.grid import RES_SHIFT, Y_SHIFT
     copies = _ring_copies(polygons, res).withColumn(
         "_tag", F.monotonically_increasing_id())
@@ -427,44 +440,42 @@ def _classified_cover(polygons: DataFrame, res: int) -> DataFrame:
            f"false AS full)), "
            f"transform(filter({gaps}, g -> {in_gap}), "
            f"g -> struct(g.lo AS lo, g.hi AS hi, true AS full)))), 1)")
-    cell_id = (F.lit(res).cast("long") * F.lit(RES_SHIFT)
-               + F.col("cx") * F.lit(Y_SHIFT) + F.col("cy"))
-    fine = (spans
-            .select("poly_id", "_ck", "cy",
-                    F.explode(F.expr(ivs)).alias("iv"))
-            .select("poly_id", "_ck", "cy", F.col("iv.full").alias("full"),
-                    F.explode(F.expr("sequence(iv.lo, iv.hi)")).alias("cx"))
-            .select("poly_id", "_ck", cell_id.alias("cell"), "full"))
-    if res < _COARSE_STEP:
-        return fine
-    # COARSEN the interior (r6, guide §2.3 "shuffle fewer bytes" applied
-    # to the broadcast): complete 2^4×2^4 blocks of FULL cells collapse
-    # into one parent supercell at res-4 — a planet-band cover shrinks
-    # ~50×, so the per-action BroadcastExchange build (measured ~1 s of
-    # the decode+PIP leg at a 1.4M-cell cover) almost vanishes.
-    # Mixed-res rows cannot collide: the res field is encoded in the
-    # cell id. ``pip_join`` probes points by BOTH their fine cell and
-    # its res-4 parent (see the `_osmpbf_coarse_res` marker).
-    cres = res - _COARSE_STEP
-    fullc = fine.filter("full").withColumn("pcell",
-                                           _coarse_parent("cell", cres))
-    blocks = (fullc.groupBy("poly_id", "_ck", "pcell").count()
-              .filter(F.col("count") == 1 << 2 * _COARSE_STEP)
-              .select("poly_id", "_ck", "pcell"))
-    coarse = blocks.select("poly_id", "_ck", F.col("pcell").alias("cell"),
-                           F.lit(True).alias("full"))
-    # the anti-join's right side is one row per COMPLETE parent block —
-    # cover-scale/256, broadcast-small by the same contract as the
-    # polygons side (and without the hint the unknown post-aggregation
-    # stats plan a SortMergeJoin, shuffling the cover build). NULL-safe
-    # on poly_id: a ring without an id coarsens like its named twin
-    done = blocks.toDF("_bid", "_bck", "_bpc")
-    resid_full = (fullc.join(F.broadcast(done), F.expr(
-        "poly_id <=> _bid AND _ck = _bck AND pcell = _bpc"), "left_anti")
-        .select("poly_id", "_ck", "cell", "full"))
-    out = (fine.filter(~F.col("full"))
-           .unionByName(resid_full).unionByName(coarse))
-    out._osmpbf_coarse_res = cres
+    # PIECES: every interval cut at parent-column boundaries. COARSEN
+    # the interior (r6, guide §2.3 "shuffle fewer bytes" applied to the
+    # broadcast): a complete 2^4×2^4 block of FULL cells is ONE parent
+    # cell at res-4, so a planet-band cover shrinks ~50× and the
+    # per-action BroadcastExchange build almost vanishes. A block is
+    # complete iff k of its pieces are FULL and k wide, counted by one
+    # window: its cells are never listed. Window partitions group NULL
+    # keys, so a ring without an id coarsens like its named twin. The
+    # block's cy % k = 0 row emits the parent cell; the res field is in
+    # the cell id, so mixed-res rows cannot collide. ``pip_join`` probes
+    # points by BOTH their fine cell and its parent (see the
+    # `_osmpbf_coarse_res` marker).
+    k, cres = 1 << _COARSE_STEP, res - _COARSE_STEP
+    pieces = (spans
+              .select("poly_id", "_ck", "cy",
+                      F.explode(F.expr(ivs)).alias("iv"))
+              .select("poly_id", "_ck", "cy", "iv", F.explode(F.expr(
+                  f"sequence(iv.lo DIV {k}, iv.hi DIV {k})")).alias("pcx"))
+              .selectExpr("poly_id", "_ck", "cy", "iv.full AS full", "pcx",
+                          f"cy DIV {k} AS pcy",
+                          f"GREATEST(iv.lo, pcx * {k}) AS plo",
+                          f"LEAST(iv.hi, pcx * {k} + {k - 1}) AS phi"))
+    done = (F.expr(f"count_if(full AND phi - plo = {k - 1})").over(
+        Window.partitionBy("poly_id", "_ck", "pcy", "pcx")) == k
+            if cres >= 0 else F.lit(False))
+    out = (pieces.withColumn("done", done)
+           .filter(f"NOT done OR cy % {k} = 0")
+           .select("poly_id", "_ck", "cy", "full", "done", "pcx", "pcy",
+                   F.explode(F.expr("sequence(plo, IF(done, plo, phi))"))
+                   .alias("cx"))
+           .select("poly_id", "_ck", F.expr(
+               f"IF(done, CAST({cres} AS BIGINT) * {RES_SHIFT} + pcx * "
+               f"{Y_SHIFT} + pcy, CAST({res} AS BIGINT) * {RES_SHIFT} + "
+               f"cx * {Y_SHIFT} + cy)").alias("cell"), "full"))
+    if cres >= 0:
+        out._osmpbf_coarse_res = cres
     return out
 
 
@@ -546,7 +557,7 @@ def point_in_ring_expr(px: str, py: str, ring: str = "ring"):
     return F.expr(_RAY_CAST.format(px=px, py=py, ring=ring))
 
 
-_COVER_CACHE: list[list] = []   # [polygons, res, cover, is_leaf]
+_COVER_CACHE: list[list] = []   # [polygons, res, stored cover leaf]
 _COVER_CACHE_MAX = 16
 # ADVICE r4: probe/insert/evict race under multi-threaded drivers (a
 # legitimate Spark pattern for concurrent job submission); the lock
@@ -560,34 +571,36 @@ def cover_for(polygons: DataFrame, res: int = GRID_RES_FINE) -> DataFrame:
     against the same polygon set skip the cover stages (VERDICT r3 #7).
 
     Matching is by OBJECT IDENTITY of the polygons DataFrame (``is``):
-    a pure-Python probe that costs nothing on misses. Two rejected
-    designs, both measured on the decode+PIP bench (2M nodes, fresh
-    polygons per run, i.e. all-miss): persisting every miss added
-    ~1.1 s/join of never-reused materialization, and ``sameSemantics``
-    probing added ~75 ms/entry of JVM plan canonicalization — while
+    a pure-Python probe. ``sameSemantics`` probing was rejected: it
+    added ~75 ms/entry of JVM plan canonicalization, while
     separately-created but identical LocalRelations are never
     ``sameSemantics`` anyway, so plan-level matching bought no extra
     hits. Hold ONE DataFrame per polygon set to get the reuse (as
-    ``jobs/decode_pip_job.py`` does).
+    ``jobs/decode_pip_job.py`` does; :func:`make_polygons` hands out one
+    object per content).
 
-    On the FIRST HIT, when reuse is proven, the cover is stored as a
-    one-partition checkpoint (:func:`session.materialize` of
-    ``cover.coalesce(1)``) and that leaf replaces the entry: later
-    plans scan the stored rows (one ``Scan ExistingRDD``, one task to
-    broadcast) instead of re-planning the cover's HOF build and
-    re-collecting cached partitions on every action. The cover is
-    broadcast-small by contract, so the leaf is a few KB per
-    actually-reused set. The storing job runs outside the cache lock.
-    Without a checkpoint directory the leaf is a ``localCheckpoint``:
-    its blocks live in executor storage only, and losing the executor
-    that holds them fails every later join against the memo (a
-    persisted cover would have been recomputed). Set
+    On a MISS the cover is built and stored at once, under the job
+    label ``pip cover store res=<res>``, as a one-partition checkpoint
+    (:func:`session.materialize` of ``cover.coalesce(1)``); that leaf
+    is the entry. Every plan, the first included, scans the stored
+    rows (one ``Scan ExistingRDD``, one task to broadcast) instead of
+    re-planning the cover's build on every action. Storing on the
+    first hit instead built the cover twice for every reused set. A
+    one-shot caller is not slower for the store: a ``pip_join`` of 200k
+    points against a fresh set of the three bench boxes (res 16) on
+    every call took 1.9–3.4 → 1.3–2.2 s warm and 8.2–8.8 → 6.4–7.4 s
+    as a session's first call (local[2], three sessions each; the
+    earlier design, an inline cover coarsened cell by cell, against
+    this one). The cover is broadcast-small by contract, and so is the
+    leaf. The build runs outside the cache lock. Without a checkpoint
+    directory the leaf is a ``localCheckpoint``: its blocks live in
+    executor storage only, and losing the executor that holds them
+    fails every later join against the memo. Set
     ``sparkContext.setCheckpointDir`` on a cluster and the leaf is a
     reliable checkpoint instead. Entries from stopped sessions are
     evicted; FIFO-capped at ``_COVER_CACHE_MAX`` sets, an evicted
     leaf's blocks are freed when Spark's context cleaner collects it."""
     with _COVER_CACHE_LOCK:
-        hit = None
         for i in range(len(_COVER_CACHE) - 1, -1, -1):
             entry = _COVER_CACHE[i]
             try:
@@ -598,29 +611,20 @@ def cover_for(polygons: DataFrame, res: int = GRID_RES_FINE) -> DataFrame:
                 _COVER_CACHE.pop(i)
                 continue
             if entry[1] == res and entry[0] is polygons:
-                hit = entry
-                break
-        if hit is not None and hit[3]:
-            return hit[2]
-    if hit is None:
-        # build OUTSIDE the lock — the ~0.45 s cover build must not
-        # serialize concurrent joins on distinct polygon sets; a racing
-        # duplicate build is benign (both entries land, FIFO-evicted)
-        cover = polygon_cover(split_antimeridian(polygons), res,
-                              classify=True)
-        with _COVER_CACHE_LOCK:
-            _COVER_CACHE.append([polygons, res, cover, False])
-            del _COVER_CACHE[:-_COVER_CACHE_MAX]
-        return cover
+                return entry[2]
+    # build OUTSIDE the lock — the cover build must not serialize
+    # concurrent joins on distinct polygon sets; a racing duplicate
+    # build is benign (both entries land, FIFO-evicted)
+    cover = polygon_cover(split_antimeridian(polygons), res, classify=True)
     with job_labels(polygons.sparkSession, f"pip cover store res={res}"):
-        leaf = materialize(hit[2].coalesce(1))
-    cres = getattr(hit[2], "_osmpbf_coarse_res", None)
+        leaf = materialize(cover.coalesce(1))
+    cres = getattr(cover, "_osmpbf_coarse_res", None)
     if cres is not None:
         leaf._osmpbf_coarse_res = cres
     with _COVER_CACHE_LOCK:
-        if not hit[3]:          # a racing first hit may have stored one
-            hit[2], hit[3] = leaf, True
-        return hit[2]
+        _COVER_CACHE.append([polygons, res, leaf])
+        del _COVER_CACHE[:-_COVER_CACHE_MAX]
+    return leaf
 
 
 def pip_join(points: DataFrame, polygons: DataFrame, *,
@@ -631,7 +635,8 @@ def pip_join(points: DataFrame, polygons: DataFrame, *,
     rows of points inside each polygon (point columns + poly_id).
 
     Plan shape at scale: big-side scan → broadcast hash join on cell →
-    broadcast hash join on (poly_id, _ck) (ring fetch) → refine filter.
+    broadcast hash join on (poly_id, _ck) (ring fetch, NULL-safe on
+    poly_id: a polygon without an id matches too) → refine filter.
     The big side never shuffles. ``salt_n`` spreads hot cells before the
     join when a megacity cell dominates (north_rule skew handling).
     Antimeridian-crossing rings (unwrapped lons) are split transparently.
@@ -677,9 +682,14 @@ def pip_join(points: DataFrame, polygons: DataFrame, *,
         cand = (pts.join(F.broadcast(cover),
                          pts[cell_col] == cover["cell"])
                 .drop(cover["cell"]))
-    polys = polys.withColumn("_ck", F.xxhash64("ring"))
-    withring = cand.join(F.broadcast(polys), ["poly_id", "_ck"])
+    # NULL-safe on poly_id: a ring without an id keeps its cover rows,
+    # so its candidates must meet it too
+    polys = polys.select(F.col("poly_id").alias("_pid"),
+                         F.xxhash64("ring").alias("_pck"), "ring")
+    withring = cand.join(F.broadcast(polys),
+                         F.expr("poly_id <=> _pid AND _ck = _pck"))
     return (withring
             .filter(F.col("full")
                     | point_in_ring_expr("lon_nano", "lat_nano"))
-            .drop("ring", "full", "_ck"))
+            .select("poly_id", *[c for c in cand.columns
+                                 if c not in ("poly_id", "_ck", "full")]))

@@ -8,6 +8,7 @@ edge cases that motivated each guard.
 
 import math
 import random
+import uuid
 
 import numpy as np
 import pandas as pd
@@ -95,7 +96,8 @@ def test_classified_cover_pip_join_matches_unclassified(spark,
     force (every point × every ring copy, full ray cast) — incl.
     antimeridian copies and sub-cell polygons, and the complex rings at
     res 12 through the memoized cover's stored leaf, whose store runs
-    under its own job label."""
+    under its own job label on the first join of the set and never
+    again."""
     from osmpbf_spark.operators.pip import make_polygons, pip_join
     pts = _zoo_points(spark)
     polys = make_polygons(spark, _POLY_ZOO)
@@ -115,11 +117,15 @@ def test_classified_cover_pip_join_matches_unclassified(spark,
     cpts = with_grid_cells(spark.createDataFrame(
         rows, "id long, lat_nano long, lon_nano long"), res=12)
     cpolys = make_polygons(spark, _COMPLEX_RINGS)
-    pip_join(cpts, cpolys, res=12)          # memo miss: builds the cover
     before = _last_execution_id(spark)
-    new = pip_join(cpts, cpolys, res=12).select("poly_id", "id")
+    pip_join(cpts, cpolys, res=12)      # memo miss: builds, stores the cover
     assert "pip cover store res=12" in {
         d for i, d in _executions(spark) if i > before}
+    stored = _last_execution_id(spark)
+    new = pip_join(cpts, cpolys, res=12).select("poly_id", "id")
+    assert new.count() > 0
+    assert "pip cover store res=12" not in {
+        d for i, d in _executions(spark) if i > stored}
     old = pip_brute_force(cpts, cpolys).select("poly_id", "id")
     assert {r["poly_id"] for r in new.collect()} == {"sq401", "star",
                                                      "xblob"}
@@ -209,9 +215,10 @@ def test_tight_cover_within_bbox_cover(spark):
 
 
 def test_cover_plans_join_no_edges_to_rows(spark):
-    """Each ring edge explodes over its own cell rows: the tight cover's
-    optimized plan has no join at all, and the classified cover's only
-    join is the coarsening's left_anti against complete blocks."""
+    """Each ring edge explodes over its own cell rows, and complete
+    blocks are found by a window over interval pieces: neither the
+    tight nor the classified cover's optimized plan has a join (the
+    classified one had the coarsening's left_anti)."""
     import re
 
     from osmpbf_spark.operators.pip import (
@@ -225,7 +232,7 @@ def test_cover_plans_join_no_edges_to_rows(spark):
         return re.findall(r"\bJoin (\w+)", df._jdf.queryExecution()
                           .optimizedPlan().toString())
     assert joins(polygon_cover(polys, 12, tight=True)) == []
-    assert joins(polygon_cover(polys, 12, classify=True)) == ["LeftAnti"]
+    assert joins(polygon_cover(polys, 12, classify=True)) == []
 
 
 def test_null_id_ring_covers_like_its_named_twin(spark):
@@ -262,6 +269,73 @@ def test_duplicate_ring_rows_raise(spark):
     assert pip_join(pts, make_polygons(spark, [band]), res=12).count() == 1
     with pytest.raises(Exception, match="polygon band: the same ring"):
         pip_join(pts, make_polygons(spark, [band, band]), res=12).count()
+
+
+def test_null_id_polygon_matches_in_pip_join(spark, pip_brute_force):
+    """A polygon without a poly_id meets its ring in pip_join's ring
+    fetch: the point inside ``band`` matches once under a NULL id, as
+    under its name (an equi-join on poly_id matched it 0 times), and
+    the output keeps one poly_id column ahead of the point columns."""
+    from osmpbf_spark.operators.pip import make_polygons, pip_join
+    pts = with_grid_cells(spark.createDataFrame(
+        [(1, 45 * B, 10 * B)], "id long, lat_nano long, lon_nano long"),
+        res=12)
+    for pid in ("band", None):
+        polys = make_polygons(spark, [(pid, _POLY_ZOO[1][1])])
+        got = pip_join(pts, polys, res=12)
+        assert got.columns == ["poly_id", *pts.columns]
+        assert [tuple(r) for r in got.select("poly_id", "id").collect()] \
+            == [(pid, 1)]
+        assert pip_brute_force(pts, polys).count() == 1
+
+
+def _jobs_in(spark, fn):
+    """Spark jobs ``fn()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"r06-jobs-{uuid.uuid4().hex}"      # never reused
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pip_cover_build_and_store_jobs_pinned(spark):
+    """Drift-free job counts of the classified cover. A cold build of
+    the bench boxes at res 16, counted, runs 4 Spark jobs: the per-row
+    spans shuffle, the block window's shuffle and the count's own two
+    (6 while the coarsening listed cells and met them in a broadcast
+    anti-join). The first pip_join against a new polygon set stores its
+    cover in one execution under the ``pip cover store`` label; later
+    joins of that set and their counts run none."""
+    from osmpbf_spark.operators.pip import (
+        make_polygons,
+        pip_join,
+        polygon_cover,
+        split_antimeridian,
+    )
+    boxes = [
+        _box("megacity", int(42.9 * B), int(8.9 * B), int(43.1 * B),
+             int(9.1 * B)),
+        _box("band", 44 * B, 5 * B, 46 * B, 15 * B),
+        _box("corner", 40 * B, 5 * B, 41 * B, 6 * B)]
+    cover = polygon_cover(split_antimeridian(make_polygons(spark, boxes)),
+                          16, classify=True)
+    assert _jobs_in(spark, cover.count) == 4
+    # ids no other test uses: a polygon set the memo has not seen
+    polys = make_polygons(spark, [("once-" + p, r) for p, r in boxes])
+    pts = _zoo_points(spark, 5_000)
+    before = _last_execution_id(spark)
+    joined = pip_join(pts, polys, res=16)
+    stored = _last_execution_id(spark)
+    joined.count()
+    pip_join(pts, polys, res=16).count()
+    labels = [(i, d) for i, d in _executions(spark)
+              if i > before and (d or "").startswith("pip cover store")]
+    assert [d for _, d in labels] == ["pip cover store res=16"]
+    assert labels[0][0] <= stored
 
 
 def test_classified_cover_classes_partition_each_polygon(spark):
