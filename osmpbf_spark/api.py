@@ -88,19 +88,26 @@ class Engine:
                    spark.read.parquet(media_path))
 
     # -- scans ------------------------------------------------------------
-    def _file_scan(self, decode_fn, ddl: str, **kwargs) -> DataFrame:
-        from .sources.documents import read_blob_ranges
-        return read_blob_ranges(self._file.blobs, self._file.path,
-                                decode_fn, ddl, **kwargs)
-
-    def elements(self, **kwargs) -> DataFrame:
-        from .sources.documents import read_elements
+    def _decode(self, decode_fn, ddl: str, blob_type: str = "OSMData",
+                **kwargs) -> DataFrame:
+        """The engine's one decode dispatch: the ``blob_type`` blob rows
+        — payload rows of the (documents, media) tables, or a raw file's
+        range rows and its path — through ``documents.decode_scan``."""
+        from .sources.documents import blob_payloads, decode_scan
         if self._file is None:
-            return read_elements(self.documents, self.media, **kwargs)
+            rows, path = blob_payloads(*self._tables, blob_type), None
+        else:
+            rows, path = self._file.blobs.filter(
+                F.col("blob_type") == blob_type), self._file.path
+        return decode_scan(rows, decode_fn, ddl, path=path, **kwargs)
+
+    def elements(self, *, decode_partitions: int | None = None
+                 ) -> DataFrame:
         from .pbf.decode import decode_blob_batch
         from .sources.documents import ELEMENTS_DDL, with_coordinate_columns
-        return with_coordinate_columns(
-            self._file_scan(decode_blob_batch, ELEMENTS_DDL, **kwargs))
+        return with_coordinate_columns(self._decode(
+            decode_blob_batch, ELEMENTS_DDL,
+            decode_partitions=decode_partitions))
 
     def nodes(self, **kwargs) -> DataFrame:
         return self.elements(**kwargs).filter(
@@ -113,40 +120,32 @@ class Engine:
         return self.elements(**kwargs).filter(
             F.col("element_type") == "relation")
 
-    def elements_raw(self, **kwargs) -> DataFrame:
+    def elements_raw(self, *, decode_partitions: int | None = None
+                     ) -> DataFrame:
         """Raw-access scan: unresolved string-table tag index pairs and
         still-delta-coded way refs (Way::raw_refs,
         src/elements.rs:219-221; raw_tags, src/elements.rs:542-564)."""
-        from .sources.documents import read_elements_raw
-        if self._file is None:
-            return read_elements_raw(self.documents, self.media, **kwargs)
         from .pbf.decode import decode_raw_access_batch
         from .sources.documents import RAW_ACCESS_DDL
-        return self._file_scan(decode_raw_access_batch, RAW_ACCESS_DDL,
-                               **kwargs)
+        return self._decode(decode_raw_access_batch, RAW_ACCESS_DDL,
+                            decode_partitions=decode_partitions)
 
     def stringtables(self) -> DataFrame:
         """Per-block dictionary as raw bytes (raw_stringtable,
         src/block.rs:148-151); join key (doc_id, blob_no, sidx) resolves
         ``elements_raw()`` index pairs."""
-        from .sources.documents import read_stringtables
-        if self._file is None:
-            return read_stringtables(self.documents, self.media)
         from .pbf.decode import decode_stringtable_batch
         from .sources.documents import STRINGTABLE_DDL
-        return self._file_scan(decode_stringtable_batch, STRINGTABLE_DDL)
+        return self._decode(decode_stringtable_batch, STRINGTABLE_DDL)
 
     def header(self) -> DataFrame:
-        from .sources.documents import read_header
-        if self._file is None:
-            return read_header(self.documents, self.media)
         from .sources.documents import (
             HEADER_DDL,
             HEADER_KEYS,
             decode_header_batch,
         )
-        return self._file_scan(decode_header_batch, HEADER_DDL,
-                               blob_type="OSMHeader", keys=HEADER_KEYS)
+        return self._decode(decode_header_batch, HEADER_DDL, "OSMHeader",
+                            keys=HEADER_KEYS)
 
     def blob_metadata(self) -> DataFrame:
         from .sources.documents import blob_metadata

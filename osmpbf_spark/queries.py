@@ -68,7 +68,7 @@ def _events_xy(spark, sf_dir) -> DataFrame:
 def _golden_elements(spark, variant="zlib_dense") -> DataFrame:
     docs, media = make_documents(
         spark, *fileblocks_to_rows(variant, fixture_fileblocks(variant)))
-    return read_elements(docs, media, broadcast_media=True)
+    return read_elements(docs, media)
 
 
 # ---------------------------------------------------------------------------
@@ -1294,7 +1294,7 @@ def q_osm_incremental_update(spark, sf_dir):
     block = encode_primitive_block([upd_nodes], dense=True)
     rows = fileblocks_to_rows("upd", [("OSMData", encode_blob(block))])
     docs, media = make_documents(spark, *rows)
-    upd = read_elements(docs, media, broadcast_media=True)
+    upd = read_elements(docs, media)
     merged = apply_updates(base, upd)
     return merged.select(F.col("id").cast("int").alias("id"),
                          "lat_nano", "version")
@@ -1633,9 +1633,7 @@ def q_media_golden(spark, sf_dir):
         spark, *fileblocks_to_rows("planet", fixture_fileblocks(
             "zlib_dense")))
     meta = blob_metadata(docs)
-    joined = join_payloads(meta, media,
-                           columns=("doc_id", "blob_type", "payload"))
-    return joined.select(
+    return join_payloads(meta, media).select(
         "doc_id", "blob_type",
         F.length("payload").cast("int").alias("payload_len"),
         F.lower(F.sha2("payload", 256)).alias("payload_sha256"))

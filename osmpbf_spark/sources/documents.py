@@ -8,24 +8,29 @@ store at production scale). Reading elements is:
 
     documents → explode media spans → join media payloads → mapInArrow decode
 
-(a file-backed ``Engine`` skips the join: its decode tasks slice each
-blob out of the raw file themselves, :func:`read_blob_ranges`), which
-is the Spark lifecycle equivalent of the reference's
-``ElementReader::for_each`` trace (SURVEY.md §3.1): Catalyst prunes the
-payload column unless the decode UDF is in the plan, and the ``blob_type``
-predicate is pushed to the scan — the analogues of lazy decode and
-header-only skip-scan (/root/reference/src/blob.rs:406-428).
+The blob is the unit of decode whatever the source (src/blob.rs:85-97,
+src/reader.rs:126-127): every decode scan is :func:`decode_scan` over
+blob rows — the payload rows of :func:`blob_payloads` here, or a raw
+file's blob-range rows for a file-backed ``Engine``, whose tasks slice
+each body out of the file themselves. This is the Spark lifecycle
+equivalent of the reference's ``ElementReader::for_each`` trace
+(SURVEY.md §3.1): Catalyst prunes the payload column unless the decode
+UDF is in the plan, and the ``blob_type`` predicate is pushed to the
+scan — the analogues of lazy decode and header-only skip-scan
+(src/blob.rs:406-428 of the reference).
 """
 
 from __future__ import annotations
 
 import json
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
-from ..pbf.decode import ELEMENT_SCHEMA, decode_blob_batch, split_fileblocks
+from ..pbf.decode import decode_blob_batch, split_fileblocks
 
 DOCUMENTS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType()),
@@ -142,67 +147,46 @@ def blob_metadata(documents: DataFrame) -> DataFrame:
     )
 
 
-def join_payloads(meta: DataFrame, media: DataFrame, *,
-                  broadcast_media: bool = False,
-                  columns=("doc_id", "blob_no", "blob_type", "payload")
-                  ) -> DataFrame:
-    """Attach payload bytes to blob metadata WITHOUT shuffling payloads.
+def join_payloads(meta: DataFrame, media: DataFrame) -> DataFrame:
+    """Attach payload bytes to blob metadata WITHOUT moving payloads: the
+    one join shape of every documents-table decode scan.
 
-    The fat ``payload`` column must never cross a shuffle at 100 TB, so the
-    default plan broadcasts the narrow metadata side and streams the media
-    scan straight into the decode UDF. ``broadcast_media=True`` broadcasts
-    the payload side instead (only for tiny fixtures). Where even the
-    metadata side exceeds broadcast limits, the answer is the co-bucketed
-    Iceberg layout (proven shuffle-free in tests/test_bucketed_join.py),
-    not a payload shuffle.
+    The fat ``payload`` column must never cross a shuffle or a broadcast
+    at 100 TB, so the plan broadcasts the narrow metadata side and
+    streams the media scan straight into the decode UDF. Where even the
+    metadata side exceeds broadcast limits, the answer is the
+    co-bucketed Iceberg layout (proven shuffle-free in
+    tests/test_bucketed_join.py), not a payload shuffle.
     """
-    if broadcast_media:
-        joined = meta.join(F.broadcast(media), "media_ref")
-    else:
-        joined = media.join(F.broadcast(meta), "media_ref")
-    return joined.select(*columns)
+    return media.join(F.broadcast(meta), "media_ref")
 
 
-def _osmdata_payloads(documents: DataFrame, media: DataFrame, *,
-                      broadcast_media: bool,
-                      decode_partitions: int | None) -> DataFrame:
-    """(doc_id, blob_no, blob_type, payload) of every OSMData blob — the
-    shared preamble of the decode scans: prune to blob metadata, filter
-    blob_type='OSMData' BEFORE touching payloads (blob-type pruning,
-    src/reader.rs:74), :func:`join_payloads`, then the caller's
-    ``decode_partitions`` spread.
+BLOB_KEYS = ("doc_id", "blob_no", "blob_type")
 
-    ``decode_partitions`` spreads fat blob rows across workers when the
-    blob count is small relative to the cluster (fixture/bench scale);
-    at production scale (millions of blobs) AQE's size-based coalescing is
-    right and ``decode_partitions`` should stay None. It is skipped when
-    the join's streaming side already arrives in exactly that many
-    (hash-balanced) partitions: the repartition would shuffle every
-    payload byte 1:1 for nothing (r6, guide §2.4 "remove shuffles
-    outright": the bench feeds ``cpus*2``-partition synth tables into a
-    ``decode_partitions=cpus*2`` decode — a pure pass-through Exchange
-    carrying the fat payload column). Both join shapes are broadcast
-    joins, so the streaming side keeps its partitioning."""
-    meta = blob_metadata(documents).filter(F.col("blob_type") == "OSMData")
-    joined = join_payloads(meta, media, broadcast_media=broadcast_media)
-    if not decode_partitions:
-        return joined
-    base = documents if broadcast_media else media
-    try:
-        if base.rdd.getNumPartitions() == decode_partitions:
-            return joined
-    except Exception:
-        pass
-    return joined.repartition(decode_partitions, "blob_no")
+
+def blob_payloads(documents: DataFrame, media: DataFrame,
+                  blob_type: str = "OSMData") -> DataFrame:
+    """(doc_id, blob_no, blob_type, payload) of every ``blob_type`` blob —
+    the blob rows of a documents-table decode scan: prune to blob
+    metadata, filter on ``blob_type`` BEFORE touching payloads
+    (blob-type pruning, src/reader.rs:74), then :func:`join_payloads`."""
+    meta = blob_metadata(documents).filter(F.col("blob_type") == blob_type)
+    return join_payloads(meta, media).select(*BLOB_KEYS, "payload")
+
+
+def _planned_partitions(df: DataFrame) -> int:
+    """Partition count of ``df``'s planned output partitioning (0 when
+    unknown, e.g. a file or RDD scan). Read off the physical plan, so no
+    Spark job runs: ``df.rdd.getNumPartitions()`` would execute every
+    exchange under ``df``."""
+    return (df._jdf.queryExecution().sparkPlan().outputPartitioning()
+            .numPartitions())
 
 
 def _mmap_file(path: str):
     import mmap
     f = open(path, "rb")
     return f, mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
-
-
-BLOB_KEYS = ("doc_id", "blob_no", "blob_type")
 
 
 def _batch_decoder(decode_fn, path: str | None = None, keys=BLOB_KEYS):
@@ -213,8 +197,7 @@ def _batch_decoder(decode_fn, path: str | None = None, keys=BLOB_KEYS):
     decode, as in the reference (src/blob.rs:85-97,
     src/reader.rs:126-127). A worker therefore holds one blob's bytes
     and elements at a time, however many blobs its input batch lists,
-    and the JVM consumes blob i while blob i+1 decodes. Shared by every
-    blob-decode scan so batch-handling fixes land in one place.
+    and the JVM consumes blob i while blob i+1 decodes.
 
     The payload comes from the batch's ``payload`` cell, or, given the
     ``path`` of a raw PBF file, from the ``(body_off, datasize)`` byte
@@ -247,8 +230,29 @@ def _batch_decoder(decode_fn, path: str | None = None, keys=BLOB_KEYS):
     return batches
 
 
-def _decode_batches(iterator):
-    yield from _batch_decoder(decode_blob_batch)(iterator)
+def decode_scan(rows: DataFrame, decode_fn, ddl: str, *,
+                path: str | None = None, keys=BLOB_KEYS,
+                decode_partitions: int | None = None) -> DataFrame:
+    """The one decode scan: blob ``rows`` → ``decode_fn``'s ``ddl`` rows,
+    one blob at a time (:func:`_batch_decoder`). ``rows`` are payload
+    rows (:func:`blob_payloads`) or, with the ``path`` of a raw PBF
+    file, that file's blob-range rows (``ingest.PbfFile.blobs``), whose
+    bodies each task slices out of the file itself. Every scan of the
+    engine — table-backed, file-backed or streaming — ends here, so
+    batch-handling fixes land in one place.
+
+    ``decode_partitions`` hash-spreads the blob rows across workers when
+    the blob count is small relative to the cluster (fixture/bench
+    scale); at production scale (millions of blobs) AQE's size-based
+    coalescing is right and it should stay None. It is skipped when the
+    rows are already planned into exactly that many partitions (a
+    broadcast join keeps its streaming side's partitioning): the
+    repartition would shuffle every payload byte 1:1 for nothing (guide
+    §2.4 "remove shuffles outright": the bench feeds ``cpus*2``-partition
+    synth tables into a ``decode_partitions=cpus*2`` decode)."""
+    if decode_partitions and _planned_partitions(rows) != decode_partitions:
+        rows = rows.repartition(decode_partitions, "blob_no")
+    return rows.mapInArrow(_batch_decoder(decode_fn, path, keys), ddl)
 
 
 NODE_POINTS_DDL = ("id long, lat_nano long, lon_nano long, blob_no long, "
@@ -256,8 +260,7 @@ NODE_POINTS_DDL = ("id long, lat_nano long, lon_nano long, blob_no long, "
 
 
 def read_node_points(documents: DataFrame, media: DataFrame,
-                     *, broadcast_media: bool = False,
-                     decode_partitions: int | None = None) -> DataFrame:
+                     *, decode_partitions: int | None = None) -> DataFrame:
     """Pushdown fast path for spatial pipelines: decode ONLY node ids and
     nanodegree coordinates (skips string tables, tags, info, ways,
     relations inside the UDF — column pruning pushed through the Arrow
@@ -266,11 +269,9 @@ def read_node_points(documents: DataFrame, media: DataFrame,
     geometry is needed (PIP, kNN, tiling)."""
     from ..pbf.decode import decode_node_points_batch
 
-    joined = _osmdata_payloads(documents, media,
-                               broadcast_media=broadcast_media,
-                               decode_partitions=decode_partitions)
-    return joined.mapInArrow(_batch_decoder(decode_node_points_batch),
-                             NODE_POINTS_DDL)
+    return decode_scan(blob_payloads(documents, media),
+                       decode_node_points_batch, NODE_POINTS_DDL,
+                       decode_partitions=decode_partitions)
 
 
 RAW_ACCESS_DDL = ("element_type string, id long, raw_key_ids array<long>, "
@@ -281,8 +282,7 @@ STRINGTABLE_DDL = "doc_id string, blob_no long, sidx int, value binary"
 
 
 def read_elements_raw(documents: DataFrame, media: DataFrame,
-                      *, broadcast_media: bool = False,
-                      decode_partitions: int | None = None) -> DataFrame:
+                      *, decode_partitions: int | None = None) -> DataFrame:
     """Raw-access projection scan (SURVEY.md §2.3 P8/P12): per element,
     the still-delta-coded way refs (Way::raw_refs,
     src/elements.rs:219-221) and the unresolved string-table (key, val)
@@ -292,15 +292,12 @@ def read_elements_raw(documents: DataFrame, media: DataFrame,
     coordinates, Info, and all cumsum work (the node-points pattern)."""
     from ..pbf.decode import decode_raw_access_batch
 
-    joined = _osmdata_payloads(documents, media,
-                               broadcast_media=broadcast_media,
-                               decode_partitions=decode_partitions)
-    return joined.mapInArrow(_batch_decoder(decode_raw_access_batch),
-                             RAW_ACCESS_DDL)
+    return decode_scan(blob_payloads(documents, media),
+                       decode_raw_access_batch, RAW_ACCESS_DDL,
+                       decode_partitions=decode_partitions)
 
 
-def read_stringtables(documents: DataFrame, media: DataFrame,
-                      *, broadcast_media: bool = False) -> DataFrame:
+def read_stringtables(documents: DataFrame, media: DataFrame) -> DataFrame:
     """Per-block dictionary scan (SURVEY.md §2.3 P16, raw_stringtable
     src/block.rs:148-151): one row per string-table entry, as raw BYTES
     (entries are not guaranteed UTF-8 — the decoded-tag path silently
@@ -309,35 +306,34 @@ def read_stringtables(documents: DataFrame, media: DataFrame,
     (doc_id, blob_no, sidx)."""
     from ..pbf.decode import decode_stringtable_batch
 
-    joined = _osmdata_payloads(documents, media,
-                               broadcast_media=broadcast_media,
-                               decode_partitions=None)
-    return joined.mapInArrow(_batch_decoder(decode_stringtable_batch),
-                             STRINGTABLE_DDL)
+    return decode_scan(blob_payloads(documents, media),
+                       decode_stringtable_batch, STRINGTABLE_DDL)
 
 
-HEADER_DDL = ("doc_id string, blob_no long, bbox_left double, "
-              "bbox_right double, bbox_top double, bbox_bottom double, "
-              "required_features array<string>, "
-              "optional_features array<string>, writingprogram string, "
-              "source string, osmosis_replication_timestamp long, "
-              "osmosis_replication_sequence_number long, "
-              "osmosis_replication_base_url string")
+HEADER_SCHEMA = pa.schema(
+    [("doc_id", pa.string()), ("blob_no", pa.int64())]
+    + [(f"bbox_{s}", pa.float64())
+       for s in ("left", "right", "top", "bottom")]
+    + [("required_features", pa.list_(pa.string())),
+       ("optional_features", pa.list_(pa.string())),
+       ("writingprogram", pa.string()), ("source", pa.string()),
+       ("osmosis_replication_timestamp", pa.int64()),
+       ("osmosis_replication_sequence_number", pa.int64()),
+       ("osmosis_replication_base_url", pa.string())])
+
+HEADER_DDL = ", ".join(f"{f.name} {from_arrow_type(f.type).simpleString()}"
+                       for f in HEADER_SCHEMA)
 
 
 def decode_header_batch(rows):
     """(doc_id, blob_no, payload) of OSMHeader blobs → one HEADER_DDL row
-    each."""
-    import pyarrow as pa
-
+    each, typed by HEADER_SCHEMA (a header's missing bbox or
+    writingprogram is a typed NULL, so every blob's batch has the one
+    schema)."""
     from ..pbf.decode import decompress_blob, parse_header_block
 
-    fields = ("required_features", "optional_features", "writingprogram",
-              "source", "osmosis_replication_timestamp",
-              "osmosis_replication_sequence_number",
-              "osmosis_replication_base_url")
-    cols = {k: [] for k in ("doc_id", "blob_no", "bbox_left", "bbox_right",
-                            "bbox_top", "bbox_bottom") + fields}
+    fields = HEADER_SCHEMA.names[6:]
+    cols = {k: [] for k in HEADER_SCHEMA.names}
     for d, b, p in rows:
         h = parse_header_block(decompress_blob(bytes(p)))
         bb = h["bbox"] or {}
@@ -345,31 +341,27 @@ def decode_header_batch(rows):
                 d, b, bb.get("left"), bb.get("right"), bb.get("top"),
                 bb.get("bottom"), *(h[k] for k in fields))):
             col.append(v)
-    return pa.RecordBatch.from_pydict(cols)
+    return pa.RecordBatch.from_pydict(cols, schema=HEADER_SCHEMA)
 
 
 HEADER_KEYS = ("doc_id", "blob_no")
 
 
-def read_header(documents: DataFrame, media: DataFrame,
-                *, broadcast_media: bool = True) -> DataFrame:
+def read_header(documents: DataFrame, media: DataFrame) -> DataFrame:
     """OSMHeader blobs → one metadata row per header (HeaderBlock
-    accessors, /root/reference/src/block.rs:21-86, incl. the osmosis
-    replication checkpoint fields). Tiny result — the engine's ``header``
-    table."""
-    meta = blob_metadata(documents).filter(F.col("blob_type") == "OSMHeader")
-    joined = join_payloads(meta, media, broadcast_media=broadcast_media,
-                           columns=HEADER_KEYS + ("payload",))
-    return joined.mapInArrow(
-        _batch_decoder(decode_header_batch, keys=HEADER_KEYS), HEADER_DDL)
+    accessors, src/block.rs:21-86, incl. the osmosis replication
+    checkpoint fields). Tiny result — the engine's ``header`` table. The
+    same payload join as the element scans: only the metadata side is
+    broadcast, so no payload leaves its media scan."""
+    return decode_scan(blob_payloads(documents, media, "OSMHeader"),
+                       decode_header_batch, HEADER_DDL, keys=HEADER_KEYS)
 
 
 ERRORS_DDL = ("doc_id string, blob_no long, error string")
 
 
 def read_elements_quarantine(documents: DataFrame, media: DataFrame,
-                             *, broadcast_media: bool = False,
-                             decode_partitions: int | None = None
+                             *, decode_partitions: int | None = None
                              ) -> tuple[DataFrame, DataFrame]:
     """Like :func:`read_elements` but corrupt blobs are quarantined to an
     errors DataFrame (with lineage) instead of failing the job — the
@@ -388,13 +380,8 @@ def read_elements_quarantine(documents: DataFrame, media: DataFrame,
     shared scan — persist the parent (or write the union once) when
     consuming both.
     """
-    import pyarrow as pa
-
     from ..pbf.decode import ELEMENT_SCHEMA, decode_blob_batch
 
-    joined = _osmdata_payloads(documents, media,
-                               broadcast_media=broadcast_media,
-                               decode_partitions=decode_partitions)
     names = [f.name for f in ELEMENT_SCHEMA] + ["error"]
 
     def guarded(rows):
@@ -414,8 +401,9 @@ def read_elements_quarantine(documents: DataFrame, media: DataFrame,
             out.columns + [pa.nulls(out.num_rows, pa.string())],
             names=names)
 
-    union = joined.mapInArrow(_batch_decoder(guarded),
-                              ELEMENTS_DDL + ", error string")
+    union = decode_scan(blob_payloads(documents, media), guarded,
+                        ELEMENTS_DDL + ", error string",
+                        decode_partitions=decode_partitions)
     elements = with_coordinate_columns(
         union.filter(F.col("error").isNull()).drop("error"))
     errors = (union.filter(F.col("error").isNotNull())
@@ -424,8 +412,7 @@ def read_elements_quarantine(documents: DataFrame, media: DataFrame,
 
 
 def read_elements(documents: DataFrame, media: DataFrame,
-                  *, broadcast_media: bool = False,
-                  decode_partitions: int | None = None) -> DataFrame:
+                  *, decode_partitions: int | None = None) -> DataFrame:
     """The engine's top-level scan (SURVEY.md §2.1 S6): documents+media →
     canonical ``elements`` DataFrame.
 
@@ -437,33 +424,13 @@ def read_elements(documents: DataFrame, media: DataFrame,
     coordinates as Catalyst expressions (doubles derived, never
     authoritative).
 
-    The default join broadcasts the metadata side: the fat payload
-    column never crosses a shuffle (see :func:`join_payloads`); a plan
-    audit pins this in tests/test_store_plans.py.
+    The join broadcasts the metadata side: the fat payload column never
+    crosses a shuffle (see :func:`join_payloads`); a plan audit pins
+    this in tests/test_store_plans.py.
     """
-    joined = _osmdata_payloads(documents, media,
-                               broadcast_media=broadcast_media,
-                               decode_partitions=decode_partitions)
-    elements = joined.mapInArrow(_decode_batches, ELEMENTS_DDL)
-    return with_coordinate_columns(elements)
-
-
-def read_blob_ranges(blobs: DataFrame, path: str, decode_fn, ddl: str, *,
-                     blob_type: str = "OSMData", keys=BLOB_KEYS,
-                     decode_partitions: int | None = None) -> DataFrame:
-    """File-backed decode scan: ``blobs`` is a raw PBF file's blob-range
-    table (``ingest.BLOBS_DDL``); each task maps the file at ``path`` once
-    and feeds ``decode_fn`` the bodies of its ``blob_type`` rows one blob
-    at a time, yielding one output batch per blob (see
-    :func:`_batch_decoder`), so a worker holds one blob's bytes and
-    elements at once. The plan is one Python node over the range table:
-    no payload column, no join, no exchange. Same kernels, output and
-    fail-fast errors as the documents-table scans;
-    ``decode_partitions`` hash-spreads the (narrow) range rows."""
-    rows = blobs.filter(F.col("blob_type") == blob_type)
-    if decode_partitions:
-        rows = rows.repartition(decode_partitions, "blob_no")
-    return rows.mapInArrow(_batch_decoder(decode_fn, path, keys), ddl)
+    return with_coordinate_columns(decode_scan(
+        blob_payloads(documents, media), decode_blob_batch, ELEMENTS_DDL,
+        decode_partitions=decode_partitions))
 
 
 def with_coordinate_columns(elements: DataFrame) -> DataFrame:

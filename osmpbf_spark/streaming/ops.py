@@ -18,19 +18,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.documents import ELEMENTS_DDL, _decode_batches, blob_metadata
+from ..sources.documents import read_elements
 
 
 def stream_elements(doc_stream: DataFrame, media: DataFrame) -> DataFrame:
     """Incremental decode: a stream of documents joined to (static) media
-    payloads, decoded with the same vectorized mapInArrow as the batch
-    path. Stream-static joins keep this fully incremental."""
-    meta = blob_metadata(doc_stream).filter(F.col("blob_type") == "OSMData")
-    joined = meta.join(media, "media_ref").select(
-        "doc_id", "blob_no", "blob_type", "payload")
-    from ..sources.documents import with_coordinate_columns
-    return with_coordinate_columns(
-        joined.mapInArrow(_decode_batches, ELEMENTS_DDL))
+    payloads — the batch scan :func:`read_elements` itself, over a
+    stream. Stream-static joins keep this fully incremental."""
+    return read_elements(doc_stream, media)
 
 
 def windowed_event_counts(events: DataFrame, *, window: str = "1 hour",

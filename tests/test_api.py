@@ -10,16 +10,15 @@ def test_engine_facade(spark):
     counts = {r["element_type"]: r["cnt"]
               for r in eng.count_by_type().collect()}
     assert counts == {"node": 3, "way": 1, "relation": 1}
-    assert eng.nodes(broadcast_media=True).count() == 3
+    assert eng.nodes().count() == 3
     hdr = eng.header().collect()[0]
     assert "OsmSchema-V0.6" in hdr["required_features"]
     meta = eng.blob_metadata().collect()
     assert [m["blob_type"] for m in sorted(meta, key=lambda m: m["blob_no"])] \
         == ["OSMHeader", "OSMData"]
-    ways_f, deps = eng.ways_and_deps(tag_eq("building", "yes"),
-                                     broadcast_media=True)
+    ways_f, deps = eng.ways_and_deps(tag_eq("building", "yes"))
     assert ways_f.count() == 1 and deps.count() == 3
-    idx = eng.indexed_nodes(broadcast_media=True)
+    idx = eng.indexed_nodes()
     assert idx.filter("cell IS NOT NULL").count() == 3
     # geometry layer: way 107 = 4-ref closed triangle, ~1031.66 m
     ws = eng.way_stats().collect()
@@ -37,12 +36,11 @@ def test_res_zero_not_coerced(spark):
     `res or GRID_RES_FINE` silently ran res=12/13 instead)."""
     eng = Engine.from_pbf_bytes(spark, "t0",
                                 fixture_file_bytes("zlib_dense"))
-    idx0 = eng.indexed_nodes(res=0, broadcast_media=True)
+    idx0 = eng.indexed_nodes(res=0)
     # at res 0 the cell id is res*RES_SHIFT + x*Y_SHIFT + y == 0 for
     # every point; at the coerced default it never is
     assert idx0.filter("cell = 0").count() == 3
-    assert eng.indexed_nodes(broadcast_media=True) \
-        .filter("cell = 0").count() == 0
+    assert eng.indexed_nodes().filter("cell = 0").count() == 0
     # the other two facade sites accept res=0 without coercion too
     # (empty fixture geometry → empty results, but the path must run)
     assert eng.pip_multipolygon(res=0).count() == 0

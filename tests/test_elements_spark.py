@@ -29,7 +29,7 @@ def _load(spark, variant):
 @pytest.fixture(scope="module")
 def golden_elements(spark):
     docs, media = _load(spark, "zlib_dense")
-    df = read_elements(docs, media, broadcast_media=True)
+    df = read_elements(docs, media)
     df.cache()
     yield df
     df.unpersist()
@@ -74,7 +74,7 @@ def test_tag_predicate(golden_elements):
 def test_variant_invariance_spark(spark):
     def canon(variant):
         docs, media = _load(spark, variant)
-        df = read_elements(docs, media, broadcast_media=True)
+        df = read_elements(docs, media)
         return sorted(
             (r["element_type"], r["id"], r["lat_nano"], r["lon_nano"],
              tuple(sorted(r["tags"].items())), tuple(r["refs"]),
@@ -86,7 +86,7 @@ def test_variant_invariance_spark(spark):
 
 def test_history_filter(spark):
     docs, media = _load(spark, "history")
-    df = read_elements(docs, media, broadcast_media=True)
+    df = read_elements(docs, media)
     assert df.count() == 2
     # snapshot semantics: filter(visible) drops the deleted node
     # (P15, src/elements.rs:614-626)
@@ -96,7 +96,7 @@ def test_history_filter(spark):
 
 def test_locations_on_ways_spark(spark):
     docs, media = _load(spark, "loc_on_ways")
-    df = read_elements(docs, media, broadcast_media=True)
+    df = read_elements(docs, media)
     way = df.filter("element_type = 'way'").collect()[0]
     locs = [(l["lat_nano"], l["lon_nano"]) for l in way["ref_locations"]]
     assert locs[0] == (52122403100, 11628401700)
@@ -113,7 +113,7 @@ def test_negative_coord_decimicro(spark):
     block = encode_primitive_block([[node]], dense=True, with_info=False)
     rows = fileblocks_to_rows("neg", [("OSMData", encode_blob(block))])
     docs, media = make_documents(spark, *rows)
-    r = read_elements(docs, media, broadcast_media=True).collect()[0]
+    r = read_elements(docs, media).collect()[0]
     assert r["lat_nano"] == -52119923500
     assert r["decimicro_lat"] == -521199235   # trunc toward zero, not floor
     assert r["decimicro_lon"] == -116256446
@@ -134,10 +134,10 @@ def test_node_points_pushdown_parity(spark):
     from osmpbf_spark.sources.documents import read_node_points
     from osmpbf_spark.sources.synth import synth_documents
     docs, media, _ = synth_documents(spark, 3000, block_elements=500)
-    full = read_elements(docs, media, broadcast_media=True) \
+    full = read_elements(docs, media) \
         .filter("element_type = 'node'") \
         .select("id", "lat_nano", "lon_nano", "blob_no", "doc_id")
-    mini = read_node_points(docs, media, broadcast_media=True)
+    mini = read_node_points(docs, media)
     assert full.exceptAll(mini).count() == 0
     assert mini.exceptAll(full).count() == 0
 

@@ -367,6 +367,80 @@ def test_file_scan_corrupt_blob_fails_fast(spark, tmp_path):
         eng.elements().count()
 
 
+@pytest.mark.parametrize("driver_index", [True, False])
+def test_file_documents_equal_json_rows(spark, tmp_path, driver_index):
+    # the file engine's documents (Catalyst expressions over the frame
+    # index) equal the json.dumps-built rows of fileblocks_to_rows for the
+    # same bytes: span text, media_ref and offsets alike, also for a blob
+    # type holding JSON-special characters
+    from osmpbf_spark.sources.documents import (
+        make_documents,
+        pbf_bytes_to_rows,
+    )
+
+    def spans(docs):
+        return sorted((r["doc_id"], [tuple(sp) for sp in r["spans"]])
+                      for r in docs.collect())
+
+    odd = tmp_path / "odd-type.osm.pbf"
+    odd.write_bytes(fixture_file_bytes("zlib_dense")
+                    + frame_fileblock('Odd"Type\\', b"\x00" * 9))
+    for path, chunk in _fixture_files(tmp_path) + [(str(odd), 64)]:
+        eng = Engine.from_pbf_path(spark, path, chunk_bytes=chunk,
+                                   driver_index=driver_index)
+        with open(path, "rb") as f:
+            data = f.read()
+        docs, _ = make_documents(
+            spark, *pbf_bytes_to_rows(os.path.basename(path), data))
+        want = spans(docs)
+        assert len(want) == len(list(split_fileblocks(data))), path
+        assert spans(eng.documents) == want, path
+
+
+def test_header_blobs_of_differing_shape(spark, tmp_path):
+    # two OSMHeader blobs, one without a bbox: each blob's output batch
+    # has the one header schema (a missing bbox is a typed NULL, never a
+    # null-typed column), so a task decoding both writes both rows
+    import pyarrow as pa
+
+    from osmpbf_spark.pbf.encode import encode_header_block
+    from osmpbf_spark.sources.documents import (
+        HEADER_KEYS,
+        _batch_decoder,
+        decode_header_batch,
+    )
+    blobs = [encode_blob(encode_header_block(bbox_nano=(1, 2, 3, 4))),
+             encode_blob(encode_header_block())]
+    batch = pa.RecordBatch.from_pydict(
+        {"doc_id": ["h#0", "h#1"], "blob_no": [0, 1], "payload": blobs})
+    outs = list(_batch_decoder(decode_header_batch, keys=HEADER_KEYS)(
+        iter([batch])))
+    assert outs[0].schema == outs[1].schema
+    assert outs[1].schema.field("bbox_left").type == pa.float64()
+    data = b"".join(frame_fileblock("OSMHeader", b) for b in blobs)
+    p = tmp_path / "headers.osm.pbf"
+    p.write_bytes(data)
+    for eng in (Engine.from_pbf_path(spark, str(p)),
+                Engine.from_pbf_bytes(spark, "headers", data)):
+        rows = sorted(eng.header().collect(), key=lambda r: r["blob_no"])
+        assert [r["bbox_left"] is None for r in rows] == [False, True]
+
+
+def test_decode_plan_runs_no_job(spark, tmp_path):
+    # building a spread decode plan over a file engine's tables runs no
+    # Spark job: the decode_partitions check reads the planned
+    # partitioning of the blob rows instead of executing the media
+    # table's exchange
+    from osmpbf_spark.sources.documents import read_elements
+    path, _ = _make_file(tmp_path, copies=3, big_block_nodes=2000)
+    eng = Engine.from_pbf_path(spark, path)
+    df, jobs = _jobs_run(spark, lambda: read_elements(
+        eng.documents, eng.media, decode_partitions=3))
+    assert jobs == 0
+    assert df.rdd.getNumPartitions() == 3
+    assert df.count() == eng.elements().count() > 0
+
+
 _PYTHON_NODE = re.compile(r"MapIn\w+|\w*EvalPython\w*|FlatMap\w*InPandas\w*")
 
 

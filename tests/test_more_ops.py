@@ -55,7 +55,7 @@ def test_lsh_cosine_recall(spark):
 def test_salted_pip_equivalence(spark):
     # megacity skew: salted and unsalted PIP joins return identical rows
     docs, media, _ = synth_documents(spark, 30000, block_elements=4000)
-    el = read_elements(docs, media, broadcast_media=True)
+    el = read_elements(docs, media)
     nodes = with_grid_cells(el.filter("element_type = 'node'"),
                             res=GRID_RES_FINE).cache()
     B = 1_000_000_000
@@ -76,7 +76,7 @@ def test_salted_pip_equivalence(spark):
 
 def test_resolve_way_geometries_and_tag_frequency(spark):
     docs, media, expected = synth_documents(spark, 5000, block_elements=1000)
-    el = read_elements(docs, media, broadcast_media=True).cache()
+    el = read_elements(docs, media).cache()
     geo = resolve_way_geometries(el, broadcast_nodes=True)
     # every way ref resolves to a node coordinate (synth refs are valid)
     assert geo.filter(F.col("lat_nano").isNull()).count() == 0

@@ -190,9 +190,9 @@ def test_spark_raw_readers(spark):
     doc_rows, media_rows = fileblocks_to_rows(
         "zlib_dense", fixture_fileblocks("zlib_dense"))
     docs, media = make_documents(spark, doc_rows, media_rows)
-    raw = read_elements_raw(docs, media, broadcast_media=True)
-    sts = read_stringtables(docs, media, broadcast_media=True)
-    full = read_elements(docs, media, broadcast_media=True)
+    raw = read_elements_raw(docs, media)
+    sts = read_stringtables(docs, media)
+    full = read_elements(docs, media)
 
     # Full join keys: the per-block dictionary is (doc_id, blob_no,
     # sidx) — keying on sidx alone would silently resolve through the

@@ -24,7 +24,7 @@ def _elements_of(spark, name, nodes, visible=None):
           for k, (i, la, lo, v) in enumerate(nodes)]], dense=True)
     rows = fileblocks_to_rows(name, [("OSMData", encode_blob(block))])
     docs, media = make_documents(spark, *rows)
-    return read_elements(docs, media, broadcast_media=True)
+    return read_elements(docs, media)
 
 
 def test_apply_updates_last_writer_wins(spark):
@@ -64,7 +64,7 @@ def test_replication_state_empty_for_fixtures(spark):
 def test_resolve_relation_members(spark):
     docs, media = make_documents(
         spark, *fileblocks_to_rows("r", fixture_fileblocks("zlib_dense")))
-    el = read_elements(docs, media, broadcast_media=True)
+    el = read_elements(docs, media)
     rm = resolve_relation_members(el).collect()
     assert len(rm) == 1
     m = rm[0]

@@ -3,10 +3,10 @@ operators, with the scale-relevant properties called out. Run after any
 operator change: python tools/dump_plans.py
 
 ``python tools/dump_plans.py --pin NAME`` re-prints one pinned default
-scan of ``plans/default_scans/NAME.txt`` (pbf_pip, read_elements,
-read_elements_broadcast_media) in this fresh local[2] session: its
-id-normalized and full sha256 and its node tree. It exits 1 when the
-id-normalized sha256 differs from the one the pin records.
+scan of ``plans/default_scans/NAME.txt`` (pbf_pip, read_elements) in
+this fresh local[2] session: its id-normalized and full sha256 and its
+node tree. It exits 1 when the id-normalized sha256 differs from the one
+the pin records.
 ``--pin`` with no name, or with several, re-checks each named pin (every
 pin in ``plans/default_scans/`` when none is named) in its own fresh
 process and exits 1 if any of them differs."""
@@ -403,7 +403,7 @@ def pin_plan(name: str) -> str:
     """Formatted executed plan of one default scan over the synth 20k-node
     .osm.pbf (seed 1): ``pbf_pip`` is the third file-backed nodes →
     ``with_grid_cells(res=16)`` → ``pip_join`` (bench.py's boxes) →
-    count pass, so the cover memo is warm; ``read_elements*`` collect
+    count pass, so the cover memo is warm; ``read_elements`` collects
     ``read_elements`` over the file engine's (documents, media)."""
     import tempfile
 
@@ -440,8 +440,7 @@ def pin_plan(name: str) -> str:
                 df.collect()
         else:
             eng = Engine.from_pbf_path(spark, path)
-            df = read_elements(eng.documents, eng.media,
-                               broadcast_media=name.endswith("_media"))
+            df = read_elements(eng.documents, eng.media)
             df.collect()
         text = explain_formatted(df)
     spark.stop()
